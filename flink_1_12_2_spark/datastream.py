@@ -17,6 +17,9 @@ from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from flink_1_12_2_spark.streaming.keyed_state import keyed_state_apply
 
 
 class Tumble:
@@ -279,20 +282,14 @@ class KeyedStream:
         return DataStream(out)
 
     def process(
-        self, fn: Callable, output_schema: str, state_schema, output_mode="update"
+        self, fold: Callable, output_schema: StructType, output_mode="update"
     ) -> DataStream:
-        """Keyed process function with state (KeyedProcessOperator parity) —
-        lowers to applyInPandasWithState."""
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
+        """Keyed process function with state (KeyedProcessOperator parity):
+        ``fold(key, rows, state, watermark_us) -> (out, new_state,
+        newest_event_us)`` runs once per key and micro-batch over JSON value
+        state (see :mod:`flink_1_12_2_spark.streaming.keyed_state`)."""
         return DataStream(
-            self.df.groupBy(*self.keys).applyInPandasWithState(
-                fn,
-                outputStructType=output_schema,
-                stateStructType=state_schema,
-                outputMode=output_mode,
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+            keyed_state_apply(self.df, self.keys, fold, output_schema, output_mode)
         )
 
 

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 
 from flink_1_12_2_spark.llm.hashing import md5int60, seeded_hash
 from flink_1_12_2_spark.llm.text import tokens
-from flink_1_12_2_spark.cache_registry import track as _track_cache
+
 
 def fan_out(df: DataFrame) -> DataFrame:
     """Ensure CPU-heavy per-row stages use all cores.
@@ -187,7 +187,7 @@ def shingle_sets(
     """
     out = fan_out(df).select(
         F.col(id_col), word_shingles(F.col(text_col), n).alias("sh_arr")
-    ).persist().transform(_track_cache)
+    ).persist()
     # Eager fill (multi-split sources only): the frame feeds several
     # INDEPENDENT map stages (signature agg, both verify sides); left
     # lazy, those stages race to fill the same cold cache and each
@@ -265,7 +265,7 @@ def lsh_candidate_pairs(
         ),
         ["band", "bh"],
         band_df_cap,
-    ).persist().transform(_track_cache)
+    ).persist()
     if eager:  # corpus-derived flag: sigs is post-shuffle, no volume signal
         banded.count()  # both self-join map stages read this cache
     a = banded.alias("a")
@@ -380,7 +380,7 @@ def ngram_jaccard_pairs(
     docs = fan_out(df).select(
         F.col(id_col).alias("__id"),
         F.transform(word_shingles(F.col(text_col), n), md5int60).alias("sh_arr"),
-    ).persist().transform(_track_cache)
+    ).persist()
     # persist the WINDOWED posting list (one explode + one df-window pass).
     # r13 profile: persisting only the capped filtrate left `sh` itself
     # unpersisted, and its explode + exchange + window subtree re-ran in
@@ -395,7 +395,7 @@ def ngram_jaccard_pairs(
             "__id", F.size("sh_arr").alias("n_sh"), F.explode("sh_arr").alias("sh")
         )
         .withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("sh")))
-        .persist().transform(_track_cache)
+        .persist()
     )
     _maybe_eager(sh, df)  # every downstream consumer reads this cache
     cold = sh.filter(F.col("__df") <= shingle_df_cap).drop("__df")
@@ -444,7 +444,7 @@ def ngram_jaccard_pairs(
     # persisted so the two broadcast branches below don't each re-run the
     # distinct over the posting cache
     hot_ids = (
-        sh.filter(F.col("__df") > shingle_df_cap).select("__id").distinct().persist().transform(_track_cache)
+        sh.filter(F.col("__df") > shingle_df_cap).select("__id").distinct().persist()
     )
     counted = (
         counted_raw
@@ -461,7 +461,7 @@ def ngram_jaccard_pairs(
         # persisted: both output branches (exact / hot-verify) consume this
         # candidate-pair frame — without the boundary the self-join + count
         # aggregation would execute once per branch
-        .persist().transform(_track_cache)
+        .persist()
     )
     _maybe_eager(counted, df)  # the two branches otherwise race the cold fill
     exact_part = counted.filter(F.col("__h1").isNull() & F.col("__h2").isNull()).select(
@@ -554,7 +554,7 @@ def simhash_pairs(
     # not once per self-join side (tiny cache: id + one bigint per doc)
     with_sh = fan_out(df).select(
         F.col(id_col).alias("__id"), simhash32(F.col(text_col)).alias("simhash")
-    ).persist().transform(_track_cache)
+    ).persist()
     bands = F.array(
         *[
             F.struct(
@@ -577,7 +577,7 @@ def simhash_pairs(
             "__id", "simhash", F.col("b.band").alias("band"), F.col("b.bv").alias("bv")
         )
         .withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("band", "bv")))
-        .persist().transform(_track_cache)
+        .persist()
     )
     _maybe_eager(banded, df)  # cold/hot branches + their self-join sides race otherwise
     cold = banded.filter(F.col("__df") <= band_df_cap).drop("__df")
@@ -737,7 +737,7 @@ def cosine_pairs(
     banded = (
         n.select(F.col(id_col).alias("__id"), F.col("vec_n"), F.explode(bands).alias("b"))
         .select("__id", "vec_n", F.col("b.band").alias("band"), F.col("b.bv").alias("bv"))
-        .persist().transform(_track_cache)
+        .persist()
     )
     _maybe_eager(banded, df)  # both self-join map stages read this cache
     a = banded.select("__id", "band", "bv", F.col("vec_n").alias("v1"))
@@ -834,14 +834,13 @@ def exact_substring_pairs(
         .drop("__dr", "__nd")
         # persisted: both self-join sides consume the capped posting list
         .persist()
-        .transform(_track_cache)
     )
     _maybe_eager(w2, df)  # both self-join sides read this cache
     a = w2.select("wh", F.col("__id").alias("id_1"), F.col("pos").alias("pa"))
     b = w2.select("wh", F.col("__id").alias("id_2"), F.col("pos").alias("pb"))
     # persisted: the pair stream feeds BOTH the run-extension windows and
     # the shared-window count
-    pr = a.join(b, "wh").filter(F.col("id_1") < F.col("id_2")).persist().transform(_track_cache)
+    pr = a.join(b, "wh").filter(F.col("id_1") < F.col("id_2")).persist()
     _maybe_eager(pr, df)  # run-extension and shared-window consumers race otherwise
     cells = pr.select(
         "id_1", "id_2", (F.col("pa") - F.col("pb")).alias("diag"), "pa"
@@ -876,7 +875,7 @@ def exact_substring_pairs(
                 "match_tokens"
             ),
         )
-        .persist().transform(_track_cache)
+        .persist()
     )
     out.count()  # materialize the pair-grain result off the cached inputs
     w2.unpersist()
@@ -923,7 +922,7 @@ def semantic_dedup(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    cc = cells.persist().transform(_track_cache)
+    cc = cells.persist()
     _maybe_eager(cc, df)  # pair sides + the final join-back read this cache
     a = cc.select(
         F.col("cell"), F.col(id_col).alias("id_1"), F.col("vec_n").alias("v1")

@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from flink_1_12_2_spark.llm import dedup as D
 from flink_1_12_2_spark.llm.hashing import md5int60_sql, seeded_hash_sql
 from flink_1_12_2_spark.registry import load, query
-from flink_1_12_2_spark.cache_registry import track as _track_cache
 
 JACCARD_T = 0.5
 COSINE_T = 0.35
@@ -79,7 +78,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the final pair aggregation segment (r13 A/B: 2.56 -> 1.48 s)
     return pairs.select(
         "id_1", "id_2", F.round("jaccard", 6).alias("jaccard")
-    ).persist().transform(_track_cache).orderBy("id_1", "id_2")
+    ).persist().orderBy("id_1", "id_2")
 
 
 def _minhash_oracle() -> str:
@@ -125,7 +124,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets_ = D.shingle_sets(d, "doc_id", "text")
     # sigs persisted too: the LSH banding self-join otherwise recomputes the
     # signature aggregation for its broadcast/build side (tiny: K ints/doc)
-    sigs = D.minhash_signatures_from_sets(sets_, "doc_id").persist().transform(_track_cache)
+    sigs = D.minhash_signatures_from_sets(sets_, "doc_id").persist()
     cand = D.lsh_candidate_pairs(sigs, "doc_id", eager=D.is_multisplit(d))
     ver = D.jaccard_verify(cand, d, "doc_id", "text", sets_df=sets_)
     return (
@@ -133,7 +132,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_1", "id_2", F.round("jaccard", 6).alias("jaccard"))
         # persist below the global sort: the range sampler otherwise
         # re-runs the candidate+verify segment (r13 A/B: 2.23 -> 1.82 s)
-        .persist().transform(_track_cache)
+        .persist()
         .orderBy("id_1", "id_2")
     )
 
@@ -292,7 +291,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster boundaries are verified, not just pairs."""
     d = load(spark, sf_dir, "documents")
     sets_ = D.shingle_sets(d, "doc_id", "text")
-    sigs = D.minhash_signatures_from_sets(sets_, "doc_id").persist().transform(_track_cache)
+    sigs = D.minhash_signatures_from_sets(sets_, "doc_id").persist()
     cand = D.lsh_candidate_pairs(sigs, "doc_id", eager=D.is_multisplit(d))
     pairs = D.jaccard_verify(cand, d, "doc_id", "text", sets_df=sets_).filter(
         F.col("jaccard") >= JACCARD_T

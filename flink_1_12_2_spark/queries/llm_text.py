@@ -15,7 +15,6 @@ from flink_1_12_2_spark.llm import text as T
 from flink_1_12_2_spark.llm.dedup import fan_out
 from flink_1_12_2_spark.llm.hashing import FINGERPRINT_MOD
 from flink_1_12_2_spark.registry import load, query
-from flink_1_12_2_spark.cache_registry import track as _track_cache
 
 # ---- shared DuckDB fragments (kept in lockstep with llm/text.py) -----------
 
@@ -1376,4 +1375,4 @@ def text_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # otherwise re-executes the whole narrow dedup segment (r13 interleaved
     # A/B: 1.19 -> 0.98 s; the sampler fills this small per-doc cache and
     # the shuffle pass reads it)
-    return T.cross_doc_chunk_dedup(d, chunk_words=4).persist().transform(_track_cache).orderBy("doc_id")
+    return T.cross_doc_chunk_dedup(d, chunk_words=4).persist().orderBy("doc_id")

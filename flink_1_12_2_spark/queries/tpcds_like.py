@@ -36,7 +36,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from flink_1_12_2_spark.registry import EVENTS_US_CTE, load, query
-from flink_1_12_2_spark.cache_registry import track as _track_cache
 
 def _rev():
     return F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -532,7 +531,7 @@ def ds_q74_yoy_channel_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     year_total = channel(F.col("l_linenumber") <= 3, "s").unionByName(
         channel(F.col("l_linenumber") > 3, "w")
-    ).persist().transform(_track_cache)
+    ).persist()
 
     def slice_(ch, yr, prefix):
         return year_total.filter(
@@ -655,7 +654,7 @@ def ds_q23_frequent_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.join(li, li.l_orderkey == o.o_orderkey)
         .groupBy("o_custkey")
         .agg(F.sum(rev).alias("total"))
-        .persist().transform(_track_cache)  # consumed twice: max scalar + threshold filter
+        .persist()  # consumed twice: max scalar + threshold filter
     )
     max_total = cust_total.agg(F.max("total").alias("__max"))
     best = (

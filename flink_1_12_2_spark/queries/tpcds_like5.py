@@ -32,7 +32,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from flink_1_12_2_spark.registry import EVENTS_US_CTE, load, query
-from flink_1_12_2_spark.cache_registry import track as _track_cache
 
 _CENTS = "CAST(ROUND(l_extendedprice * 100) AS BIGINT)"
 
@@ -507,7 +506,7 @@ def ds_q24_shared_cte_scalar_threshold(spark: SparkSession, sf_dir: str) -> Data
         # deliberate: cached until the caller's collect; long-lived
         # sessions reclaim it via catalog.clearCache() between queries
         # (tools/oracle_check.py does) — same policy as tpcds_like.py q15
-        .persist().transform(_track_cache)
+        .persist()
     )
     scal = ssales.agg(
         F.sum("netpaid_cents").alias("tot"), F.count(F.lit(1)).alias("cnt")

@@ -63,7 +63,6 @@ import re
 from pyspark.sql import DataFrame
 
 from flink_1_12_2_spark.streaming.cep import Pattern, cep_match_batch
-from flink_1_12_2_spark.cache_registry import track as _track_cache
 
 _UNIT_US = {
     "SECOND": 1_000_000,
@@ -913,7 +912,7 @@ def match_recognize(df: DataFrame, sql: str) -> DataFrame:
         # localCheckpoint) computes the (small, match-count-sized) NFA
         # output once while keeping the subtree visible to EXPLAIN/plan
         # tests and reclaimable via spark.catalog.clearCache().
-        out = out.persist().transform(_track_cache)
+        out = out.persist()
         # ALWAYS eager-fill this cache: every per-variable aggregate join
         # scans it, and left lazy their map stages race the cold fill and
         # each re-runs the subtree (r10 finding). The r11 adaptive

@@ -5,8 +5,8 @@ Flink parity: flink-libraries/flink-cep Pattern API
 (Pattern.java — ``begin/followedBy/within``, entry CEP.java:38), the NFA
 runtime (NFA.java:86 — simultaneous ComputationState branches over a
 SharedBuffer), and the SQL MATCH_RECOGNIZE operator (StreamExecMatch.scala:68).
-Spark has no CEP primitive (SURVEY §2.10) → implemented as a keyed NFA inside
-``applyInPandasWithState``.
+Spark has no CEP primitive (SURVEY §2.10) → implemented as a keyed NFA
+folded over per-key state (:mod:`flink_1_12_2_spark.streaming.keyed_state`).
 
 **Branch exploration (multi-run NFA).** Like Flink's NFA, every row may start
 a new partial match, and every live partial match ("branch") evolves
@@ -87,8 +87,9 @@ from typing import Any, Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from flink_1_12_2_spark.streaming.keyed_state import keyed_state_apply
 
 Predicate = Callable[..., bool]
 
@@ -484,7 +485,6 @@ CEP_OUTPUT = StructType(
         StructField("last_ts_us", LongType()),
     ]
 )
-CEP_STATE = StructType([StructField("partial_json", StringType())])
 
 
 def _new_branch(row: dict, pat: int = 0) -> dict:
@@ -1149,8 +1149,9 @@ def _keyed_apply(events: DataFrame, key_col: str, fn, schema) -> DataFrame:
     so ``fn`` still receives every row of a key in one frame. Row order
     within the key is arbitrary — every NFA closure re-sorts by
     (ts_us, event_id) internally (``_rows_from_pdf``) exactly as it did
-    under grouped-map. NULL keys are not supported (the engine's CEP keys
-    are non-null by construction).
+    under grouped-map. A NULL key raises: boundary detection compares keys
+    with ``!=``, and NaN != NaN would split the NULL-key rows into one
+    group per row.
     """
     import numpy as np  # noqa: F811 (worker-side import)
 
@@ -1179,6 +1180,11 @@ def _keyed_apply(events: DataFrame, key_col: str, fn, schema) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
+            if pdf[key_col].isna().any():
+                raise ValueError(
+                    f"keyed CEP: NULL {key_col!r} key; filter NULL keys out "
+                    "before matching"
+                )
             ks = pdf[key_col].to_numpy()
             change = (np.flatnonzero(ks[1:] != ks[:-1]) + 1).tolist()
             bounds = [0, *change, len(ks)]
@@ -1292,37 +1298,28 @@ def cep_pattern_matches(
         events, pattern, key_col, key_gate=False, sentinel_exempt=True
     )
 
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        raw = (
-            json.loads(state.get[0]) if state.exists and state.get[0] else None
-        )
+    def fold(key, pdf, raw, watermark_us):
         if not isinstance(raw, dict) or "branches" not in raw:
             raw = None  # unknown/legacy state → fresh
         partial = {"branches": raw["branches"]} if raw else None
         rows: list[dict] = list(raw.get("pending", [])) if raw else []
-        for pdf in pdfs:
-            for r in pdf.itertuples(index=False):
-                d = r._asdict()
-                if d.get("event_id", 0) is not None and int(d["event_id"]) < 0:
-                    continue  # sentinel flush rows carry no data
-                if "ts_us" not in d:  # attached by stream_events normally
-                    d["ts_us"] = int(pd.Timestamp(d[time_col]).value // 1000)
-                d["ts_us"] = int(d["ts_us"])
-                rows.append(_json_safe(d))
+        for r in pdf.itertuples(index=False):
+            d = r._asdict()
+            if d.get("event_id", 0) is not None and int(d["event_id"]) < 0:
+                continue  # sentinel flush rows carry no data
+            if "ts_us" not in d:  # attached by stream_events normally
+                d["ts_us"] = int(pd.Timestamp(d[time_col]).value // 1000)
+            d["ts_us"] = int(d["ts_us"])
+            rows.append(_json_safe(d))
         hold: list[dict] = []
         if buffer_to_watermark:
-            wm_us = state.getCurrentWatermarkMs() * 1000
+            wm_us = watermark_us()
             hold = [r for r in rows if r["ts_us"] > wm_us]
             rows = [r for r in rows if r["ts_us"] <= wm_us]
         rows.sort(key=lambda d: (d["ts_us"], d["event_id"]))
         matches, new_state = _match_events(rows, pattern, partial)
         new_state["pending"] = hold
-        state.update((json.dumps(new_state),))
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 "user_id": [key[0]] * len(matches),
                 "first_event_id": [m[0] for m in matches],
@@ -1331,11 +1328,6 @@ def cep_pattern_matches(
                 "last_ts_us": [m[3] for m in matches],
             }
         )
+        return out, new_state, None
 
-    return events.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=CEP_OUTPUT,
-        stateStructType=CEP_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state_apply(events, [key_col], fold, CEP_OUTPUT, "append")

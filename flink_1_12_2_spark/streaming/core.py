@@ -31,7 +31,7 @@ def ltz_to_ntz_utc(col) -> F.Column:
 # (path, mtime_ns, size) -> StructType. Schema inference for the stream
 # scan is a driver-side batch read (listing + parquet footer) re-paid on
 # EVERY streaming-query build — ~0.1-0.2 s of each stateful bench row's
-# fixed cost (r14 ss_profile 'build' segment). The schema is plan
+# fixed cost (its query-build segment). The schema is plan
 # METADATA derived from the file identity, not query results, and the
 # mtime/size key invalidates it whenever the file changes.
 _SCHEMA_CACHE: dict[tuple, object] = {}

@@ -1,17 +1,24 @@
-"""Custom stateful streaming operators via ``applyInPandasWithState`` — the
-Flink operators Structured Streaming lacks as primitives.
+"""Custom stateful streaming operators — the Flink operators Structured
+Streaming lacks as primitives.
 
 Flink parity:
 - streaming Top-N       → AbstractTopNFunction.java:48 / AppendOnlyTopNFunction
   (keyed heap state, emit per change; here: keyed heap, emit per micro-batch)
 - keep-last dedup       → ProcTimeDeduplicateKeepLastRowFunction.java:29
 - keyed process fn      → KeyedProcessOperator.java:35 + ValueState/Timers →
-  GroupState (timeouts ≈ timers, TTL via GroupStateTimeout)
+  GroupState (timeouts ≈ timers; see ``datastream.KeyedStream.process``)
 
-Design: state is a compact pandas-serializable structure per key (never the
-full input); each micro-batch folds new rows into state and emits the current
-result — Flink's "emit on change" collapses to "emit per micro-batch", which
-is the documented latency model difference (SURVEY §2.4 MiniBatch note).
+Design: every operator is a pure fold run by
+:func:`~flink_1_12_2_spark.streaming.keyed_state.keyed_state_apply` once per
+key and micro-batch: ``fold(key, rows, state, watermark_us) -> (out,
+new_state, newest_event_us)``. State is a compact JSON value per key (never
+the full input); each micro-batch folds its rows into state and emits the
+current result — Flink's "emit on change" collapses to "emit per
+micro-batch", which is the documented latency model difference (SURVEY §2.4
+MiniBatch note). With ``state_ttl_seconds`` (``table.exec.state.ttl``) a
+key's TTL is refreshed on every write to ``newest_event_us + ttl``, clamped
+strictly past the watermark, and the key is evicted once the watermark
+passes it.
 """
 
 from __future__ import annotations
@@ -20,7 +27,6 @@ from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -28,6 +34,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from flink_1_12_2_spark.streaming.keyed_state import keyed_state_apply
 
 TOPN_OUTPUT = StructType(
     [
@@ -38,72 +46,34 @@ TOPN_OUTPUT = StructType(
         StructField("seq", LongType()),  # per-key update sequence (batch #)
     ]
 )
-TOPN_STATE = StructType(
-    [
-        StructField("event_ids", StringType()),  # csv heap snapshot
-        StructField("values", StringType()),
-        StructField("seq", LongType()),
-    ]
-)
 
 
-def _topn_fn(n: int, ttl_us: int | None = None):
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if ttl_us is not None and state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(
-                columns=["user_id", "event_id", "value", "rn", "seq"]
-            )
-            return
-        if state.exists:
-            (ids_csv, vals_csv, seq) = state.get
-            ids = [int(x) for x in ids_csv.split(",")] if ids_csv else []
-            vals = [float(x) for x in vals_csv.split(",")] if vals_csv else []
-        else:
-            ids, vals, seq = [], [], 0
-        last_ts: int | None = None
-        for pdf in pdfs:
-            ids.extend(int(x) for x in pdf["event_id"])
-            vals.extend(float(x) for x in pdf["value"])
-            if ttl_us is not None and "ts_us" in pdf.columns and len(pdf):
-                m = int(pdf["ts_us"].max())
-                last_ts = m if last_ts is None else max(last_ts, m)
-        # keep only the top-n in state (bounded state, Flink TopNBuffer parity)
-        order = sorted(
-            range(len(ids)), key=lambda i: (-vals[i], ids[i])
-        )[:n]
-        ids = [ids[i] for i in order]
-        vals = [vals[i] for i in order]
-        seq = int(seq) + 1
-        state.update(
-            (
-                ",".join(str(x) for x in ids),
-                ",".join(repr(x) for x in vals),
-                seq,
-            )
+def _newest_us(rows: pd.DataFrame) -> int | None:
+    """Newest event time of a key's micro-batch rows (µs), if they carry
+    one — the TTL refresh time."""
+    return int(rows["ts_us"].max()) if "ts_us" in rows.columns else None
+
+
+def _merge_top(state: Any, rows: pd.DataFrame, n: int) -> list[tuple]:
+    """The top-n (event_id, value) pairs of a key's state plus its new rows,
+    by value desc with event_id tie-break (bounded state, Flink TopNBuffer
+    parity)."""
+    cand = [tuple(t) for t in state["top"]] if state else []
+    cand += zip(map(int, rows["event_id"]), map(float, rows["value"]))
+    return sorted(cand, key=lambda t: (-t[1], t[0]))[:n]
+
+
+def _topn_fold(n: int):
+    def fold(key, rows, state, watermark_us):
+        top = _merge_top(state, rows, n)
+        seq = (state["seq"] if state else 0) + 1
+        out = pd.DataFrame(
+            [(key[0], e, v, rn, seq) for rn, (e, v) in enumerate(top, 1)],
+            columns=TOPN_OUTPUT.fieldNames(),
         )
-        if ttl_us is not None and last_ts is not None:
-            # refresh the TTL clock on every write (OnCreateAndWrite), keyed
-            # to the newest EVENT time seen — processing order independent
-            wm_ms = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(wm_ms + 1, (last_ts + ttl_us) // 1000)
-            )
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]] * len(ids),
-                "event_id": ids,
-                "value": vals,
-                "rn": list(range(1, len(ids) + 1)),
-                "seq": [seq] * len(ids),
-            }
-        )
+        return out, {"top": top, "seq": seq}, _newest_us(rows)
 
-    return fn
+    return fold
 
 
 TOPN_CHANGELOG_OUTPUT = StructType(
@@ -117,56 +87,30 @@ TOPN_CHANGELOG_OUTPUT = StructType(
 )
 
 
-def _topn_changelog_fn(n: int):
+def _topn_changelog_fold(n: int):
     """Top-N emitting a CHANGELOG: +I for entries entering the top-n, -D for
     entries leaving it (Flink RetractableTopNFunction.java:53 semantics,
     collapsed to per-micro-batch diffs)."""
 
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            (ids_csv, vals_csv, seq) = state.get
-            ids = [int(x) for x in ids_csv.split(",")] if ids_csv else []
-            vals = [float(x) for x in vals_csv.split(",")] if vals_csv else []
-        else:
-            ids, vals, seq = [], [], 0
-        prev = dict(zip(ids, vals))
-        for pdf in pdfs:
-            ids.extend(int(x) for x in pdf["event_id"])
-            vals.extend(float(x) for x in pdf["value"])
-        order = sorted(range(len(ids)), key=lambda i: (-vals[i], ids[i]))[:n]
-        ids = [ids[i] for i in order]
-        vals = [vals[i] for i in order]
-        cur = dict(zip(ids, vals))
-        seq = int(seq) + 1
-        state.update(
-            (
-                ",".join(str(x) for x in ids),
-                ",".join(repr(x) for x in vals),
-                seq,
-            )
-        )
+    def fold(key, rows, state, watermark_us):
+        prev = dict(state["top"]) if state else {}
+        top = _merge_top(state, rows, n)
+        cur = dict(top)
+        seq = (state["seq"] if state else 0) + 1
         changes = [
             ("-D", key[0], eid, prev[eid], seq) for eid in prev if eid not in cur
         ] + [("+I", key[0], eid, cur[eid], seq) for eid in cur if eid not in prev]
-        yield pd.DataFrame(
-            changes, columns=["_row_kind", "user_id", "event_id", "value", "seq"]
-        )
+        out = pd.DataFrame(changes, columns=TOPN_CHANGELOG_OUTPUT.fieldNames())
+        return out, {"top": top, "seq": seq}, None
 
-    return fn
+    return fold
 
 
 def streaming_topn_changelog(events: DataFrame, n: int = 3) -> DataFrame:
     """Streaming Top-N as a retraction stream (+I/-D per micro-batch)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _topn_changelog_fn(n),
-        outputStructType=TOPN_CHANGELOG_OUTPUT,
-        stateStructType=TOPN_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state_apply(
+        events, ["user_id"], _topn_changelog_fold(n), TOPN_CHANGELOG_OUTPUT,
+        "update",
     )
 
 
@@ -215,19 +159,11 @@ def streaming_topn(
     age out. ``pre_aggregate=True`` inserts the stateless
     :func:`local_topn_combiner` before the keyed shuffle — the skew guard
     for hot keys (output-identical; see its docstring)."""
-    ttl_us = state_ttl_seconds * 1_000_000 if state_ttl_seconds else None
     if pre_aggregate:
         events = local_topn_combiner(events, n)
-    return events.groupBy("user_id").applyInPandasWithState(
-        _topn_fn(n, ttl_us),
-        outputStructType=TOPN_OUTPUT,
-        stateStructType=TOPN_STATE,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if state_ttl_seconds
-            else GroupStateTimeout.NoTimeout
-        ),
+    return keyed_state_apply(
+        events, ["user_id"], _topn_fold(n), TOPN_OUTPUT, "update",
+        state_ttl_seconds,
     )
 
 
@@ -240,71 +176,20 @@ KEEPLAST_OUTPUT = StructType(
         StructField("value", DoubleType()),
     ]
 )
-KEEPLAST_STATE = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts_us", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-    ]
-)
 
 
-def _make_keep_last_fn(ttl_us: int | None):
-    """Keep-last state fn, optionally with event-time state TTL
-    (StateTtlConfig / table.exec.state.ttl parity): a key whose state has
-    not been refreshed within ``ttl_us`` of the watermark is evicted — a
-    later row for that key starts FRESH, exactly Flink's
-    OnCreateAndWrite/NeverReturnExpired TTL behavior for the Deduplicate
-    operator. Eviction runs through Spark's event-time timeout, so idle
-    keys are cleaned even when no new data arrives for them."""
-
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if ttl_us is not None and state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(
-                columns=["user_id", "event_id", "ts_us", "event_type", "value"]
-            )
-            return
-        best = state.get if state.exists else None
-        for pdf in pdfs:
-            for row in pdf.itertuples(index=False):
-                # ts_us column is attached by stream_events (tz-independent)
-                cand = (
-                    int(row.event_id),
-                    int(row.ts_us),
-                    row.event_type,
-                    float(row.value),
-                )
-                # keep-LAST by event time; tie → larger event_id (matches the
-                # batch row_number(ORDER BY ts DESC, event_id DESC) oracle)
-                if best is None or (cand[1], cand[0]) > (best[1], best[0]):
-                    best = cand
-        state.update(best)
-        if ttl_us is not None:
-            # same watermark clamp as _topn_fn: EventTimeTimeout requires a
-            # timestamp strictly beyond the current watermark, and best may
-            # sit arbitrarily close to it for tiny TTLs
-            wm_ms = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(max(wm_ms + 1, (best[1] + ttl_us) // 1000))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "event_id": [best[0]],
-                "ts_us": [best[1]],
-                "event_type": [best[2]],
-                "value": [best[3]],
-            }
-        )
-
-    return fn
-
-
-_keep_last_fn = _make_keep_last_fn(None)
+def _keep_last_fold(key, rows, state, watermark_us):
+    """Keep-last by event time; tie → larger event_id (matches the batch
+    row_number(ORDER BY ts DESC, event_id DESC) oracle). The state is the
+    kept row, so the TTL clock follows the newest event time kept."""
+    best = state
+    # ts_us column is attached by stream_events (tz-independent)
+    for r in rows.itertuples(index=False):
+        cand = [int(r.event_id), int(r.ts_us), r.event_type, float(r.value)]
+        if best is None or (cand[1], cand[0]) > (best[1], best[0]):
+            best = cand
+    out = pd.DataFrame([(key[0], *best)], columns=KEEPLAST_OUTPUT.fieldNames())
+    return out, best, best[1]
 
 
 OVERAGG_OUTPUT = StructType(
@@ -316,53 +201,24 @@ OVERAGG_OUTPUT = StructType(
         StructField("running_cnt", LongType()),
     ]
 )
-OVERAGG_STATE = StructType(
-    [StructField("acc_sum", DoubleType()), StructField("acc_cnt", LongType())]
-)
 
 
-def _make_over_agg_fn(ttl_us: int | None = None):
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if ttl_us is not None and state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(
-                columns=[
-                    "user_id", "event_id", "value", "running_sum", "running_cnt"
-                ]
-            )
-            return
-        acc_sum, acc_cnt = state.get if state.exists else (0.0, 0)
-        rows = []
-        for pdf in pdfs:
-            for r in pdf.itertuples(index=False):
-                rows.append((int(r.ts_us), int(r.event_id), float(r.value)))
-        rows.sort()  # event-time order within the batch (ts_us, event_id)
-        out = []
-        for _, eid, val in rows:
-            acc_sum += val
-            acc_cnt += 1
-            out.append((key[0], eid, val, acc_sum, acc_cnt))
-        state.update((acc_sum, acc_cnt))
-        if ttl_us is not None and rows:
-            # OnCreateAndWrite refresh keyed to the newest event time seen,
-            # clamped strictly beyond the watermark (EventTimeTimeout rule)
-            wm_ms = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(wm_ms + 1, (rows[-1][0] + ttl_us) // 1000)
-            )
-        yield pd.DataFrame(
-            out,
-            columns=["user_id", "event_id", "value", "running_sum", "running_cnt"],
-        )
-
-    return fn
-
-
-_over_agg_fn = _make_over_agg_fn(None)
+def _over_agg_fold(key, rows, state, watermark_us):
+    acc_sum, acc_cnt = state or (0.0, 0)
+    out = []
+    # event-time order within the batch (ts_us, event_id)
+    for _, eid, val in sorted(
+        zip(map(int, rows["ts_us"]), map(int, rows["event_id"]),
+            map(float, rows["value"]))
+    ):
+        acc_sum += val
+        acc_cnt += 1
+        out.append((key[0], eid, val, acc_sum, acc_cnt))
+    return (
+        pd.DataFrame(out, columns=OVERAGG_OUTPUT.fieldNames()),
+        [acc_sum, acc_cnt],
+        _newest_us(rows),
+    )
 
 
 def streaming_over_agg(
@@ -384,18 +240,9 @@ def streaming_over_agg(
     cleanup timer per key). An evicted key's accumulator restarts from zero
     when it reappears — Flink's expired-state semantics; emissions for keys
     active within the TTL are unchanged. Requires a watermark when set."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _make_over_agg_fn(
-            state_ttl_seconds * 1_000_000 if state_ttl_seconds else None
-        ),
-        outputStructType=OVERAGG_OUTPUT,
-        stateStructType=OVERAGG_STATE,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if state_ttl_seconds
-            else GroupStateTimeout.NoTimeout
-        ),
+    return keyed_state_apply(
+        events, ["user_id"], _over_agg_fold, OVERAGG_OUTPUT, "append",
+        state_ttl_seconds,
     )
 
 
@@ -414,18 +261,9 @@ def streaming_dedup_keep_last(
     than the expired state it would have compared against — so the TTL is
     purely a state-size bound, like Flink's NeverReturnExpired visibility.
     Requires a watermark on ``events`` when set."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _make_keep_last_fn(
-            state_ttl_seconds * 1_000_000 if state_ttl_seconds else None
-        ),
-        outputStructType=KEEPLAST_OUTPUT,
-        stateStructType=KEEPLAST_STATE,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if state_ttl_seconds
-            else GroupStateTimeout.NoTimeout
-        ),
+    return keyed_state_apply(
+        events, ["user_id"], _keep_last_fold, KEEPLAST_OUTPUT, "update",
+        state_ttl_seconds,
     )
 
 
@@ -437,46 +275,23 @@ SORT_OUTPUT = StructType(
         StructField("emit_idx", LongType()),
     ]
 )
-SORT_STATE = StructType(
-    [
-        StructField("event_ids", StringType()),  # csv buffer of pending rows
-        StructField("ts_uss", StringType()),
-        StructField("emitted", LongType()),
-    ]
-)
 
 
-def _event_time_sort_fn(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        ids_csv, ts_csv, emitted = state.get
-        ids = [int(x) for x in ids_csv.split(",")] if ids_csv else []
-        tss = [int(x) for x in ts_csv.split(",")] if ts_csv else []
-    else:
-        ids, tss, emitted = [], [], 0
-    for pdf in pdfs:
-        real = pdf[pdf["event_id"] >= 0]  # drop flush sentinels
-        ids.extend(int(x) for x in real["event_id"])
-        tss.extend(int(x) for x in real["ts_us"])
-    wm_us = state.getCurrentWatermarkMs() * 1000
-    pend = sorted(zip(tss, ids))
+def _event_time_sort_fold(key, rows, state, watermark_us):
+    real = rows[rows["event_id"] >= 0]  # drop flush sentinels
+    pend = [tuple(p) for p in state["pending"]] if state else []
+    pend += zip(map(int, real["ts_us"]), map(int, real["event_id"]))
+    pend.sort()
+    emitted = state["emitted"] if state else 0
+    wm_us = watermark_us()
     ready = [(t, i) for (t, i) in pend if t <= wm_us]
     hold = [(t, i) for (t, i) in pend if t > wm_us]
-    out = [
-        (key[0], i, t, emitted + k + 1) for k, (t, i) in enumerate(ready)
-    ]
-    emitted += len(ready)
-    state.update(
-        (
-            ",".join(str(i) for (_, i) in hold),
-            ",".join(str(t) for (t, _) in hold),
-            emitted,
-        )
+    out = [(key[0], i, t, emitted + k) for k, (t, i) in enumerate(ready, 1)]
+    return (
+        pd.DataFrame(out, columns=SORT_OUTPUT.fieldNames()),
+        {"pending": hold, "emitted": emitted + len(ready)},
+        None,
     )
-    yield pd.DataFrame(out, columns=["user_id", "event_id", "ts_us", "emit_idx"])
 
 
 def streaming_event_time_sort(events: DataFrame) -> DataFrame:
@@ -491,12 +306,8 @@ def streaming_event_time_sort(events: DataFrame) -> DataFrame:
     source must append flush sentinels so the final watermark releases the
     tail (Flink's end-of-input MAX_WATERMARK).
     """
-    return events.groupBy("user_id").applyInPandasWithState(
-        _event_time_sort_fn,
-        outputStructType=SORT_OUTPUT,
-        stateStructType=SORT_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state_apply(
+        events, ["user_id"], _event_time_sort_fold, SORT_OUTPUT, "append"
     )
 
 
@@ -509,59 +320,18 @@ JOIN_CHANGELOG_OUTPUT = StructType(
         StructField("seq", LongType()),
     ]
 )
-JOIN_CHANGELOG_STATE = StructType(
-    [
-        StructField("left_ids", StringType()),  # csv, all left rows seen
-        StructField("padded", StringType()),  # csv subset currently null-padded
-        StructField("right_ids", StringType()),  # csv, all right rows seen
-        StructField("seq", LongType()),
-    ]
-)
 
 
-def _make_outer_join_changelog_fn(ttl_us: int | None = None):
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        return _outer_join_changelog_fn(key, pdfs, state, ttl_us)
-
-    return fn
-
-
-def _outer_join_changelog_fn(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-    ttl_us: int | None = None,
-) -> Iterator[pd.DataFrame]:
-    def _csv(s: str) -> list[int]:
-        return [int(x) for x in s.split(",")] if s else []
-
-    if ttl_us is not None and state.hasTimedOut:
-        state.remove()
-        df = pd.DataFrame(
-            columns=["_row_kind", "user_id", "l_event_id", "r_event_id", "seq"]
-        )
-        df["r_event_id"] = df["r_event_id"].astype("Int64")
-        yield df
-        return
-    if state.exists:
-        l_csv, pad_csv, r_csv, seq = state.get
-        lefts, padded, rights = _csv(l_csv), set(_csv(pad_csv)), _csv(r_csv)
+def _outer_join_changelog_fold(key, rows, state, watermark_us):
+    if state:
+        lefts, padded, rights = state["left"], set(state["padded"]), state["right"]
+        seq = state["seq"] + 1
     else:
-        lefts, padded, rights, seq = [], set(), [], 0
-    new_l: list[int] = []
-    new_r: list[int] = []
-    last_ts: int | None = None
-    for pdf in pdfs:
-        for row in pdf.itertuples(index=False):
-            (new_l if row.side == "L" else new_r).append(int(row.event_id))
-        if ttl_us is not None and "ts_us" in pdf.columns and len(pdf):
-            m = int(pdf["ts_us"].max())
-            last_ts = m if last_ts is None else max(last_ts, m)
-    seq = int(seq) + 1
+        lefts, padded, rights, seq = [], set(), [], 1
+    is_left = (rows["side"] == "L").tolist()
+    ids = list(map(int, rows["event_id"]))
+    new_l = [e for e, l in zip(ids, is_left) if l]
+    new_r = [e for e, l in zip(ids, is_left) if not l]
     uid = key[0]
     changes: list[tuple] = []
     # right arrivals first: retract null-padded outer rows, then emit the
@@ -581,26 +351,13 @@ def _outer_join_changelog_fn(
         else:
             changes.append(("+I", uid, l, None, seq))
             padded.add(l)
-    lefts += new_l
-    rights = all_r
-    state.update(
-        (
-            ",".join(str(x) for x in lefts),
-            ",".join(str(x) for x in sorted(padded)),
-            ",".join(str(x) for x in rights),
-            seq,
-        )
-    )
-    if ttl_us is not None and last_ts is not None:
-        # idle-state retention: refresh on write, keyed to the newest event
-        # time, clamped past the watermark (same rule as _topn_fn)
-        wm_ms = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(wm_ms + 1, (last_ts + ttl_us) // 1000))
-    df = pd.DataFrame(
-        changes, columns=["_row_kind", "user_id", "l_event_id", "r_event_id", "seq"]
-    )
+    df = pd.DataFrame(changes, columns=JOIN_CHANGELOG_OUTPUT.fieldNames())
     df["r_event_id"] = df["r_event_id"].astype("Int64")
-    yield df
+    new_state = {
+        "left": lefts + new_l, "padded": sorted(padded), "right": all_r,
+        "seq": seq,
+    }
+    return df, new_state, _newest_us(rows)
 
 
 def streaming_outer_join_changelog(
@@ -625,18 +382,9 @@ def streaming_outer_join_changelog(
     semantics — retractions for pre-eviction pairs are no longer possible).
     Requires a watermark and a ``ts_us`` column on ``tagged`` when set.
     """
-    return tagged.groupBy("user_id").applyInPandasWithState(
-        _make_outer_join_changelog_fn(
-            state_ttl_seconds * 1_000_000 if state_ttl_seconds else None
-        ),
-        outputStructType=JOIN_CHANGELOG_OUTPUT,
-        stateStructType=JOIN_CHANGELOG_STATE,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if state_ttl_seconds
-            else GroupStateTimeout.NoTimeout
-        ),
+    return keyed_state_apply(
+        tagged, ["user_id"], _outer_join_changelog_fold, JOIN_CHANGELOG_OUTPUT,
+        "update", state_ttl_seconds,
     )
 
 
@@ -649,16 +397,8 @@ ITERATE_OUTPUT = StructType(
     ]
 )
 
-ITERATE_STATE = StructType(
-    [
-        StructField("ids_csv", StringType()),
-        StructField("vals_csv", StringType()),
-        StructField("iters_csv", StringType()),
-    ]
-)
 
-
-def _iterate_fn(step_cents: int):
+def _iterate_fold(step_cents: int):
     """Streaming ITERATION head+feedback (DataStream.iterate,
     DataStream.java:624; the countdown body mirrors flink-examples
     IterateExample.java): keyed state is the FEEDBACK CHANNEL. Each
@@ -670,76 +410,52 @@ def _iterate_fn(step_cents: int):
     row (event_id = -1, delivered by stream_events_multibatch's
     flush_sentinels = the bounded-input MAX_WATERMARK) drains remaining
     elements to their fixpoint — Flink's end-of-job flush, where feedback
-    residence time no longer matters.
+    residence time no longer matters. A key with nothing in flight holds
+    no state.
 
     Exact integer arithmetic throughout, so the oracle computes the same
     n_iter = ceil(v/step) and final = v - n_iter·step bit-for-bit."""
 
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            ids_csv, vals_csv, iters_csv = state.get
-            ids = [int(x) for x in ids_csv.split(",")] if ids_csv else []
-            vals = [int(x) for x in vals_csv.split(",")] if vals_csv else []
-            iters = [int(x) for x in iters_csv.split(",")] if iters_csv else []
-        else:
-            ids, vals, iters = [], [], []
+    def fold(key, rows, state, watermark_us):
+        inflight = state or []  # [event_id, value_cents, n_iter]
         drain = False
-        for pdf in pdfs:
-            for eid, val in zip(pdf["event_id"], pdf["value"]):
-                if int(eid) == -1:
-                    drain = True  # MAX_WATERMARK sentinel
-                    continue
-                fv = float(val)
-                if fv != fv:  # null → NaN in the Arrow batch
-                    continue
-                v = int(round(fv * 100))
-                if v > 0:
-                    ids.append(int(eid))
-                    vals.append(v)
-                    iters.append(0)
+        for eid, val in zip(rows["event_id"], rows["value"]):
+            if int(eid) == -1:
+                drain = True  # MAX_WATERMARK sentinel
+                continue
+            fv = float(val)
+            if fv != fv:  # null → NaN in the Arrow batch
+                continue
+            v = int(round(fv * 100))
+            if v > 0:
+                inflight.append([int(eid), v, 0])
         done: list[tuple] = []
-        keep_i: list[int] = []
-        for i in range(len(ids)):
+        keep: list[list[int]] = []
+        for eid, v, n_iter in inflight:
             # ONE body application per batch traversal of the loop
-            vals[i] -= step_cents
-            iters[i] += 1
-            if vals[i] <= 0:
-                done.append((key[0], ids[i], iters[i], vals[i]))
+            v -= step_cents
+            n_iter += 1
+            if v <= 0:
+                done.append((key[0], eid, n_iter, v))
             elif drain:
                 # end-of-input: iterate the leftover to its fixpoint
-                n_more = (vals[i] + step_cents - 1) // step_cents
+                n_more = (v + step_cents - 1) // step_cents
                 done.append(
-                    (key[0], ids[i], iters[i] + n_more,
-                     vals[i] - n_more * step_cents)
+                    (key[0], eid, n_iter + n_more, v - n_more * step_cents)
                 )
             else:
-                keep_i.append(i)
-        state.update(
-            (
-                ",".join(str(ids[i]) for i in keep_i),
-                ",".join(str(vals[i]) for i in keep_i),
-                ",".join(str(iters[i]) for i in keep_i),
-            )
-        )
-        yield pd.DataFrame(
-            done, columns=["user_id", "event_id", "n_iter", "final_cents"]
-        )
+                keep.append([eid, v, n_iter])
+        out = pd.DataFrame(done, columns=ITERATE_OUTPUT.fieldNames())
+        return out, keep or None, None
 
-    return fn
+    return fold
 
 
 def streaming_iterate_countdown(events: DataFrame, step_cents: int = 2500) -> DataFrame:
     """DataStream.iterate emulation: per-key feedback loop over micro-batches
-    (see :func:`_iterate_fn`). Keyed state is bounded by the number of
+    (see :func:`_iterate_fold`). Keyed state is bounded by the number of
     in-flight elements per key (each element lives ceil(v/step) batches)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _iterate_fn(step_cents),
-        outputStructType=ITERATE_OUTPUT,
-        stateStructType=ITERATE_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state_apply(
+        events, ["user_id"], _iterate_fold(step_cents), ITERATE_OUTPUT,
+        "append",
     )

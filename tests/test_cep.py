@@ -1649,3 +1649,31 @@ def test_pregate_key_gate_drops_startless_keys(spark):
     )
     got = cep_pregate(df, pat, "user_id", key_gate=True)
     assert sorted(r.user_id for r in got.collect()) == [1, 1]
+
+
+def test_keyed_apply_rejects_null_keys(spark):
+    """A NULL key raises instead of splitting its rows into one group per
+    row (NaN != NaN); without that key the batch run equals the pure NFA."""
+    import pytest as _pytest
+
+    from flink_1_12_2_spark.streaming.cep import cep_match_batch
+
+    schema = "user_id long, event_id long, ts_us long, event_type string"
+    rows = [
+        (1, 1, 10, "A"), (1, 2, 20, "B"),
+        (None, 3, 30, "A"), (None, 4, 40, "B"),
+        (2, 5, 50, "A"), (2, 6, 60, "B"),
+    ]
+    with _pytest.raises(Exception, match="NULL 'user_id' key"):
+        cep_match_batch(spark.createDataFrame(rows, schema), _pat()).collect()
+
+    kept = [r for r in rows if r[0] is not None]
+    got = cep_match_batch(spark.createDataFrame(kept, schema), _pat()).collect()
+    want = [
+        (k, *m)
+        for k in (1, 2)
+        for m in _match_events(
+            _rows([r[1:] for r in kept if r[0] == k]), _pat(), None
+        )[0]
+    ]
+    assert sorted(map(tuple, got)) == sorted(want) and len(want) == 2

@@ -127,37 +127,75 @@ def test_streaming_iterate_cross_batch_feedback():
     per micro-batch (an element with v=60.00 and step 25.00 lives THREE
     batches: 6000 -> 3500 -> 1000 -> -1500), and the MAX_WATERMARK
     sentinel drains in-flight elements to their fixpoint in one call."""
+    import json
+
     import pandas as pd
 
-    from flink_1_12_2_spark.streaming.stateful import _iterate_fn
+    from flink_1_12_2_spark.streaming.stateful import _iterate_fold
 
-    class FakeState:
-        exists = False
-
-        def update(self, v):
-            self.exists = True
-            self._v = v
-
-        @property
-        def get(self):
-            return self._v
-
-    fn = _iterate_fn(2500)
-    st = FakeState()
+    fold = _iterate_fold(2500)
     batch = lambda rows: pd.DataFrame(  # noqa: E731
         rows, columns=["event_id", "value"]
     )
+
+    def step(rows, st):
+        # state crosses micro-batches as JSON, as in keyed_state_apply
+        out, new, _ = fold((1,), batch(rows), st, None)
+        return out, None if new is None else json.loads(json.dumps(new))
+
     # batch 1: element enters, one application, stays in flight
-    out1 = next(fn((1,), iter([batch([(10, 60.0)])]), st))
-    assert len(out1) == 0 and st.get[0] == "10"
+    out1, st = step([(10, 60.0)], None)
+    assert len(out1) == 0 and st == [[10, 3500, 1]]
     # batch 2: second application, still in flight
-    out2 = next(fn((1,), iter([batch([])]), st))
-    assert len(out2) == 0 and st.get[1] == "1000"
-    # batch 3: third application fires the exit condition
-    out3 = next(fn((1,), iter([batch([])]), st))
+    out2, st = step([], st)
+    assert len(out2) == 0 and st == [[10, 1000, 2]]
+    # batch 3: third application fires the exit condition; nothing left in
+    # flight, so the key's state is deleted
+    out3, st = step([], st)
     assert list(map(tuple, out3.itertuples(index=False))) == [(1, 10, 3, -1500)]
-    assert st.get[0] == ""
+    assert st is None
     # drain: a fresh big element + the sentinel in the same batch finishes
     # at its fixpoint immediately (end-of-input flush)
-    out4 = next(fn((1,), iter([batch([(11, 100.0), (-1, 0.0)])]), st))
+    out4, st = step([(11, 100.0), (-1, 0.0)], st)
     assert list(map(tuple, out4.itertuples(index=False))) == [(1, 11, 4, 0)]
+    assert st is None
+
+
+def test_keyed_process_running_count(spark, tmp_path):
+    """KeyedStream.process: a fold keeps a running count per key across two
+    micro-batches (one source file per trigger)."""
+    import pandas as pd
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    src = str(tmp_path / "src")
+    for i, rows in enumerate([[(1,), (1,), (2,)], [(1,), (3,)]]):
+        spark.createDataFrame(rows, "k long").coalesce(1).write.parquet(
+            f"{src}/b{i}"
+        )
+
+    def count_fold(key, rows, state, watermark_us):
+        cnt = (state or 0) + len(rows)
+        return pd.DataFrame({"k": [key[0]], "cnt": [cnt]}), cnt, None
+
+    sdf = (
+        spark.readStream.schema("k long")
+        .option("maxFilesPerTrigger", "1")
+        .option("recursiveFileLookup", "true")
+        .parquet(src)
+    )
+    schema = StructType(
+        [StructField("k", LongType()), StructField("cnt", LongType())]
+    )
+    out = DataStream(sdf).key_by("k").process(count_fold, schema, "update")
+    q = (
+        out.df.writeStream.format("memory")
+        .queryName("keyed_process_count")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    rows = sorted(map(tuple, spark.table("keyed_process_count").collect()))
+    # batch 1 emits (1, 2), (2, 1); batch 2 emits (1, 3), (3, 1)
+    assert rows == [(1, 2), (1, 3), (2, 1), (3, 1)]

@@ -127,18 +127,7 @@ def test_streaming_topn_state_fold_matches_sort(spark, rows):
     # pure-function check of the top-n fold used by the streaming operator
     import pandas as pd
 
-    from flink_1_12_2_spark.streaming.stateful import _topn_fn
-
-    class FakeState:
-        exists = False
-
-        def update(self, v):
-            self.exists = True
-            self._v = v
-
-        @property
-        def get(self):
-            return self._v
+    from flink_1_12_2_spark.streaming.stateful import _topn_fold
 
     by_key: dict[int, list[tuple[int, float]]] = {}
     for k, eid, v in rows:
@@ -147,7 +136,7 @@ def test_streaming_topn_state_fold_matches_sort(spark, rows):
         pdf = pd.DataFrame(
             {"event_id": [e for e, _ in evs], "value": [v for _, v in evs]}
         )
-        out = next(_topn_fn(3)((k,), iter([pdf]), FakeState()))
+        out, _, _ = _topn_fold(3)((k,), pdf, None, None)
         expected = sorted(evs, key=lambda t: (-t[1], t[0]))[:3]
         got = list(zip(out["event_id"], out["value"]))
         assert [(int(e), float(v)) for e, v in got] == [

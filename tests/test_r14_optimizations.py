@@ -1,13 +1,11 @@
-"""Round-14 optimization pins: tmpfs capacity guard, driver-memory clamp,
-session cache registry, and the no-data micro-batch skip."""
+"""Round-14 optimization pins: tmpfs capacity guard and driver-memory
+clamp."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
-
-from tests.conftest import SF_DIR
 
 
 # ---- /dev/shm capacity guard (r13 verdict item 1 / ADVICE medium) ----------
@@ -68,29 +66,3 @@ def test_default_driver_memory_clamp():
     assert d(16 << 30) == "6g"  # 16 GiB: half is 8 GiB >= 6g
     assert d(8 << 30) == "4096m"  # 8 GiB host: half
     assert d(1 << 30) == "512m"  # tiny host: floor at 512m
-
-
-# ---- session cache registry (r13 verdict item 4 / ADVICE low) --------------
-
-
-def test_query_caches_released_after_materialization(spark):
-    from flink_1_12_2_spark.cache_registry import release_query_caches
-    from flink_1_12_2_spark.registry import QUERIES, load_all_query_modules
-
-    load_all_query_modules()
-    spark.catalog.clearCache()
-    release_query_caches()  # drop tracking from earlier tests in the session
-    jsc = spark.sparkContext._jsc.sc()
-    # earlier tests may leave localCheckpoint RDD blocks (not catalog
-    # caches) behind — assert against that baseline, not absolute zero
-    base_n = jsc.getPersistentRDDs().size()
-
-    df = QUERIES["dedup_ngram_jaccard"].fn(spark, SF_DIR)
-    df.write.format("noop").mode("overwrite").save()
-    assert jsc.getPersistentRDDs().size() > base_n  # the pipeline did cache
-
-    released = release_query_caches()
-    assert released > 0
-    assert jsc.getPersistentRDDs().size() == base_n
-
-
