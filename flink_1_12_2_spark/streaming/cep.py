@@ -89,7 +89,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from flink_1_12_2_spark.streaming.keyed_state import keyed_state_apply
+from flink_1_12_2_spark.streaming.keyed_state import key_runs, keyed_state_apply
 
 Predicate = Callable[..., bool]
 
@@ -1136,8 +1136,8 @@ def _keyed_apply(events: DataFrame, key_col: str, fn, schema) -> DataFrame:
     both sides of the Arrow boundary (per-group batch slice, per-group
     pandas assembly, per-group result frame). With thousands of small keys
     that machinery dominates the NFA stage. Here the rows cross as
-    ordinary Arrow batches (one pandas frame per batch), group boundaries
-    are found by comparing the sorted key column, and one OUTPUT frame is
+    ordinary Arrow batches (one pandas frame per batch), the sorted batch
+    is split into key runs by ``keyed_state.key_runs``, and one OUTPUT frame is
     emitted per input batch instead of per key. Null-body twin over the
     MR bench input (1,500 keys / 66K rows, interleaved ×4):
     applyInPandas 0.873-1.229 s vs this path 0.712-1.017 s.
@@ -1149,12 +1149,9 @@ def _keyed_apply(events: DataFrame, key_col: str, fn, schema) -> DataFrame:
     so ``fn`` still receives every row of a key in one frame. Row order
     within the key is arbitrary — every NFA closure re-sorts by
     (ts_us, event_id) internally (``_rows_from_pdf``) exactly as it did
-    under grouped-map. A NULL key raises: boundary detection compares keys
-    with ``!=``, and NaN != NaN would split the NULL-key rows into one
-    group per row.
+    under grouped-map. A NULL key raises, as Flink's ``keyBy`` rejects a
+    null key.
     """
-    import numpy as np  # noqa: F811 (worker-side import)
-
     from flink_1_12_2_spark.session import pinned_repartition
 
     def runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1185,12 +1182,7 @@ def _keyed_apply(events: DataFrame, key_col: str, fn, schema) -> DataFrame:
                     f"keyed CEP: NULL {key_col!r} key; filter NULL keys out "
                     "before matching"
                 )
-            ks = pdf[key_col].to_numpy()
-            change = (np.flatnonzero(ks[1:] != ks[:-1]) + 1).tolist()
-            bounds = [0, *change, len(ks)]
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                k = ks[s]
-                part = pdf.iloc[s:e]
+            for k, part in key_runs(pdf, [key_col]):
                 if carry_key is not None and k == carry_key:
                     carry_parts.append(part)  # key spans Arrow batches
                 else:

@@ -28,19 +28,25 @@ def ltz_to_ntz_utc(col) -> F.Column:
     return F.timestamp_add("MICROSECOND", F.unix_micros(c), epoch_ntz)
 
 
-# (path, mtime_ns, size) -> StructType. Schema inference for the stream
-# scan is a driver-side batch read (listing + parquet footer) re-paid on
-# EVERY streaming-query build — ~0.1-0.2 s of each stateful bench row's
-# fixed cost (its query-build segment). The schema is plan
-# METADATA derived from the file identity, not query results, and the
-# mtime/size key invalidates it whenever the file changes.
+# (path, mtime_ns, size, newest part-file mtime_ns) -> StructType. Schema
+# inference for the stream scan is a driver-side batch read (listing +
+# parquet footer) re-paid on EVERY streaming-query build — ~0.1-0.2 s of
+# each stateful bench row's fixed cost (its query-build segment). The
+# schema is plan METADATA derived from the file identity, not query
+# results, and the key invalidates it whenever the file changes. A part
+# file rewritten in place leaves its directory's mtime and size alone, so
+# the key also holds the newest part-file mtime.
 _SCHEMA_CACHE: dict[tuple, object] = {}
 
 
 def _static_schema(spark: SparkSession, path: str):
     try:
         st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
+        newest = 0
+        if os.path.isdir(path):
+            with os.scandir(path) as it:
+                newest = max((e.stat().st_mtime_ns for e in it), default=0)
+        key = (path, st.st_mtime_ns, st.st_size, newest)
     except OSError:
         key = None
     if key is not None and key in _SCHEMA_CACHE:

@@ -12,13 +12,14 @@ Design: every operator is a pure fold run by
 :func:`~flink_1_12_2_spark.streaming.keyed_state.keyed_state_apply` once per
 key and micro-batch: ``fold(key, rows, state, watermark_us) -> (out,
 new_state, newest_event_us)``. State is a compact JSON value per key (never
-the full input); each micro-batch folds its rows into state and emits the
-current result — Flink's "emit on change" collapses to "emit per
-micro-batch", which is the documented latency model difference (SURVEY §2.4
-MiniBatch note). With ``state_ttl_seconds`` (``table.exec.state.ttl``) a
-key's TTL is refreshed on every write to ``newest_event_us + ttl``, clamped
-strictly past the watermark, and the key is evicted once the watermark
-passes it.
+the full input), kept in the key's hash bucket (Flink's key groups); each
+micro-batch folds its rows into state and emits the current result —
+Flink's "emit on change" collapses to "emit per micro-batch", which is the
+documented latency model difference (SURVEY §2.4 MiniBatch note). With
+``state_ttl_seconds`` (``table.exec.state.ttl``) a key's TTL is refreshed on
+every write to ``newest_event_us + ttl``, clamped strictly past the
+watermark, and the key alone is evicted once the watermark passes it, even
+when other keys of its bucket stay live.
 """
 
 from __future__ import annotations

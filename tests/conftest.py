@@ -33,3 +33,27 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def keyed_state_buckets(spark, ckpt: str) -> dict[int, tuple[dict, int]]:
+    """The state store of a ``keyed_state_apply`` query's checkpoint, one
+    entry per hash bucket: ``{bucket: ({key tuple: [state, expiry_ms]},
+    timeoutTimestamp)}``, the timestamp None without a TTL."""
+    import json
+
+    rows = spark.read.format("statestore").load(ckpt).collect()
+    return {
+        r.key["__ks_bucket"]: (
+            {
+                tuple(json.loads(k)): [json.loads(s), e]
+                for k, (s, e) in json.loads(r.value.groupState.state_json).items()
+            },
+            r.value.asDict().get("timeoutTimestamp"),
+        )
+        for r in rows
+    }
+
+
+def live_keys(spark, ckpt: str) -> set[tuple]:
+    """Every key held in a ``keyed_state_apply`` checkpoint's state."""
+    return {k for keys, _ in keyed_state_buckets(spark, ckpt).values() for k in keys}

@@ -568,3 +568,34 @@ def test_portable_ln_duckdb_bit_identity_random(ns):
         assert struct.pack("<d", got[n]) == struct.pack(
             "<d", portable_ln_py(n)
         ), n
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    st.lists(
+        st.tuples(st.sampled_from([1, 2, 3, None]), st.sampled_from(["a", "b"])),
+        max_size=30,
+    ),
+    st.booleans(),
+    st.sampled_from([["k1"], ["k2"], ["k1", "k2"]]),
+)
+def test_key_runs_equal_groupby(keys, presorted, by):
+    """``key_runs`` yields what ``groupby(sort=False, dropna=False)`` does:
+    one frame per key in order of first appearance, rows in input order,
+    NULL keys one group, keys as plain tuples with None for NULL."""
+    import pandas as pd
+
+    from flink_1_12_2_spark.streaming.keyed_state import key_runs
+
+    pdf = pd.DataFrame(keys, columns=["k1", "k2"], dtype=object)
+    pdf["k1"] = pdf["k1"].astype("Int64")
+    pdf["row"] = range(len(pdf))
+    if presorted:
+        pdf = pdf.sort_values(by, kind="stable").reset_index(drop=True)
+    got = [(k, list(rows["row"])) for k, rows in key_runs(pdf, by)]
+    want = [
+        (tuple(None if pd.isna(v) else v for v in k), list(rows["row"]))
+        for k, rows in pdf.groupby(by, sort=False, dropna=False)
+    ]
+    assert got == want
+    assert all(type(v) in (int, str, type(None)) for k, _ in got for v in k)

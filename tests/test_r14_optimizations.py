@@ -1,5 +1,5 @@
-"""Round-14 optimization pins: tmpfs capacity guard and driver-memory
-clamp."""
+"""Round-14 optimization pins: tmpfs capacity guard, driver-memory clamp
+and the streaming schema cache."""
 
 from __future__ import annotations
 
@@ -66,3 +66,25 @@ def test_default_driver_memory_clamp():
     assert d(16 << 30) == "6g"  # 16 GiB: half is 8 GiB >= 6g
     assert d(8 << 30) == "4096m"  # 8 GiB host: half
     assert d(1 << 30) == "512m"  # tiny host: floor at 512m
+
+
+def test_static_schema_cache_sees_part_file_rewritten_in_place(spark, tmp_path):
+    """A part file rewritten in place leaves its directory's mtime and size
+    alone; the streaming schema cache must still notice the new schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flink_1_12_2_spark.streaming.core import _static_schema
+
+    table_dir = tmp_path / "t.parquet"
+    table_dir.mkdir()
+    part = table_dir / "part-0.parquet"
+    pq.write_table(pa.table({"a": [1]}), part)
+    os.utime(part, ns=(1_000_000_000, 1_000_000_000))
+    assert _static_schema(spark, str(table_dir)).fieldNames() == ["a"]
+
+    dir_stat = os.stat(table_dir)
+    pq.write_table(pa.table({"a": [1], "b": ["x"]}), part)  # same inode
+    assert os.stat(table_dir).st_mtime_ns == dir_stat.st_mtime_ns
+    assert os.stat(table_dir).st_size == dir_stat.st_size
+    assert _static_schema(spark, str(table_dir)).fieldNames() == ["a", "b"]
