@@ -159,26 +159,7 @@ def read_topic_stream(
         lambda p: _reader().text(p), paths, metadata_cols
     )
     raw = _apply_startup(raw, topic_dir, options)
-    md_names = [m[0] for m in metadata_cols]
-    if value_format == "raw":
-        # Flink's 'format' = 'raw': the value bytes, undecoded. The
-        # text-transport emulation carries binary payloads base64-coded
-        # (a real broker delivers value: binary directly).
-        return raw.select(
-            F.unbase64(F.col("value")).alias("value"), *md_names
-        )
-    if value_format == "json":
-        env = F.from_json(F.col("value"), f"struct<{payload_schema}>")
-        # real DDL parse (handles nested struct<...>/decimal(p,s)/map<...>
-        # field types that a naive comma split would break on)
-        fields = _payload_fields(payload_schema)
-        return raw.select(*[env[f].alias(f) for f in fields], *md_names)
-    if value_format in _CDC_PARSERS:
-        return _CDC_PARSERS[value_format](raw, "value", payload_schema)
-    raise ValueError(
-        f"value format {value_format!r} not supported by the kafka emulation "
-        f"(raw, json, {', '.join(_CDC_PARSERS)})"
-    )
+    return _decode_value(raw, value_format, payload_schema, metadata_cols)
 
 
 def read_topic_batch(
@@ -203,18 +184,34 @@ def read_topic_batch(
     else:
         raw = spark.read.option("recursiveFileLookup", "true").text(paths)
     raw = _apply_startup(raw, topic_dir, options)
+    return _decode_value(raw, value_format, payload_schema, metadata_cols)
+
+
+def _decode_value(
+    raw: DataFrame, value_format: str, payload_schema: str, metadata_cols
+) -> DataFrame:
+    """Decode the ``value`` text column of a raw topic read (stream or
+    batch) per the table's value format, keeping the metadata columns."""
     md_names = [m[0] for m in metadata_cols]
     if value_format == "raw":
+        # Flink's 'format' = 'raw': the value bytes, undecoded. The
+        # text-transport emulation carries binary payloads base64-coded
+        # (a real broker delivers value: binary directly).
         return raw.select(
             F.unbase64(F.col("value")).alias("value"), *md_names
         )
     if value_format == "json":
         env = F.from_json(F.col("value"), f"struct<{payload_schema}>")
+        # real DDL parse (handles nested struct<...>/decimal(p,s)/map<...>
+        # field types that a naive comma split would break on)
         fields = _payload_fields(payload_schema)
         return raw.select(*[env[f].alias(f) for f in fields], *md_names)
     if value_format in _CDC_PARSERS:
         return _CDC_PARSERS[value_format](raw, "value", payload_schema)
-    raise ValueError(f"value format {value_format!r} not supported")
+    raise ValueError(
+        f"value format {value_format!r} not supported by the kafka emulation "
+        f"(raw, json, {', '.join(_CDC_PARSERS)})"
+    )
 
 
 

@@ -40,6 +40,13 @@ precomputes them as lag/lead window columns over the same (partition,
 order) key the NFA groups on — one shared exchange, zero per-row Python
 for navigation.
 
+Candidate pre-gate: the row-local atoms of each DEFINE give an upper bound
+of its predicate as Spark SQL text; the parser places it on the Pattern's
+steps (``Step.bound_sql``) exactly as the Pattern API's ``bound()`` does,
+so batch (ONE ROW and ALL ROWS) and streaming statements all go through
+the one CEP pre-gate, ``streaming.cep.cep_pregate``. Parsing needs no
+SparkSession.
+
 Parity boundary vs the reference (flink 1.12 MATCH_RECOGNIZE "known
 limitations", docs/dev/table/streaming/match_recognize):
 greedy trailing quantifiers are unsupported THERE too (we reject the
@@ -127,9 +134,37 @@ def _nav_col(fn: str, col: str, n: int) -> str:
     return f"__nav_{fn.lower()}{n}_{col}"
 
 
+def _sql_literal(value) -> str:
+    """Spark SQL text that reads back exactly ``value`` (a parsed DEFINE
+    literal): strings escape backslash and quote the way Spark's parser
+    unescapes them, floats go through their repr so ``1e3`` and ``0.1``
+    round-trip bit for bit."""
+    if isinstance(value, str):
+        return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(value, float):
+        return f"CAST('{value!r}' AS DOUBLE)"
+    return str(value)
+
+
+def _literal(tok: str):
+    """A DEFINE literal token → the Python value the predicate compares:
+    ``'it''s'`` (SQL-standard doubled quote) → ``it's``; integers stay
+    ``int``, anything else numeric (``1.5``, ``1e3``) is a ``float``."""
+    if tok.startswith("'"):
+        return tok[1:-1].replace("''", "'")
+    try:
+        return int(tok)
+    except ValueError:
+        pass
+    try:
+        return float(tok)
+    except ValueError:
+        raise ValueError(f"unsupported DEFINE operand: {tok!r}") from None
+
+
 def _operand(tok: str, defined: str) -> tuple:
     """One comparison operand →
-    (getter(row, ctx) -> value, needs_events, navs).
+    (getter(row, ctx) -> value, needs_events, navs, sql).
 
     Forms: ``'literal'`` · number · ``col`` / ``Var.col`` (the defined
     variable or a bare column reads the CURRENT row; another variable reads
@@ -142,14 +177,16 @@ def _operand(tok: str, defined: str) -> tuple:
     ``PREV/NEXT(col[, n])`` (PHYSICAL offset over the partition order —
     SQL:2016 navigation; evaluated JVM-side as a lag/lead window column
     BEFORE rows enter the NFA, so the Python predicate is a plain column
-    read; ``navs`` reports the (fn, col, n) columns to precompute)."""
+    read; ``navs`` reports the (fn, col, n) columns to precompute).
+
+    ``sql`` is the Spark SQL text of a ROW-LOCAL operand (literal, current
+    row column, PREV/NEXT column) reading the same value the getter does,
+    or None when the operand needs match state and so cannot be evaluated
+    before the NFA."""
     tok = tok.strip()
-    if tok.startswith("'"):
-        lit = tok[1:-1]
-        return (lambda row, ctx, _l=lit: _l), False, set()
-    if re.match(r"^-?\d", tok):
-        num = float(tok) if "." in tok else int(tok)
-        return (lambda row, ctx, _l=num: _l), False, set()
+    if tok.startswith("'") or re.match(r"^-?\d", tok):
+        lit = _literal(tok)
+        return (lambda row, ctx, _l=lit: _l), False, set(), _sql_literal(lit)
     nv = _NAV_OPERAND.match(tok)
     if nv:
         fn, var, col, off = nv.groups()
@@ -165,6 +202,7 @@ def _operand(tok: str, defined: str) -> tuple:
             (lambda row, ctx, _c=name: row.get(_c)),
             False,
             {(fn.upper(), col, n)},
+            f"`{name}`",
         )
     am = _AGG_OPERAND.match(tok)
     if am:
@@ -181,7 +219,7 @@ def _operand(tok: str, defined: str) -> tuple:
                     return row.get(_c) if _own else None
                 return prev.get(_c)
 
-            return get, False, set()
+            return get, False, set(), None
         if fn == "LAST" and off == 0:
 
             def get(row, ctx, _v=var, _c=col, _own=own):
@@ -190,7 +228,7 @@ def _operand(tok: str, defined: str) -> tuple:
                 prev = ctx.last(_v)
                 return None if prev is None else prev.get(_c)
 
-            return get, False, set()
+            return get, False, set(), None
         if fn in ("FIRST", "LAST"):
             # logical offset into the variable's matched-row list
             # (MatchRecognizeITCase.scala:142 — LAST(A.name, 2)); running
@@ -206,7 +244,7 @@ def _operand(tok: str, defined: str) -> tuple:
                     return None
                 return seq[idx].get(_c)
 
-            return get, True, set()
+            return get, True, set(), None
 
         def get(row, ctx, _v=var, _c=col, _own=own, _fn=fn):
             vals = [
@@ -224,7 +262,7 @@ def _operand(tok: str, defined: str) -> tuple:
                 return sum(vals) / len(vals)
             return min(vals) if _fn == "MIN" else max(vals)
 
-        return get, True, set()
+        return get, True, set(), None
     vm = _VARCOL.match(tok)
     if vm and vm.group(1).upper() != defined.upper():
         var, col = vm.group(1), vm.group(2)
@@ -233,7 +271,7 @@ def _operand(tok: str, defined: str) -> tuple:
             prev = ctx.last(_v)
             return None if prev is None else prev.get(_c)
 
-        return get, False, set()
+        return get, False, set(), None
     if not re.match(r"^\w+(?:\.\w+)?$", tok):
         # anything function-call-shaped that the AGG regex didn't accept
         # (MEDIAN(...), FIRST(price) without Var prefix, typos) must fail
@@ -241,50 +279,15 @@ def _operand(tok: str, defined: str) -> tuple:
         # evaluate every comparison to False
         raise ValueError(f"unsupported DEFINE operand: {tok!r}")
     col = tok.split(".")[-1]  # defined var's or bare column → current row
-    return (lambda row, ctx, _c=col: row.get(_c)), False, set()
+    return (lambda row, ctx, _c=col: row.get(_c)), False, set(), f"`{col}`"
 
 
 _IS_NULL = re.compile(r"(?is)^(.*?)\s+IS\s+(NOT\s+)?NULL$")
 
 
-def _operand_col(tok: str, defined: str):
-    """Catalyst twin of :func:`_operand` for ROW-LOCAL operands: a pyspark
-    Column reading the same value the Python getter would, or None when the
-    operand needs match state (other-variable refs, FIRST/LAST, aggregates)
-    and therefore can't be evaluated before the NFA. Used by the
-    candidate pre-gate (:func:`_pregate`) to build per-variable UPPER-BOUND
-    predicates that Catalyst evaluates in the scan stage."""
-    import pyspark.sql.functions as F
-
-    tok = tok.strip()
-    if tok.startswith("'"):
-        return F.lit(tok[1:-1])
-    if re.match(r"^-?\d", tok):
-        return F.lit(float(tok) if "." in tok else int(tok))
-    nv = _NAV_OPERAND.match(tok)
-    if nv:
-        fn, _var, col, off = nv.groups()
-        return F.col(_nav_col(fn.upper(), col, int(off) if off else 1))
-    if _AGG_OPERAND.match(tok):
-        return None
-    vm = _VARCOL.match(tok)
-    if vm and vm.group(1).upper() != defined.upper():
-        return None
-    if re.match(r"^\w+(?:\.\w+)?$", tok):
-        return F.col(tok.split(".")[-1])
-    return None
-
-
-_COL_OPS = {
-    # Column twins of _OPS: a NULL operand makes the comparison NULL,
-    # which filter() treats as not-true — same three-valued semantics
-    "=": lambda a, b: a == b,
-    "<>": lambda a, b: a != b,
-    ">": lambda a, b: a > b,
-    "<": lambda a, b: a < b,
-    ">=": lambda a, b: a >= b,
-    "<=": lambda a, b: a <= b,
-}
+def _sql_join(op: str, parts: list[str]) -> str:
+    """``parts`` joined by the SQL connective ``op``, each parenthesized."""
+    return parts[0] if len(parts) == 1 else f" {op} ".join(f"({p})" for p in parts)
 
 
 def _parse_expr(expr: str, defined: str) -> tuple:
@@ -296,60 +299,52 @@ def _parse_expr(expr: str, defined: str) -> tuple:
     joined by AND / OR (OR binds looser, no parens) — the Flink
     MATCH_RECOGNIZE DEFINE surface minus nested parentheses.
 
-    ``bound`` is a pyspark Column UPPER BOUND of the predicate — true for
-    every row the Python predicate could accept in ANY match state — built
-    from the row-local atoms only (non-row-local atoms relax to TRUE:
-    dropped from conjunctions; a fully non-local disjunct makes the whole
-    bound None = unpruneable). The pre-gate filters on it JVM-side."""
-    import pyspark.sql.functions as F
-
+    ``bound`` is the Spark SQL text of an UPPER BOUND of the predicate —
+    true for every row the Python predicate could accept in ANY match
+    state — built from the row-local atoms only (non-row-local atoms relax
+    to TRUE: dropped from conjunctions; a fully non-local disjunct makes
+    the whole bound None = unpruneable). :func:`_parse_mr` places it on the
+    Pattern's steps (``Step.bound_sql``), where the CEP pre-gate
+    (``streaming.cep.cep_pregate``) filters on it JVM-side."""
     needs = False
     navs: set = set()
     disjuncts = []
-    bound_disjuncts: list = []
-    bound_ok = True
+    bound_disjuncts: list[str | None] = []
     for part in re.split(r"(?i)\s+OR\s+", expr.strip()):
         conj = []
-        conj_bounds: list = []
+        conj_bounds: list[str] = []
         for atom in re.split(r"(?i)\s+AND\s+", part.strip()):
             atom = atom.strip()
             nm = _IS_NULL.match(atom)
             if nm:
-                gl, nl, vl = _operand(nm.group(1), defined)
+                gl, nl, vl, sl = _operand(nm.group(1), defined)
                 needs = needs or nl
                 navs |= vl
-                cl = _operand_col(nm.group(1), defined)
                 if nm.group(2):  # IS NOT NULL
                     conj.append((gl, lambda a, b: a is not None, gl))
-                    if cl is not None:
-                        conj_bounds.append(cl.isNotNull())
                 else:
                     conj.append((gl, lambda a, b: a is None, gl))
-                    if cl is not None:
-                        conj_bounds.append(cl.isNull())
+                if sl is not None:
+                    conj_bounds.append(
+                        f"{sl} IS {'NOT ' if nm.group(2) else ''}NULL"
+                    )
                 continue
             pieces = _CMP.split(atom)
             if len(pieces) != 3:
                 raise ValueError(f"unsupported DEFINE atom: {atom!r}")
-            gl, nl, vl = _operand(pieces[0], defined)
-            gr, nr, vr = _operand(pieces[2], defined)
+            gl, nl, vl, sl = _operand(pieces[0], defined)
+            gr, nr, vr, sr = _operand(pieces[2], defined)
             needs = needs or nl or nr
             navs |= vl | vr
             conj.append((gl, _OPS[pieces[1]], gr))
-            cl = _operand_col(pieces[0], defined)
-            cr = _operand_col(pieces[2], defined)
-            if cl is not None and cr is not None:
-                conj_bounds.append(_COL_OPS[pieces[1]](cl, cr))
+            # the SQL comparison is null-rejecting like _OPS: a NULL
+            # operand yields NULL, which a filter treats as not-true
+            if sl is not None and sr is not None:
+                conj_bounds.append(f"{sl} {pieces[1]} {sr}")
         disjuncts.append(conj)
-        if conj_bounds:
-            b = conj_bounds[0]
-            for extra in conj_bounds[1:]:
-                b = b & extra
-            bound_disjuncts.append(b)
-        else:
-            # this disjunct has no row-local atom: it may accept any row,
-            # so the whole expression has no usable upper bound
-            bound_ok = False
+        # a disjunct with no row-local atom may accept any row, so the
+        # whole expression has no usable upper bound
+        bound_disjuncts.append(_sql_join("AND", conj_bounds) if conj_bounds else None)
 
     def pred(row, ctx, _d=disjuncts):
         return any(
@@ -357,11 +352,7 @@ def _parse_expr(expr: str, defined: str) -> tuple:
             for conj in _d
         )
 
-    bound = None
-    if bound_ok and bound_disjuncts:
-        bound = bound_disjuncts[0]
-        for extra in bound_disjuncts[1:]:
-            bound = bound | extra
+    bound = None if None in bound_disjuncts else _sql_join("OR", bound_disjuncts)
     return pred, needs, navs, bound
 
 
@@ -372,8 +363,7 @@ def _parse_defines(text: str) -> tuple[dict[str, object], bool, set, dict]:
     aggregates over a variable's full row set (→ the pattern must retain
     events); ``navs`` collects the (PREV|NEXT, col, n) physical-navigation
     columns the front door must precompute as lag/lead windows; ``bounds``
-    maps each variable to its Catalyst upper-bound Column (absent when
-    unpruneable)."""
+    maps each variable to its SQL upper bound (absent when unpruneable)."""
     defs: dict[str, object] = {}
     needs_events = False
     navs: set = set()
@@ -433,7 +423,7 @@ def parse_match_recognize(sql: str) -> tuple[str, str, Pattern]:
     (partition_col, order_col, Pattern). Rejects PREV/NEXT physical
     navigation — those need the batch front door (:func:`match_recognize`)
     which precomputes the lag/lead columns the predicates read."""
-    part, order, pat, navs, _bounds = _parse_mr(sql)
+    part, order, pat, navs = _parse_mr(sql)
     if navs:
         raise ValueError(
             "PREV/NEXT physical navigation requires the batch "
@@ -443,12 +433,14 @@ def parse_match_recognize(sql: str) -> tuple[str, str, Pattern]:
     return part, order, pat
 
 
-def _parse_mr(sql: str) -> tuple[str, str, Pattern, set, dict]:
-    """Full parse → (partition_col, order_col, Pattern, navs, bounds).
+def _parse_mr(sql: str) -> tuple[str, str, Pattern, set]:
+    """Full parse → (partition_col, order_col, Pattern, navs).
     ``navs`` is the set of (PREV|NEXT, col, n) physical-navigation columns
     DEFINE predicates read (computed as lag/lead over the partition order
-    before rows enter the NFA); ``bounds`` maps variables to Catalyst
-    upper-bound Columns for the candidate pre-gate."""
+    before rows enter the NFA). Every step of the Pattern carries its SQL
+    upper bound in ``Step.bound_sql`` (an alternation step: the OR of its
+    alternatives' bounds; None when any of them has none), the input of
+    the CEP candidate pre-gate ``streaming.cep.cep_pregate``."""
     m = _MR.search(sql)
     if not m:
         raise ValueError("unsupported MATCH_RECOGNIZE syntax (see module doc)")
@@ -513,88 +505,13 @@ def _parse_mr(sql: str) -> tuple[str, str, Pattern, set, dict]:
         pat = pat.skip_to_last(skip_raw[2])
     if needs_events:  # DEFINE aggregates read the variable's full row set
         pat = pat.with_events()
-    return m.group("part"), m.group("order"), pat.validate(), navs, bounds
-
-
-def _pregate(df: DataFrame, part: str, pat: Pattern, bounds: dict):
-    """Vectorized CEP candidate pre-gate: Catalyst filters evaluated BEFORE
-    rows reach the Python NFA, a pure optimization with byte-identical
-    output.
-
-    1. ROW gate — keep only rows satisfying the upper bound of AT LEAST
-       ONE pattern variable's DEFINE. A row matching no variable is never
-       consumed by any branch under relaxed contiguity, never enters
-       first/last/events state, and the SQL grammar produces no
-       kill/until/strict steps — so dropping it cannot change the match
-       set. Row-local bounds typically reach the parquet scan as
-       PushedFilters, so at 100 TB the non-candidate bulk never leaves
-       the scan stage.
-    2. KEY gate — keep only partitions with at least one row satisfying
-       the match-START upper bound (the leading optional prefix plus the
-       first mandatory step, across every PERMUTE sequence): a key with
-       no possible first row yields zero matches, so its rows need not be
-       shipped to Python at all. One window max over the same partition
-       key the NFA groups on — no extra exchange.
-
-    Both gates degrade to no-ops when a needed variable has no row-local
-    bound (iterative/aggregate-only DEFINEs). Defensively skipped for
-    step features the SQL grammar can't produce today (strict contiguity,
-    negatives, until, consecutive) whose semantics DO observe dropped
-    rows."""
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    step_lists = pat.seqs if pat.seqs else [pat.steps]
-    for steps in step_lists:
+    for steps in pat.seqs or [pat.steps]:
         for s in steps:
-            if s.negative or s.strict or s.consecutive or s.until_pred:
-                return df
-    used: list[str] = []
-    starts: list[str] = []
-    for steps in step_lists:
-        for s in steps:
-            used.extend([n for n, _ in s.alts] if s.alts else [s.name])
-        for s in steps:
-            starts.extend(
-                [n for n, _ in s.alts] if s.alts else [s.name]
-            )
-            if s.min_times > 0:
-                break
-
-    def union_bound(names: list[str]):
-        cols = []
-        # sorted: deterministic OR order → stable plans across runs
-        for n in sorted(set(names)):
-            b = bounds.get(n.upper())
-            if b is None:
-                return None  # some variable unpruneable → gate off
-            cols.append(b)
-        out = cols[0]
-        for b in cols[1:]:
-            out = out | b
-        return out
-
-    row_bound = union_bound(used)
-    if row_bound is not None:
-        df = df.filter(row_bound)
-    start_bound = union_bound(starts)
-    if start_bound is not None:
-        from flink_1_12_2_spark.session import pinned_repartition
-
-        # pin the key partitioning BEFORE the window: the window's own
-        # ENSURE_REQUIREMENTS exchange is AQE-coalescible, and a later
-        # pin would collapse as a no-op — leaving the window AND the
-        # downstream Python NFA on the 1-3 byte-coalesced partitions
-        df = (
-            pinned_repartition(df, part)
-            .withColumn(
-                "__mr_has_start",
-                F.max(start_bound.cast("int")).over(Window.partitionBy(part)),
-            )
-            .filter(F.col("__mr_has_start") == 1)
-            .drop("__mr_has_start")
-        )
-    return df
+            names = [n for n, _ in s.alts] if s.alts else [s.name]
+            bs = [bounds.get(n.upper()) for n in names]
+            # sorted: deterministic OR order → stable plans across runs
+            s.bound_sql = None if None in bs else _sql_join("OR", sorted(set(bs)))
+    return m.group("part"), m.group("order"), pat.validate(), navs
 
 
 def _with_nav_columns(df: DataFrame, part: str, order: str, navs: set):
@@ -636,14 +553,15 @@ _M_PLAIN = re.compile(
     r"(?is)^(?:(?:RUNNING|FINAL)\s+)?(FIRST|LAST)\s*\(\s*(\w+)\s*\)"
     r"\s+AS\s+(\w+)$"
 )
-_M_CLS = re.compile(r"(?is)^CLASSIFIER\s*\(\s*\)\s+AS\s+(\w+)$")
-_M_MN = re.compile(r"(?is)^MATCH_NUMBER\s*\(\s*\)\s+AS\s+(\w+)$")
-# Flink time attributes of the MATCH output (FlinkSqlOperatorTable
+# argument-less MEASURES functions: CLASSIFIER(), MATCH_NUMBER(), and
+# Flink's time attributes of the MATCH output (FlinkSqlOperatorTable
 # MATCH_ROWTIME/MATCH_PROCTIME; MatchRecognizeITCase.scala): the match's
 # event-time (its LAST row's rowtime — what lets a window aggregate chain
 # after MATCH_RECOGNIZE) and a processing-time marker.
-_M_MRT = re.compile(r"(?is)^MATCH_ROWTIME\s*\(\s*\)\s+AS\s+(\w+)$")
-_M_MPT = re.compile(r"(?is)^MATCH_PROCTIME\s*\(\s*\)\s+AS\s+(\w+)$")
+_M_FN0 = re.compile(
+    r"(?is)^(CLASSIFIER|MATCH_NUMBER|MATCH_ROWTIME|MATCH_PROCTIME)"
+    r"\s*\(\s*\)\s+AS\s+(\w+)$"
+)
 _SUBSET_ITEM = re.compile(r"(\w+)\s*=\s*\(([\w\s,]*)\)")
 
 
@@ -665,6 +583,46 @@ def _split_measures(text: str | None) -> list[str]:
             cur.append(ch)
     items.append("".join(cur))
     return [i.strip() for i in items if i.strip()]
+
+
+def _parse_measures(text: str | None, all_rows: bool) -> tuple:
+    """MEASURES list → (aggs, plain, fn0).
+
+    ``aggs``: (fn, var, col, alias, offset, final) per ``AGG(Var.col[, n])``
+    item (``final`` — the SQL:2016 FINAL prefix); ``plain``: (FIRST|LAST,
+    col, alias) match-boundary accessors; ``fn0``: {CLASSIFIER |
+    MATCH_NUMBER | MATCH_ROWTIME | MATCH_PROCTIME: alias}. ALL ROWS PER
+    MATCH (``all_rows``) rejects FIRST/LAST in both forms (RUNNING
+    boundary accessors are not implemented for row-grain output)."""
+    where = "ALL ROWS PER MATCH: " if all_rows else ""
+    aggs: list[tuple[str, str, str, str, int, bool]] = []
+    plain: list[tuple[str, str, str]] = []
+    fn0: dict[str, str] = {}
+    for it in _split_measures(text):
+        am = _M_AGG.match(it)
+        if am:
+            prefix, fn, var, col, off, alias = am.groups()
+            fn = fn.upper()
+            if all_rows and fn in ("FIRST", "LAST"):
+                raise ValueError(f"{where}FIRST/LAST measures unsupported: {it!r}")
+            off = int(off) if off else 0
+            if off and fn not in ("FIRST", "LAST"):
+                raise ValueError(
+                    f"offset argument only valid on FIRST/LAST: {it!r}"
+                )
+            final = (prefix or "").upper() == "FINAL"
+            aggs.append((fn, var, col, alias, off, final))
+            continue
+        pm = None if all_rows else _M_PLAIN.match(it)
+        if pm:
+            plain.append(pm.groups())
+            continue
+        fm = _M_FN0.match(it)
+        if fm:
+            fn0[fm.group(1).upper()] = fm.group(2)
+            continue
+        raise ValueError(f"{where}unsupported MEASURES item: {it!r}")
+    return aggs, plain, fn0
 
 
 def _parse_subsets(text: str | None) -> dict[str, list[str]]:
@@ -698,7 +656,8 @@ def match_recognize_stream(
 
 
 def _match_recognize_all_rows(
-    df: DataFrame, nfa_in: DataFrame, sql: str, m, part: str, order: str, pat
+    df: DataFrame, nfa_in: DataFrame, m, part: str, order: str, pat,
+    aggs: list, fn0: dict,
 ) -> DataFrame:
     """ALL ROWS PER MATCH emission (SQL:2016 R010; BEYOND the reference —
     Flink 1.12 rejects it, docs/dev/table/streaming/match_recognize "known
@@ -709,8 +668,7 @@ def _match_recognize_all_rows(
       ``Var`` up to and including the current row;
     - ``CLASSIFIER()`` — the CURRENT row's pattern variable;
     - ``MATCH_NUMBER()`` — same numbering as ONE ROW mode.
-    ``FIRST/LAST`` measures are rejected here (RUNNING boundary accessors
-    are not implemented for row-grain output).
+    ``FIRST/LAST`` measures are rejected by :func:`_parse_measures`.
 
     Scale: the NFA emits (match → var → event-id) assignments; rows
     explode per match and join back to the input key-partitioned; the
@@ -718,44 +676,6 @@ def _match_recognize_all_rows(
     match length, never by partition size."""
     import pyspark.sql.functions as F
     from pyspark.sql import Window
-
-    items = _split_measures(m.group("measures"))
-    # (fn, var, col, alias, final) — final=True pins the whole-match value
-    # on every row (SQL:2016 FINAL keyword; default here is RUNNING)
-    specs: list[tuple[str, str, str, str, bool]] = []
-    cls_alias = mn_alias = mrt_alias = mpt_alias = None
-    for it in items:
-        am = _M_AGG.match(it)
-        if am:
-            prefix, fn, var, col, off, alias = am.groups()
-            if fn.upper() in ("FIRST", "LAST"):
-                raise ValueError(
-                    f"ALL ROWS PER MATCH: FIRST/LAST measures unsupported: {it!r}"
-                )
-            if off:
-                raise ValueError(
-                    f"offset argument only valid on FIRST/LAST: {it!r}"
-                )
-            final = (prefix or "").upper() == "FINAL"
-            specs.append((fn.upper(), var, col, alias, final))
-            continue
-        cm = _M_CLS.match(it)
-        if cm:
-            cls_alias = cm.group(1)
-            continue
-        nm = _M_MN.match(it)
-        if nm:
-            mn_alias = nm.group(1)
-            continue
-        rt = _M_MRT.match(it)
-        if rt:
-            mrt_alias = rt.group(1)
-            continue
-        pt = _M_MPT.match(it)
-        if pt:
-            mpt_alias = pt.group(1)
-            continue
-        raise ValueError(f"ALL ROWS PER MATCH: unsupported MEASURES item: {it!r}")
 
     out = cep_match_batch(
         nfa_in, pat, key_col=part, time_col=order, include_vars=True
@@ -793,7 +713,9 @@ def _match_recognize_all_rows(
     )
     subsets = _parse_subsets(m.group("subset"))
     proj = [F.col(c) for c in df.columns]
-    for fn, var, col, alias, final in specs:
+    # final=True pins the whole-match value on every row (SQL:2016 FINAL
+    # keyword; the default here is RUNNING)
+    for fn, var, col, alias, _off, final in aggs:
         cond = (
             F.col("__var").isin(*subsets[var])
             if var in subsets
@@ -808,16 +730,16 @@ def _match_recognize_all_rows(
             "MAX": F.max(val),
         }[fn]
         proj.append(expr.over(finw if final else runw).alias(alias))
-    if cls_alias is not None:
-        proj.append(F.col("__var").alias(cls_alias))
-    if mn_alias is not None:
-        proj.append(F.col("__mn").alias(mn_alias))
-    if mrt_alias is not None:
+    if "CLASSIFIER" in fn0:
+        proj.append(F.col("__var").alias(fn0["CLASSIFIER"]))
+    if "MATCH_NUMBER" in fn0:
+        proj.append(F.col("__mn").alias(fn0["MATCH_NUMBER"]))
+    if "MATCH_ROWTIME" in fn0:
         # RUNNING rowtime: the CURRENT row's order value (row-grain
         # output advances the match rowtime row by row)
-        proj.append(F.col(order).alias(mrt_alias))
-    if mpt_alias is not None:
-        proj.append(F.current_timestamp().alias(mpt_alias))
+        proj.append(F.col(order).alias(fn0["MATCH_ROWTIME"]))
+    if "MATCH_PROCTIME" in fn0:
+        proj.append(F.current_timestamp().alias(fn0["MATCH_PROCTIME"]))
     return joined.select(*proj)
 
 
@@ -856,50 +778,24 @@ def match_recognize(df: DataFrame, sql: str) -> DataFrame:
     from pyspark.sql import Window
 
     m = _MR.search(sql)
-    part, order, pat, navs, bounds = _parse_mr(sql)
+    part, order, pat, navs = _parse_mr(sql)
+    # the CEP pre-gate inside cep_match_batch runs AFTER the lag/lead
+    # columns exist, so PREV/NEXT still see every row of the partition
     nfa_in = _with_nav_columns(df, part, order, navs)
-    nfa_in = _pregate(nfa_in, part, pat, bounds)
-    if (m.group("rows") or "").upper().startswith("ALL"):
-        return _match_recognize_all_rows(df, nfa_in, sql, m, part, order, pat)
-    items = _split_measures(m.group("measures"))
-    plain: list[tuple[str, str, str]] = []
-    # per variable: (fn, col, alias, offset)
+    all_rows = (m.group("rows") or "").upper().startswith("ALL")
+    aggs, plain, fn0 = _parse_measures(m.group("measures"), all_rows)
+    if all_rows:
+        return _match_recognize_all_rows(df, nfa_in, m, part, order, pat, aggs, fn0)
+    # per variable: (fn, col, alias, offset); RUNNING|FINAL both legal
+    # here: ONE ROW PER MATCH evaluates at the final row where RUNNING ==
+    # FINAL
     var_aggs: dict[str, list[tuple[str, str, str, int]]] = {}
-    cls_alias = mn_alias = mrt_alias = mpt_alias = None
-    for it in items:
-        am = _M_AGG.match(it)
-        if am:
-            _prefix, fn, var, col, off, alias = am.groups()
-            off = int(off) if off else 0
-            if off and fn.upper() not in ("FIRST", "LAST"):
-                raise ValueError(
-                    f"offset argument only valid on FIRST/LAST: {it!r}"
-                )
-            # RUNNING|FINAL both legal here: ONE ROW PER MATCH evaluates
-            # at the final row where RUNNING == FINAL
-            var_aggs.setdefault(var, []).append((fn.upper(), col, alias, off))
-            continue
-        pm = _M_PLAIN.match(it)
-        if pm:
-            plain.append(pm.groups())
-            continue
-        cm = _M_CLS.match(it)
-        if cm:
-            cls_alias = cm.group(1)
-            continue
-        nm = _M_MN.match(it)
-        if nm:
-            mn_alias = nm.group(1)
-            continue
-        rt = _M_MRT.match(it)
-        if rt:
-            mrt_alias = rt.group(1)
-            continue
-        pt = _M_MPT.match(it)
-        if pt:
-            mpt_alias = pt.group(1)
-            continue
-        raise ValueError(f"unsupported MEASURES item: {it!r}")
+    for fn, var, col, alias, off, _final in aggs:
+        var_aggs.setdefault(var, []).append((fn, col, alias, off))
+    cls_alias = fn0.get("CLASSIFIER")
+    mn_alias = fn0.get("MATCH_NUMBER")
+    mrt_alias = fn0.get("MATCH_ROWTIME")
+    mpt_alias = fn0.get("MATCH_PROCTIME")
     need_vars = bool(var_aggs) or cls_alias is not None
     out = cep_match_batch(
         nfa_in, pat, key_col=part, time_col=order, include_vars=need_vars

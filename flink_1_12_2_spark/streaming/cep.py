@@ -188,10 +188,11 @@ class Step:
     # expression string over the event columns, e.g. "value > 50"): a
     # necessary condition the user PROMISES is implied by ``pred`` (rows
     # failing it can never match the step, for any match context). Enables
-    # the vectorized candidate pre-gate (:func:`cep_pregate`) — the same
-    # optimization the SQL MATCH_RECOGNIZE front door derives automatically
-    # from DEFINE clauses (sql/match_recognize._pregate). A string, not a
-    # Column, so the Step stays picklable into the pandas workers.
+    # the vectorized candidate pre-gate (:func:`cep_pregate`). Set by
+    # :meth:`Pattern.bound`, and by the SQL MATCH_RECOGNIZE front end from
+    # each DEFINE clause's row-local atoms (sql/match_recognize._parse_mr).
+    # A string, not a Column, so the Step stays picklable into the pandas
+    # workers and a Pattern can be built without a SparkSession.
     bound_sql: str | None = None
 
     @property
@@ -422,11 +423,10 @@ class Pattern:
         Python predicate (rows failing it can never match the step). The
         runtime uses it only to pre-filter candidates JVM-side before the
         Python NFA (:func:`cep_pregate`) — declared bounds never change the
-        match set, provided the implication holds. The programmatic analogue
-        of what the SQL front door derives from DEFINE clauses
-        (sql/match_recognize._pregate); Flink's Pattern API has no such
-        hook, so every row crosses into the CEP operator there
-        (CepOperator.java processElement)."""
+        match set, provided the implication holds. The SQL front end sets
+        the same field from DEFINE clauses (sql/match_recognize._parse_mr);
+        Flink's Pattern API has no such hook, so every row crosses into the
+        CEP operator there (CepOperator.java processElement)."""
         self.steps[-1].bound_sql = sql
         return self
 
@@ -952,6 +952,21 @@ def _match_events(
     return matches, {"branches": branches}
 
 
+def _match_frame(key_val, recs: list[tuple], with_vars: bool = False):
+    """One key's (first_eid, last_eid, first_ts, last_ts[, vars_json])
+    records → the :data:`CEP_OUTPUT` frame (plus ``vars_json``)."""
+    out = {
+        "user_id": [key_val] * len(recs),
+        "first_event_id": [r[0] for r in recs],
+        "last_event_id": [r[1] for r in recs],
+        "first_ts_us": [r[2] for r in recs],
+        "last_ts_us": [r[3] for r in recs],
+    }
+    if with_vars:
+        out["vars_json"] = [r[4] for r in recs]
+    return pd.DataFrame(out)
+
+
 def _rows_from_pdf(pdf, time_col: str) -> list[dict]:
     """Arrow batch → NFA row dicts: derive microsecond event time when the
     source didn't attach ``ts_us``, and sort by (ts_us, event_id) — the
@@ -989,9 +1004,12 @@ def cep_pregate(
     key_gate: bool = False,
     sentinel_exempt: bool = False,
 ) -> DataFrame:
-    """Vectorized candidate pre-gate for the programmatic ``Pattern`` path:
-    Catalyst filters evaluated BEFORE rows cross into the Python NFA, built
-    from the per-step upper bounds declared via :meth:`Pattern.bound`.
+    """The engine's one vectorized CEP candidate pre-gate: Catalyst filters
+    evaluated BEFORE rows cross into the Python NFA, built from the
+    per-step upper bounds in ``Step.bound_sql`` — declared via
+    :meth:`Pattern.bound`, or derived from DEFINE clauses by the SQL
+    MATCH_RECOGNIZE front end, whose batch and streaming paths both run
+    through here.
     Byte-identical match output by construction (bounds are necessary
     conditions of the predicates); a pure optimization, a no-op when no/not
     enough bounds are declared.
@@ -1017,7 +1035,7 @@ def cep_pregate(
        first consumed row always matches a start step, so a key with no
        such row yields zero matches regardless of what the other steps
        observe. One window max over the NFA's own partitioning key — no
-       extra exchange (mirrors sql/match_recognize._pregate).
+       extra exchange.
 
     NOT applied to :func:`cep_timed_out_partials`: the row gate can
     reclassify an expired partial as pending-at-end-of-input (both are
@@ -1060,9 +1078,10 @@ def cep_pregate(
         if starts and all(b is not None for b in starts):
             from flink_1_12_2_spark.session import pinned_repartition
 
-            # pin the key partitioning BEFORE the window (see
-            # sql/match_recognize._pregate — AQE byte-coalescing must not
-            # size the downstream Python stage)
+            # pin the key partitioning BEFORE the window: the window's own
+            # ENSURE_REQUIREMENTS exchange is AQE-coalescible, and a later
+            # pin would collapse as a no-op — leaving the window AND the
+            # downstream Python NFA on the byte-coalesced partitions
             return (
                 pinned_repartition(events, key_col)
                 .withColumn(
@@ -1111,16 +1130,7 @@ def cep_match_batch(
         rows = _rows_from_pdf(pdf, time_col)
         matches, _ = _match_events(rows, pattern, None)
         key_val = rows[0][key_col] if rows else None
-        out = {
-            "user_id": [key_val] * len(matches),
-            "first_event_id": [m[0] for m in matches],
-            "last_event_id": [m[1] for m in matches],
-            "first_ts_us": [m[2] for m in matches],
-            "last_ts_us": [m[3] for m in matches],
-        }
-        if with_vars:
-            out["vars_json"] = [m[4] for m in matches]
-        return pd.DataFrame(out)
+        return _match_frame(key_val, matches, with_vars)
 
     events = cep_pregate(events, pattern, key_col, key_gate=True)
     return _keyed_apply(events, key_col, fn, schema)
@@ -1233,16 +1243,7 @@ def cep_timed_out_partials(
         rows = _rows_from_pdf(pdf, time_col)
         touts: list[tuple] = []
         _match_events(rows, pattern, None, timeouts=touts)
-        key_val = rows[0][key_col] if rows else None
-        return pd.DataFrame(
-            {
-                "user_id": [key_val] * len(touts),
-                "first_event_id": [t[0] for t in touts],
-                "last_event_id": [t[1] for t in touts],
-                "first_ts_us": [t[2] for t in touts],
-                "last_ts_us": [t[3] for t in touts],
-            }
-        )
+        return _match_frame(rows[0][key_col] if rows else None, touts)
 
     return _keyed_apply(events, key_col, fn, CEP_OUTPUT)
 
@@ -1311,15 +1312,6 @@ def cep_pattern_matches(
         rows.sort(key=lambda d: (d["ts_us"], d["event_id"]))
         matches, new_state = _match_events(rows, pattern, partial)
         new_state["pending"] = hold
-        out = pd.DataFrame(
-            {
-                "user_id": [key[0]] * len(matches),
-                "first_event_id": [m[0] for m in matches],
-                "last_event_id": [m[1] for m in matches],
-                "first_ts_us": [m[2] for m in matches],
-                "last_ts_us": [m[3] for m in matches],
-            }
-        )
-        return out, new_state, None
+        return _match_frame(key[0], matches), new_state, None
 
     return keyed_state_apply(events, [key_col], fold, CEP_OUTPUT, "append")

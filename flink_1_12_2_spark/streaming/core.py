@@ -12,6 +12,8 @@ rows, which is exactly Flink's stream⇄table duality argument).
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
 import tempfile
 import uuid
@@ -57,6 +59,18 @@ def _static_schema(spark: SparkSession, path: str):
     return schema
 
 
+def _with_ts_us(df: DataFrame) -> DataFrame:
+    """Add ``ts_us`` (the timezone-independent event-time micros) and
+    rebuild ``ts`` from it as TIMESTAMP (LTZ) — watermarks require LTZ. A
+    bigint ``ts`` holds the parquet nanos (``nanosAsLong``)."""
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts_us", F.expr("ts div 1000"))
+    else:
+        # NTZ micros: session tz is UTC so NTZ→LTZ keeps the wall clock
+        df = df.withColumn("ts_us", F.unix_micros(F.col("ts").cast("timestamp")))
+    return df.withColumn("ts", F.timestamp_micros(F.col("ts_us")))
+
+
 def stream_events(
     spark: SparkSession,
     sf_dir: str,
@@ -85,13 +99,7 @@ def stream_events(
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )
-    if dict(sdf.dtypes).get("ts") == "bigint":
-        sdf = sdf.withColumn("ts_us", F.expr("ts div 1000"))
-    else:
-        # NTZ micros: session tz is UTC so NTZ→LTZ keeps the wall clock
-        sdf = sdf.withColumn("ts_us", F.unix_micros(F.col("ts").cast("timestamp")))
-    # watermarks require TIMESTAMP (LTZ) — rebuild ts from the micros value
-    sdf = sdf.withColumn("ts", F.timestamp_micros(F.col("ts_us")))
+    sdf = _with_ts_us(sdf)
     if watermark:
         sdf = sdf.withWatermark("ts", watermark)
     return sdf
@@ -175,6 +183,44 @@ def _tag_ntile_chunks(
     return out, local  # (tagged frame, persisted base to unpersist)
 
 
+def _static_events(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
+    """The events table as a batch frame with ``ts_us``/``ts`` converted
+    (:func:`_with_ts_us`), plus the raw ``ts`` type the split-dir cache
+    keys include."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    static = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    return _with_ts_us(static), dict(static.dtypes).get("ts", "?")
+
+
+def _write_sentinels(static: DataFrame, split_dir: str, n_files: int) -> None:
+    """Two trailing split files of one far-future row per user
+    (``event_id = -1``, every other column NULL): the first raises the
+    watermark past every real row, the second delivers a batch to every
+    key under it."""
+    other = [c for c in static.columns if c not in ("event_id", "ts", "user_id", "ts_us")]
+    sent = static.select("user_id").distinct().select(
+        F.lit(-1).alias("event_id"),
+        F.timestamp_micros(F.lit(SENTINEL_TS_US)).alias("ts"),
+        "user_id",
+        *[F.lit(None).cast(dict(static.dtypes)[c]).alias(c) for c in other],
+        F.lit(SENTINEL_TS_US).alias("ts_us"),
+    ).select(*static.columns)
+    for j in range(2):
+        sent.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(split_dir, f"part_{n_files + j}_sentinel")
+        )
+
+
+def _read_split(spark: SparkSession, schema, split_dir: str) -> DataFrame:
+    """Stream a split dir one file per micro-batch, in file order."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("recursiveFileLookup", "true")
+        .parquet(split_dir)
+    )
+
+
 def stream_events_multibatch(
     spark: SparkSession,
     sf_dir: str,
@@ -195,24 +241,9 @@ def stream_events_multibatch(
     Flink emitting ``MAX_WATERMARK`` at end of input so event-time timers
     flush (StreamSourceContexts / Watermark.MAX_WATERMARK semantics).
     """
-    import glob
-    import hashlib as _hl
-
-    from pyspark.sql import functions as F2
-
     # materialize the static table with ts converted, split in time order
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    raw_ts_type = dict(static.dtypes).get("ts", "?")
-    if raw_ts_type == "bigint":
-        static = static.withColumn("ts_us", F2.expr("ts div 1000"))
-    else:
-        static = static.withColumn(
-            "ts_us", F2.unix_micros(F2.col("ts").cast("timestamp"))
-        )
-    # watermarks require TIMESTAMP (LTZ) — rebuild ts from the micros value
-    static = static.withColumn("ts", F2.timestamp_micros(F2.col("ts_us")))
-    key = _hl.md5(
+    static, raw_ts_type = _static_events(spark, sf_dir)
+    key = hashlib.md5(
         f"{sf_dir}|{n_files}|{flush_sentinels}|{raw_ts_type}|v3".encode()
     ).hexdigest()[:8]
     split_dir = os.path.join(tempfile.gettempdir(), f"events_split_{key}_{n_files}")
@@ -235,31 +266,15 @@ def stream_events_multibatch(
         # micro-batch; a production splitter would write chunk DIRECTORIES
         # with per-range parallel files instead.
         for i in range(n_files):
-            tagged.filter(F2.col("__file") == i).drop(
+            tagged.filter(F.col("__file") == i).drop(
                 "__file", "__rank"
             ).coalesce(1).write.mode("overwrite").parquet(
                 os.path.join(split_dir, f"part_{i}")
             )
         split_base.unpersist()
         if flush_sentinels:
-            other = [c for c in static.columns if c not in ("event_id", "ts", "user_id", "ts_us")]
-            sent = static.select("user_id").distinct().select(
-                F2.lit(-1).alias("event_id"),
-                F2.timestamp_micros(F2.lit(SENTINEL_TS_US)).alias("ts"),
-                "user_id",
-                *[F2.lit(None).cast(dict(static.dtypes)[c]).alias(c) for c in other],
-                F2.lit(SENTINEL_TS_US).alias("ts_us"),
-            ).select(*static.columns)
-            for j in range(2):
-                sent.coalesce(1).write.mode("overwrite").parquet(
-                    os.path.join(split_dir, f"part_{n_files + j}_sentinel")
-                )
-    sdf = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(split_dir)
-    )
+            _write_sentinels(static, split_dir, n_files)
+    sdf = _read_split(spark, static.schema, split_dir)
     if watermark:
         sdf = sdf.withWatermark("ts", watermark)
     return sdf
@@ -280,54 +295,23 @@ def stream_events_interleaved(
     so buffered rows flush. The default 30-day watermark delay keeps every
     real row inside the lateness allowance (nothing is dropped; ordering is
     entirely the operator's job)."""
-    import glob
-    import hashlib as _hl
-
-    from pyspark.sql import functions as F2
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    raw_ts_type = dict(static.dtypes).get("ts", "?")
-    if raw_ts_type == "bigint":
-        static = static.withColumn("ts_us", F2.expr("ts div 1000"))
-    else:
-        static = static.withColumn(
-            "ts_us", F2.unix_micros(F2.col("ts").cast("timestamp"))
-        )
-    static = static.withColumn("ts", F2.timestamp_micros(F2.col("ts_us")))
-    key = _hl.md5(
+    static, raw_ts_type = _static_events(spark, sf_dir)
+    key = hashlib.md5(
         f"{sf_dir}|interleave|{n_files}|{raw_ts_type}|v1".encode()
     ).hexdigest()[:8]
     split_dir = os.path.join(tempfile.gettempdir(), f"events_ileave_{key}")
     if not glob.glob(os.path.join(split_dir, "part_*")):
         os.makedirs(split_dir, exist_ok=True)
         for i in range(n_files):
-            static.filter(F2.col("event_id") % n_files == i).coalesce(
+            static.filter(F.col("event_id") % n_files == i).coalesce(
                 1
             ).write.mode("overwrite").parquet(
                 os.path.join(split_dir, f"part_{i}")
             )
-        other = [
-            c for c in static.columns if c not in ("event_id", "ts", "user_id", "ts_us")
-        ]
-        sent = static.select("user_id").distinct().select(
-            F2.lit(-1).alias("event_id"),
-            F2.timestamp_micros(F2.lit(SENTINEL_TS_US)).alias("ts"),
-            "user_id",
-            *[F2.lit(None).cast(dict(static.dtypes)[c]).alias(c) for c in other],
-            F2.lit(SENTINEL_TS_US).alias("ts_us"),
-        ).select(*static.columns)
-        for j in range(2):
-            sent.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(split_dir, f"part_{n_files + j}_sentinel")
-            )
-    sdf = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(split_dir)
+        _write_sentinels(static, split_dir, n_files)
+    return _read_split(spark, static.schema, split_dir).withWatermark(
+        "ts", watermark
     )
-    return sdf.withWatermark("ts", watermark)
 
 
 def run_update_batches(

@@ -291,3 +291,24 @@ def test_jdbc_lookup_uncached_never_forces_broadcast(tmp_path):
     jdbc_write(spark.range(5).selectExpr("id AS k"), url, "dim_nc")
     _, bc = jdbc_lookup_snapshot(spark, url, "dim_nc")
     assert bc is False
+
+
+def test_unknown_value_format_same_error_stream_and_batch(spark, tmp_path):
+    """Stream and batch topic reads share one value decoder: an unknown
+    format raises the same message from both, listing every supported
+    format."""
+    import pytest
+
+    from flink_1_12_2_spark.sources import kafka_emu
+
+    topic = str(tmp_path / "t_fmt")
+    os.makedirs(os.path.join(topic, "batch-0"))
+    with open(os.path.join(topic, "batch-0", "part-0.txt"), "w") as f:
+        f.write('{"id": 1}\n')
+    msgs = []
+    for read in (kafka_emu.read_topic_batch, kafka_emu.read_topic_stream):
+        with pytest.raises(ValueError) as exc:
+            read(spark, topic, "protobuf", "id bigint")
+        msgs.append(str(exc.value))
+    assert msgs[0] == msgs[1]
+    assert "(raw, json, debezium-json, canal-json, maxwell-json)" in msgs[0]

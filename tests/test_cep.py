@@ -3,6 +3,8 @@ the match function itself + end-to-end through applyInPandasWithState)."""
 
 from __future__ import annotations
 
+import pytest
+
 from flink_1_12_2_spark.streaming.cep import Pattern, _match_events
 
 
@@ -718,6 +720,58 @@ def test_match_recognize_stream_front_door(spark, sf_dir):
     assert len(stream_out) > 0
 
 
+_GATED_STREAM_SQL = """SELECT * FROM events MATCH_RECOGNIZE (
+     PARTITION BY user_id ORDER BY ts PATTERN (A B* (C | D))
+     WITHIN INTERVAL '6' HOUR
+     DEFINE A AS event_type = 'click',
+            B AS event_type = 'view' AND value > 10,
+            C AS event_type = 'purchase',
+            D AS event_type = 'signup' AND value IS NOT NULL)"""
+
+
+def test_match_recognize_stream_multibatch_is_gated(spark, sf_dir):
+    """Streaming MATCH_RECOGNIZE carries its DEFINE bounds on the Pattern,
+    so the shared CEP row gate filters the stream before the keyed NFA;
+    across micro-batches the matches equal the batch front door and the
+    pinned pre-gate output (count and digest of the sorted match rows)."""
+    import hashlib
+
+    from flink_1_12_2_spark.registry import load
+    from flink_1_12_2_spark.sql.match_recognize import (
+        match_recognize,
+        match_recognize_stream,
+    )
+    from flink_1_12_2_spark.streaming.core import (
+        run_to_memory,
+        stream_events_multibatch,
+    )
+
+    ev = stream_events_multibatch(spark, sf_dir, n_files=4)
+    matches = match_recognize_stream(ev, _GATED_STREAM_SQL)
+    plan = matches._jdf.queryExecution().analyzed().toString()
+    gate = [ln for ln in plan.splitlines() if "Filter" in ln]
+    assert any(
+        "click" in ln and "purchase" in ln and "view" in ln and "signup" in ln
+        for ln in gate
+    ), plan
+    stream_out = sorted(
+        map(tuple, run_to_memory(matches, output_mode="append").collect())
+    )
+    batch_out = sorted(
+        map(
+            tuple,
+            match_recognize(
+                load(spark, sf_dir, "events"), _GATED_STREAM_SQL
+            ).collect(),
+        )
+    )
+    assert stream_out == batch_out
+    # pinned from the streaming output before the front end's bounds
+    # reached the Pattern (the ungated run)
+    digest = hashlib.md5(repr(stream_out).encode()).hexdigest()
+    assert (len(stream_out), digest) == (46, "34e7784c711992782e516822bc4e0065")
+
+
 # ---- Flink AfterMatchSkipITCase scenario parity ---------------------------
 # (flink-libraries/flink-cep/src/test/java/.../nfa/AfterMatchSkipITCase.java
 # — the scenarios re-expressed on this NFA's surface; expected matches are
@@ -936,6 +990,96 @@ def test_iterative_condition_state_roundtrip():
     st = json.loads(json.dumps(st))  # payloads survive serialization
     m2, _ = _match_events(rows[1:], p, st)
     assert m1 == [] and m2 == [(1, 2, 10, 20)]
+
+
+def test_parse_match_recognize_needs_no_spark():
+    """The parser builds predicates and SQL bounds without a JVM: run in a
+    fresh interpreter that never starts a SparkContext, so the parse-only
+    tests above do not depend on an earlier test having started Spark."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+    from pathlib import Path
+
+    code = textwrap.dedent(
+        '''
+        from pyspark import SparkContext
+
+        from flink_1_12_2_spark.sql.match_recognize import parse_match_recognize
+
+        _, _, pat = parse_match_recognize(
+            """SELECT * FROM t MATCH_RECOGNIZE (
+                 PARTITION BY u ORDER BY ts PATTERN (A (B | C))
+                 DEFINE A AS t = 'a', B AS v > 1e3, C AS t = 'it''s')"""
+        )
+        assert SparkContext._active_spark_context is None
+        print(pat.steps[0].bound_sql)
+        print(pat.steps[1].bound_sql)
+        '''
+    )
+    repo = str(Path(__file__).resolve().parent.parent)
+    env = dict(os.environ, PYTHONPATH=repo)
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.splitlines() == [
+        "`t` = 'a'",
+        "(`t` = 'it\\'s') OR (`v` > CAST('1000.0' AS DOUBLE))",
+    ]
+
+
+@pytest.mark.parametrize(
+    "define, accepted, rejected",
+    [
+        # SQL-standard doubled quote inside a string literal
+        ("tag = 'it''s'", {"tag": "it's"}, {"tag": "it''s"}),
+        # a backslash is an ordinary character of a DEFINE literal (Spark's
+        # own string syntax would read 'a\b' as "a" + backspace)
+        ("tag = 'a\\b'", {"tag": "a\\b"}, {"tag": "a\x08"}),
+        # exponent notation: a float literal
+        ("value > 1e3", {"value": 1000.5}, {"value": 1000.0}),
+    ],
+)
+def test_match_recognize_define_literals(spark, define, accepted, rejected):
+    """A DEFINE literal is parsed once into the value the predicate
+    compares, and the SQL bound renders that same value: the gated front
+    door returns exactly the ungated NFA's matches on rows holding it."""
+    import copy
+
+    from flink_1_12_2_spark.sql.match_recognize import (
+        match_recognize,
+        parse_match_recognize,
+    )
+    from flink_1_12_2_spark.streaming.cep import cep_match_batch
+
+    sql = f"""SELECT * FROM t MATCH_RECOGNIZE (
+         PARTITION BY user_id ORDER BY ts_us PATTERN (A B)
+         DEFINE A AS {define}, B AS tag = 'end')"""
+    _, _, pat = parse_match_recognize(sql)
+    base = {"tag": "x", "value": 0.0}
+    assert pat.steps[0].pred({**base, **accepted}, None)
+    assert not pat.steps[0].pred({**base, **rejected}, None)
+    assert pat.steps[0].bound_sql is not None
+
+    rows = []
+    for user, payload in ((1, accepted), (2, rejected), (3, accepted)):
+        a = {**base, **payload}
+        rows.append((user, user * 10 + 1, user * 100 + 1, a["tag"], a["value"]))
+        rows.append((user, user * 10 + 2, user * 100 + 2, "end", 0.0))
+    df = spark.createDataFrame(
+        rows,
+        "user_id long, event_id long, ts_us long, tag string, value double",
+    )
+    ungated_pat = copy.deepcopy(pat)
+    for s in ungated_pat.steps:
+        s.bound_sql = None
+    gated = sorted(map(tuple, match_recognize(df, sql).collect()))
+    ungated = sorted(map(tuple, cep_match_batch(df, ungated_pat, time_col="ts_us").collect()))
+    assert gated == ungated
+    assert [m[0] for m in gated] == [1, 3]
 
 
 def test_match_recognize_define_iterative_and_numeric():
@@ -1506,9 +1650,9 @@ def test_match_rowtime_and_proctime_measures(spark):
 
 # ---------------------------------------------------------------------------
 # Vectorized candidate pre-gate for the programmatic Pattern path
-# (Pattern.bound → cep_pregate): the analogue of sql/match_recognize._pregate
-# for CEP.java-style fluent patterns, which Flink itself does not optimize
-# (CepOperator.java processElement sees every row).
+# (Pattern.bound → cep_pregate, the same gate MATCH_RECOGNIZE's DEFINE
+# bounds feed) for CEP.java-style fluent patterns, which Flink itself does
+# not optimize (CepOperator.java processElement sees every row).
 
 
 def _events_df(spark, sf_dir):
