@@ -287,7 +287,10 @@ class KeyedStream:
         """Keyed process function with state (KeyedProcessOperator parity):
         ``fold(key, rows, state, watermark_us) -> (out, new_state,
         newest_event_us)`` runs once per key and micro-batch over JSON value
-        state (see :mod:`flink_1_12_2_spark.streaming.keyed_state`)."""
+        state. ``rows`` is the key's rows of the micro-batch as a list of
+        dicts (column -> plain Python value, None for NULL) and ``out`` a
+        list of tuples in ``output_schema`` column order (see
+        :mod:`flink_1_12_2_spark.streaming.keyed_state`)."""
         return DataStream(
             keyed_state_apply(self.df, self.keys, fold, output_schema, output_mode)
         )

@@ -83,13 +83,25 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field
+from functools import cached_property
 from typing import Any, Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    IntegralType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
-from flink_1_12_2_spark.streaming.keyed_state import key_runs, keyed_state_apply
+from flink_1_12_2_spark.streaming.keyed_state import (
+    frame_rows,
+    keyed_state_apply,
+    output_frame,
+    split_by_key,
+)
 
 Predicate = Callable[..., bool]
 
@@ -103,6 +115,13 @@ class MatchContext:
     dominant iterative-condition family — comparisons against the match's
     earlier rows (``B.price > A.price``) — with state of two rows per
     variable per branch.
+
+    Branches keep these row payloads (``vfr``/``vlr``) only when some
+    predicate of the pattern takes the context or ``with_events()`` asks
+    for rows; otherwise a branch holds event ids and times only. A payload
+    is the row dict the predicates saw, shared by every branch that
+    consumed the row, not a copy — Flink's SharedBuffer keeps each event
+    once and branches reference it.
 
     With ``Pattern.with_events()``, branches additionally retain EVERY
     matched row per variable and ``ctx.events(var)`` returns the full list —
@@ -142,8 +161,10 @@ def _arity(pred) -> int:
         return 1
 
 
-def _test(pred: Predicate, row: dict, ctx: "MatchContext") -> bool:
-    return pred(row, ctx) if _arity(pred) >= 2 else pred(row)
+def _ctx_form(pred: Predicate) -> Callable[[dict, MatchContext], bool]:
+    """``pred`` as ``test(row, ctx)``, its arity read once."""
+    return pred if _arity(pred) >= 2 else (lambda row, ctx: pred(row))
+
 
 # Branch-set guard for patterns with no `within`: beyond this many live
 # branches per key the newest starts are dropped (with `within`, expiry
@@ -199,13 +220,31 @@ class Step:
     def is_loop(self) -> bool:
         return self.max_times is None or self.max_times > 1
 
-    def matching_alts(self, row: dict, ctx: "MatchContext") -> list[str]:
-        """Names of matching alternatives (a plain step matches as itself).
-        Two-argument predicates receive the match context (iterative
-        conditions)."""
+    # the predicates as ``test(row, ctx)``; two-argument predicates receive
+    # the match context (iterative conditions)
+    @cached_property
+    def test(self) -> Callable[[dict, MatchContext], bool]:
+        return _ctx_form(self.pred)
+
+    @cached_property
+    def until_test(self) -> Callable[[dict, MatchContext], bool] | None:
+        return None if self.until_pred is None else _ctx_form(self.until_pred)
+
+    @cached_property
+    def alt_tests(self) -> list[tuple[str, Callable]] | None:
+        return None if self.alts is None else [(n, _ctx_form(p)) for n, p in self.alts]
+
+    @property
+    def takes_ctx(self) -> bool:
+        """Whether any predicate of the step reads the match context."""
+        preds = [self.pred, self.until_pred, *(p for _, p in self.alts or ())]
+        return any(p is not None and _arity(p) >= 2 for p in preds)
+
+    def matching_alts(self, row: dict, ctx: MatchContext | None) -> list[str]:
+        """Names of matching alternatives (a plain step matches as itself)."""
         if self.alts is None:
-            return [self.name] if _test(self.pred, row, ctx) else []
-        return [n for n, p in self.alts if _test(p, row, ctx)]
+            return [self.name] if self.test(row, ctx) else []
+        return [n for n, t in self.alt_tests if t(row, ctx)]
 
 
 @dataclass
@@ -404,6 +443,7 @@ class Pattern:
         """Loop stopping condition (Pattern.java:237): a row firing ``pred``
         is never absorbed into the loop; the loop closes there."""
         self.steps[-1].until_pred = pred
+        self.steps[-1].__dict__.pop("until_test", None)  # cached form
         return self
 
     def greedy(self) -> "Pattern":
@@ -489,7 +529,10 @@ CEP_OUTPUT = StructType(
 
 def _new_branch(row: dict, pat: int = 0) -> dict:
     """A branch about to consume ``row`` as its first row. ``pat`` selects
-    the step sequence for sequence-set patterns (PERMUTE / alternation)."""
+    the step sequence for sequence-set patterns (PERMUTE / alternation).
+    Payload maps are added on the first consume, when the pattern keeps
+    them: ``vfr``/``vlr`` (var → FIRST/LAST matched row, for iterative
+    conditions)."""
     return {
         "first_eid": row["event_id"],
         "first_ts": row["ts_us"],
@@ -498,20 +541,14 @@ def _new_branch(row: dict, pat: int = 0) -> dict:
         "pat": pat,
         "vf": {},  # var → [eid, ts] of FIRST row mapped to it
         "vl": {},  # var → [eid, ts] of LAST row mapped to it
-        "vfr": {},  # var → FIRST matched row payload (iterative conditions)
-        "vlr": {},  # var → LAST matched row payload
     }
 
 
 def _copy_branch(br: dict) -> dict:
     nb = dict(br)
-    nb["vf"], nb["vl"] = dict(br["vf"]), dict(br["vl"])
-    nb["vfr"] = dict(br.get("vfr", {}))
-    nb["vlr"] = dict(br.get("vlr", {}))
-    if "vids" in br:
-        nb["vids"] = dict(br["vids"])
-    if "ve" in br:
-        nb["ve"] = dict(br["ve"])
+    for k in ("vf", "vl", "vfr", "vlr", "vids", "ve"):
+        if k in br:
+            nb[k] = dict(br[k])
     return nb
 
 
@@ -538,7 +575,7 @@ def _evolve(
     branch: dict,
     row: dict,
     steps: list[Step],
-    collect: tuple[bool, bool] = (False, False),
+    collect: tuple[bool, bool, bool] = (False, False, False),
 ) -> tuple[list[dict], list[dict], bool]:
     """Evolve one branch on one row.
 
@@ -546,11 +583,17 @@ def _evolve(
     ``successors`` — forked branches that consumed the row (non-final);
     ``completions`` — branches that consumed the final step (match done);
     ``survived_unchanged`` — the branch persists as-is (relaxed contiguity).
-    ``collect`` = (retain per-var event ids, retain per-var full rows)."""
-    ctx = MatchContext(
-        branch.get("vfr", {}),
-        branch.get("vlr", {}),
-        branch.get("ve", {}) if collect[1] else None,
+    ``collect`` = (retain per-var event ids, retain per-var full rows,
+    retain first/last row payloads); without payloads no predicate reads
+    the match context, so none is built."""
+    ctx = (
+        MatchContext(
+            branch.get("vfr", {}),
+            branch.get("vlr", {}),
+            branch.get("ve", {}) if collect[1] else None,
+        )
+        if collect[2]
+        else None
     )
     # strict negatives AT the cursor: tested exactly once, on the row
     # immediately following the previous consume
@@ -558,7 +601,7 @@ def _evolve(
     while step_idx < len(steps):
         s = steps[step_idx]
         if s.negative and s.strict_negative:
-            if _test(s.pred, row, ctx):
+            if s.test(row, ctx):
                 return [], [], False  # killed
             step_idx += 1  # satisfied permanently
         else:
@@ -582,20 +625,18 @@ def _evolve(
     # (kill checks) and consumable candidate steps; stop at the first step
     # that cannot be passed over. In-walk strict negatives are treated as
     # relaxed — exact one-row semantics apply only at the cursor.
-    kill_preds: list[Predicate] = []
+    kill_preds: list[Callable[[dict, MatchContext | None], bool]] = []
     candidates: list[int] = []
     loop_extend: int | None = None
     j = step_idx
     while j < len(steps):
         s = steps[j]
         if s.negative:
-            kill_preds.append(s.pred)
+            kill_preds.append(s.test)
             j += 1
             continue
         if j == step_idx and s.is_loop and loop_count > 0:
-            until_fired = s.until_pred is not None and _test(
-                s.until_pred, row, ctx
-            )
+            until_fired = s.until_pred is not None and s.until_test(row, ctx)
             if (s.max_times is None or loop_count < s.max_times) and not until_fired:
                 loop_extend = j
             if loop_count >= s.min_times:
@@ -605,9 +646,7 @@ def _evolve(
                 return [], [], False  # loop stopped under min → branch dies
             break
         if not (
-            s.is_loop
-            and s.until_pred is not None
-            and _test(s.until_pred, row, ctx)
+            s.is_loop and s.until_pred is not None and s.until_test(row, ctx)
         ):
             candidates.append(j)
         if s.min_times == 0 and not (s.is_loop and loop_count > 0):
@@ -626,14 +665,14 @@ def _consume_phase(
     steps: list[Step],
     step_idx: int,
     loop_count: int,
-    kill_preds: list[Predicate],
+    kill_preds: list[Callable[[dict, MatchContext | None], bool]],
     candidates: list[int],
     loop_extend: int | None,
-    ctx: MatchContext,
-    collect: tuple[bool, bool] = (False, False),
+    ctx: MatchContext | None,
+    collect: tuple[bool, bool, bool] = (False, False, False),
 ) -> tuple[list[dict], list[dict], bool]:
     """Second half of :func:`_evolve`: apply kills, fork consumptions."""
-    if any(_test(p, row, ctx) for p in kill_preds):
+    if any(t(row, ctx) for t in kill_preds):
         return [], [], False  # killed by a relaxed negative
     extend_names = (
         steps[loop_extend].matching_alts(row, ctx)
@@ -653,22 +692,22 @@ def _consume_phase(
             "pat": branch.get("pat", 0),
             "vf": dict(branch["vf"]),
             "vl": dict(branch["vl"]),
-            "vfr": dict(branch.get("vfr", {})),
-            "vlr": dict(branch.get("vlr", {})),
         }
         pos = [row["event_id"], row["ts_us"]]
         nb["vf"].setdefault(var, pos)
         nb["vl"][var] = pos
-        safe = _json_safe(row)
-        nb["vfr"].setdefault(var, safe)
-        nb["vlr"][var] = safe
+        if collect[2]:
+            nb["vfr"] = dict(branch.get("vfr", {}))
+            nb["vlr"] = dict(branch.get("vlr", {}))
+            nb["vfr"].setdefault(var, row)
+            nb["vlr"][var] = row
         if collect[0] or collect[1]:
             vids = {k: list(v) for k, v in branch.get("vids", {}).items()}
             vids.setdefault(var, []).append(row["event_id"])
             nb["vids"] = vids
         if collect[1]:
             ve = {k: list(v) for k, v in branch.get("ve", {}).items()}
-            ve.setdefault(var, []).append(safe)
+            ve.setdefault(var, []).append(row)
             nb["ve"] = ve
         s = steps[j]
         if s.is_loop:
@@ -750,7 +789,10 @@ def _consume_phase(
             return [nb], [], False
         return [], [], False  # under min → killed
     # relaxed contiguity: the row is skipped; persist (with any strict
-    # negatives at the cursor now permanently satisfied)
+    # negatives at the cursor now permanently satisfied). Branches are never
+    # changed in place, so an unchanged one is kept, not copied.
+    if step_idx == branch["step_idx"]:
+        return [branch], [], True
     nb = _copy_branch(branch)
     nb["step_idx"], nb["loop_count"] = step_idx, loop_count
     return [nb], [], True
@@ -789,6 +831,8 @@ def _match_events(
     collect = (
         pattern.collect_ids or pattern.collect_events,
         pattern.collect_events,
+        pattern.collect_events
+        or any(s.takes_ctx for steps in seqs for s in steps),
     )
     matches: list[tuple] = []
     branches: list[dict] = list(state["branches"]) if state and "branches" in state else []
@@ -952,47 +996,15 @@ def _match_events(
     return matches, {"branches": branches}
 
 
-def _match_frame(key_val, recs: list[tuple], with_vars: bool = False):
-    """One key's (first_eid, last_eid, first_ts, last_ts[, vars_json])
-    records → the :data:`CEP_OUTPUT` frame (plus ``vars_json``)."""
-    out = {
-        "user_id": [key_val] * len(recs),
-        "first_event_id": [r[0] for r in recs],
-        "last_event_id": [r[1] for r in recs],
-        "first_ts_us": [r[2] for r in recs],
-        "last_ts_us": [r[3] for r in recs],
-    }
-    if with_vars:
-        out["vars_json"] = [r[4] for r in recs]
-    return pd.DataFrame(out)
-
-
-def _rows_from_pdf(pdf, time_col: str) -> list[dict]:
-    """Arrow batch → NFA row dicts: derive microsecond event time when the
-    source didn't attach ``ts_us``, and sort by (ts_us, event_id) — the
-    shared row-prep for every batch CEP closure."""
-    import pandas as pd  # noqa: F811 (worker-side import)
-
-    rows = []
-    cols = list(pdf.columns)
-    # name=None → plain tuples zipped with the real column names:
-    # namedtuple itertuples silently RENAMES any column starting with an
-    # underscore (e.g. the __nav_* PREV/NEXT lag columns) to positional
-    # _N fields, losing it for the predicates — and plain tuples are
-    # faster to build anyway
-    for vals in pdf.itertuples(index=False, name=None):
-        # Arrow/pandas surfaces SQL NULL in double columns as NaN; the
-        # NFA's row model (and SQL three-valued logic: IS NULL atoms,
-        # null-rejecting comparisons incl. <>) needs real None — NaN
-        # would satisfy `a != b` and fail `IS NULL`
-        d = {
-            c: (None if isinstance(v, float) and v != v else v)
-            for c, v in zip(cols, vals)
-        }
-        if "ts_us" not in d or d["ts_us"] is None:
-            d["ts_us"] = int(pd.Timestamp(d[time_col]).value // 1000)
-        d["ts_us"] = int(d["ts_us"])
-        rows.append(d)
+def _nfa_rows(rows: list[dict], time_col: str) -> list[dict]:
+    """A key's rows made ready for the NFA, in place: ``ts_us`` as integer
+    µs (derived from ``time_col`` when the source did not attach it), and
+    sorted by (ts_us, event_id) — the row prep every CEP path shares."""
+    for d in rows:
+        ts = d.get("ts_us")
+        d["ts_us"] = (
+            int(pd.Timestamp(d[time_col]).value // 1000) if ts is None else int(ts)
+        )
     rows.sort(key=lambda d: (d["ts_us"], d["event_id"]))
     return rows
 
@@ -1111,8 +1123,6 @@ def cep_match_batch(
     CLASSIFIER read it)."""
     import copy
 
-    import pandas as pd  # noqa: F811 (worker-side import)
-
     if include_vars and not pattern.collect_ids:
         # shallow copy: never mutate the CALLER's pattern (reuse of the
         # same Pattern object in a later call must keep its behavior)
@@ -1126,19 +1136,17 @@ def cep_match_batch(
         else CEP_OUTPUT
     )
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = _rows_from_pdf(pdf, time_col)
-        matches, _ = _match_events(rows, pattern, None)
-        key_val = rows[0][key_col] if rows else None
-        return _match_frame(key_val, matches, with_vars)
+    def fn(key, rows: list[dict]) -> list[tuple]:
+        matches, _ = _match_events(_nfa_rows(rows, time_col), pattern, None)
+        return [(key, *m) for m in matches]
 
     events = cep_pregate(events, pattern, key_col, key_gate=True)
     return _keyed_apply(events, key_col, fn, schema)
 
 
 def _keyed_apply(events: DataFrame, key_col: str, fn, schema) -> DataFrame:
-    """Run ``fn`` once per key — the per-group contract of
-    ``groupBy(key).applyInPandas(fn, schema)`` — over a key-clustered,
+    """Run ``fn(key, rows) -> list[tuple]`` once per key — the per-group
+    contract of ``groupBy(key).applyInPandas`` — over a key-clustered,
     key-contiguous ``mapInPandas`` stream instead of Spark's grouped-map
     operator.
 
@@ -1146,44 +1154,32 @@ def _keyed_apply(events: DataFrame, key_col: str, fn, schema) -> DataFrame:
     both sides of the Arrow boundary (per-group batch slice, per-group
     pandas assembly, per-group result frame). With thousands of small keys
     that machinery dominates the NFA stage. Here the rows cross as
-    ordinary Arrow batches (one pandas frame per batch), the sorted batch
-    is split into key runs by ``keyed_state.key_runs``, and one OUTPUT frame is
-    emitted per input batch instead of per key. Null-body twin over the
-    MR bench input (1,500 keys / 66K rows, interleaved ×4):
-    applyInPandas 0.873-1.229 s vs this path 0.712-1.017 s.
+    ordinary Arrow batches; each batch becomes row dicts once
+    (``keyed_state.frame_rows``) and is split by key
+    (``keyed_state.split_by_key``), the same row model and split as the
+    streaming operators, and one OUTPUT frame is emitted per input batch
+    instead of per key. Null-body twin over the MR bench input (1,500
+    keys / 66K rows, interleaved ×4): applyInPandas 0.873-1.229 s vs this
+    path 0.712-1.017 s.
 
     Contract kept: the pinned repartition clusters each key into exactly
     one partition (full shuffle parallelism — AQE byte-coalescing must
     not fold the Python stage, see session.pinned_repartition) and the
     within-partition sort on ``key_col`` makes each key's rows contiguous,
-    so ``fn`` still receives every row of a key in one frame. Row order
-    within the key is arbitrary — every NFA closure re-sorts by
-    (ts_us, event_id) internally (``_rows_from_pdf``) exactly as it did
-    under grouped-map. A NULL key raises, as Flink's ``keyBy`` rejects a
-    null key.
+    so ``fn`` still receives every row of a key in one call, even when the
+    key spans Arrow batches. Row order within the key is arbitrary — every
+    NFA closure re-sorts by (ts_us, event_id) (``_nfa_rows``). A NULL key
+    raises, as Flink's ``keyBy`` rejects a null key.
     """
     from flink_1_12_2_spark.session import pinned_repartition
 
+    integral = {
+        f.name for f in events.schema.fields if isinstance(f.dataType, IntegralType)
+    }
+
     def runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry_key = None
-        carry_parts: list[pd.DataFrame] = []
-        outs: list[pd.DataFrame] = []
-
-        def flush_group():
-            nonlocal carry_key, carry_parts
-            if carry_key is None:
-                return
-            pdf = (
-                carry_parts[0]
-                if len(carry_parts) == 1
-                else pd.concat(carry_parts, ignore_index=True)
-            )
-            out = fn(pdf)
-            if out is not None and len(out):
-                outs.append(out)
-            carry_key = None
-            carry_parts = []
-
+        # the last key of a batch may continue in the next one
+        carry_key, carry_rows = None, []
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -1192,26 +1188,22 @@ def _keyed_apply(events: DataFrame, key_col: str, fn, schema) -> DataFrame:
                     f"keyed CEP: NULL {key_col!r} key; filter NULL keys out "
                     "before matching"
                 )
-            for k, part in key_runs(pdf, [key_col]):
-                if carry_key is not None and k == carry_key:
-                    carry_parts.append(part)  # key spans Arrow batches
-                else:
-                    flush_group()
-                    carry_key, carry_parts = k, [part]
-            # emit completed groups per input batch (bounds worker memory;
-            # the carry group may continue into the next batch)
-            if outs:
-                yield (
-                    outs[0]
-                    if len(outs) == 1
-                    else pd.concat(outs, ignore_index=True)
-                )
-                outs = []
-        flush_group()
-        if outs:
-            yield (
-                outs[0] if len(outs) == 1 else pd.concat(outs, ignore_index=True)
-            )
+            out: list[tuple] = []
+            runs = split_by_key(frame_rows(pdf, integral), [key_col])
+            for (k,), rows in runs.items():
+                if k == carry_key:
+                    carry_rows += rows
+                    continue
+                if carry_key is not None:
+                    out += fn(carry_key, carry_rows)
+                carry_key, carry_rows = k, rows
+            # emit completed keys per input batch (bounds worker memory)
+            if out:
+                yield output_frame(out, schema)
+        if carry_key is not None:
+            out = fn(carry_key, carry_rows)
+            if out:
+                yield output_frame(out, schema)
 
     return (
         pinned_repartition(events, key_col)
@@ -1233,34 +1225,16 @@ def cep_timed_out_partials(
     pending at end-of-input (= Flink's MAX_WATERMARK flush). One row per
     timed-out partial: (key, first row, last CONSUMED row, their event
     times). Requires a ``within`` window."""
-    import pandas as pd  # noqa: F811 (worker-side import)
-
     pattern.validate()
     if pattern.within_us is None:
         raise ValueError("timeout side output requires Pattern.within(...)")
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = _rows_from_pdf(pdf, time_col)
+    def fn(key, rows: list[dict]) -> list[tuple]:
         touts: list[tuple] = []
-        _match_events(rows, pattern, None, timeouts=touts)
-        return _match_frame(rows[0][key_col] if rows else None, touts)
+        _match_events(_nfa_rows(rows, time_col), pattern, None, timeouts=touts)
+        return [(key, *t) for t in touts]
 
     return _keyed_apply(events, key_col, fn, CEP_OUTPUT)
-
-
-def _json_safe(d: dict) -> dict:
-    """Row payload → JSON-storable dict (numpy scalars → python, drop
-    non-primitive columns like the Timestamp ts — ts_us carries the time)."""
-    out = {}
-    for k, v in d.items():
-        if hasattr(v, "item"):  # numpy scalar
-            v = v.item()
-        if isinstance(v, float) and v != v:
-            v = None  # pandas NULL→NaN: restore SQL NULL semantics (and
-            # strict JSON — NaN is not valid JSON state payload)
-        if isinstance(v, (int, float, str, bool)) or v is None:
-            out[k] = v
-    return out
 
 
 def cep_pattern_matches(
@@ -1290,28 +1264,35 @@ def cep_pattern_matches(
     events = cep_pregate(
         events, pattern, key_col, key_gate=False, sentinel_exempt=True
     )
+    return keyed_state_apply(
+        events, [key_col], _cep_fold(pattern, time_col, buffer_to_watermark),
+        CEP_OUTPUT, "append",
+    )
 
-    def fold(key, pdf, raw, watermark_us):
+
+def _cep_fold(pattern: Pattern, time_col: str, buffer_to_watermark: bool):
+    """The keyed-state fold of :func:`cep_pattern_matches`: the key's
+    state is its live branch set plus, with ``buffer_to_watermark``, the
+    rows still above the watermark (``pending``)."""
+
+    def fold(key, rows, raw, watermark_us):
         if not isinstance(raw, dict) or "branches" not in raw:
             raw = None  # unknown/legacy state → fresh
         partial = {"branches": raw["branches"]} if raw else None
-        rows: list[dict] = list(raw.get("pending", [])) if raw else []
-        for r in pdf.itertuples(index=False):
-            d = r._asdict()
-            if d.get("event_id", 0) is not None and int(d["event_id"]) < 0:
-                continue  # sentinel flush rows carry no data
-            if "ts_us" not in d:  # attached by stream_events normally
-                d["ts_us"] = int(pd.Timestamp(d[time_col]).value // 1000)
-            d["ts_us"] = int(d["ts_us"])
-            rows.append(_json_safe(d))
+        rows = (raw.get("pending", []) if raw else []) + [
+            # sentinel flush rows carry no data
+            r for r in rows if r["event_id"] is None or r["event_id"] >= 0
+        ]
+        _nfa_rows(rows, time_col)
         hold: list[dict] = []
         if buffer_to_watermark:
             wm_us = watermark_us()
             hold = [r for r in rows if r["ts_us"] > wm_us]
             rows = [r for r in rows if r["ts_us"] <= wm_us]
-        rows.sort(key=lambda d: (d["ts_us"], d["event_id"]))
         matches, new_state = _match_events(rows, pattern, partial)
         new_state["pending"] = hold
-        return _match_frame(key[0], matches), new_state, None
+        # m[4], the variable map of patterns that collect ids, is not part
+        # of the streaming output
+        return [(key[0], *m[:4]) for m in matches], new_state, None
 
-    return keyed_state_apply(events, [key_col], fold, CEP_OUTPUT, "append")
+    return fold

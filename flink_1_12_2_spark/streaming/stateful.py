@@ -11,7 +11,9 @@ Flink parity:
 Design: every operator is a pure fold run by
 :func:`~flink_1_12_2_spark.streaming.keyed_state.keyed_state_apply` once per
 key and micro-batch: ``fold(key, rows, state, watermark_us) -> (out,
-new_state, newest_event_us)``. State is a compact JSON value per key (never
+new_state, newest_event_us)``, where ``rows`` is the key's rows as a list of
+plain dicts and ``out`` a list of output tuples (one output frame is built
+per hash bucket, not per key). State is a compact JSON value per key (never
 the full input), kept in the key's hash bucket (Flink's key groups); each
 micro-batch folds its rows into state and emits the current result —
 Flink's "emit on change" collapses to "emit per micro-batch", which is the
@@ -49,18 +51,25 @@ TOPN_OUTPUT = StructType(
 )
 
 
-def _newest_us(rows: pd.DataFrame) -> int | None:
+def _newest_us(rows: list[dict]) -> int | None:
     """Newest event time of a key's micro-batch rows (µs), if they carry
     one — the TTL refresh time."""
-    return int(rows["ts_us"].max()) if "ts_us" in rows.columns else None
+    return max(r["ts_us"] for r in rows) if "ts_us" in rows[0] else None
 
 
-def _merge_top(state: Any, rows: pd.DataFrame, n: int) -> list[tuple]:
+def _value(r: dict) -> float:
+    """A row's ``value``, a NULL read as NaN as in the pandas frames the
+    folds' arithmetic was written for."""
+    v = r["value"]
+    return float("nan") if v is None else v
+
+
+def _merge_top(state: Any, rows: list[dict], n: int) -> list[tuple]:
     """The top-n (event_id, value) pairs of a key's state plus its new rows,
     by value desc with event_id tie-break (bounded state, Flink TopNBuffer
     parity)."""
     cand = [tuple(t) for t in state["top"]] if state else []
-    cand += zip(map(int, rows["event_id"]), map(float, rows["value"]))
+    cand += ((r["event_id"], _value(r)) for r in rows)
     return sorted(cand, key=lambda t: (-t[1], t[0]))[:n]
 
 
@@ -68,10 +77,7 @@ def _topn_fold(n: int):
     def fold(key, rows, state, watermark_us):
         top = _merge_top(state, rows, n)
         seq = (state["seq"] if state else 0) + 1
-        out = pd.DataFrame(
-            [(key[0], e, v, rn, seq) for rn, (e, v) in enumerate(top, 1)],
-            columns=TOPN_OUTPUT.fieldNames(),
-        )
+        out = [(key[0], e, v, rn, seq) for rn, (e, v) in enumerate(top, 1)]
         return out, {"top": top, "seq": seq}, _newest_us(rows)
 
     return fold
@@ -101,8 +107,7 @@ def _topn_changelog_fold(n: int):
         changes = [
             ("-D", key[0], eid, prev[eid], seq) for eid in prev if eid not in cur
         ] + [("+I", key[0], eid, cur[eid], seq) for eid in cur if eid not in prev]
-        out = pd.DataFrame(changes, columns=TOPN_CHANGELOG_OUTPUT.fieldNames())
-        return out, {"top": top, "seq": seq}, None
+        return changes, {"top": top, "seq": seq}, None
 
     return fold
 
@@ -185,12 +190,11 @@ def _keep_last_fold(key, rows, state, watermark_us):
     kept row, so the TTL clock follows the newest event time kept."""
     best = state
     # ts_us column is attached by stream_events (tz-independent)
-    for r in rows.itertuples(index=False):
-        cand = [int(r.event_id), int(r.ts_us), r.event_type, float(r.value)]
+    for r in rows:
+        cand = [r["event_id"], r["ts_us"], r["event_type"], r["value"]]
         if best is None or (cand[1], cand[0]) > (best[1], best[0]):
             best = cand
-    out = pd.DataFrame([(key[0], *best)], columns=KEEPLAST_OUTPUT.fieldNames())
-    return out, best, best[1]
+    return [(key[0], *best)], best, best[1]
 
 
 OVERAGG_OUTPUT = StructType(
@@ -209,17 +213,12 @@ def _over_agg_fold(key, rows, state, watermark_us):
     out = []
     # event-time order within the batch (ts_us, event_id)
     for _, eid, val in sorted(
-        zip(map(int, rows["ts_us"]), map(int, rows["event_id"]),
-            map(float, rows["value"]))
+        (r["ts_us"], r["event_id"], _value(r)) for r in rows
     ):
         acc_sum += val
         acc_cnt += 1
         out.append((key[0], eid, val, acc_sum, acc_cnt))
-    return (
-        pd.DataFrame(out, columns=OVERAGG_OUTPUT.fieldNames()),
-        [acc_sum, acc_cnt],
-        _newest_us(rows),
-    )
+    return out, [acc_sum, acc_cnt], _newest_us(rows)
 
 
 def streaming_over_agg(
@@ -279,20 +278,16 @@ SORT_OUTPUT = StructType(
 
 
 def _event_time_sort_fold(key, rows, state, watermark_us):
-    real = rows[rows["event_id"] >= 0]  # drop flush sentinels
     pend = [tuple(p) for p in state["pending"]] if state else []
-    pend += zip(map(int, real["ts_us"]), map(int, real["event_id"]))
+    # drop flush sentinels
+    pend += ((r["ts_us"], r["event_id"]) for r in rows if r["event_id"] >= 0)
     pend.sort()
     emitted = state["emitted"] if state else 0
     wm_us = watermark_us()
     ready = [(t, i) for (t, i) in pend if t <= wm_us]
     hold = [(t, i) for (t, i) in pend if t > wm_us]
     out = [(key[0], i, t, emitted + k) for k, (t, i) in enumerate(ready, 1)]
-    return (
-        pd.DataFrame(out, columns=SORT_OUTPUT.fieldNames()),
-        {"pending": hold, "emitted": emitted + len(ready)},
-        None,
-    )
+    return out, {"pending": hold, "emitted": emitted + len(ready)}, None
 
 
 def streaming_event_time_sort(events: DataFrame) -> DataFrame:
@@ -329,10 +324,8 @@ def _outer_join_changelog_fold(key, rows, state, watermark_us):
         seq = state["seq"] + 1
     else:
         lefts, padded, rights, seq = [], set(), [], 1
-    is_left = (rows["side"] == "L").tolist()
-    ids = list(map(int, rows["event_id"]))
-    new_l = [e for e, l in zip(ids, is_left) if l]
-    new_r = [e for e, l in zip(ids, is_left) if not l]
+    new_l = [r["event_id"] for r in rows if r["side"] == "L"]
+    new_r = [r["event_id"] for r in rows if r["side"] != "L"]
     uid = key[0]
     changes: list[tuple] = []
     # right arrivals first: retract null-padded outer rows, then emit the
@@ -352,13 +345,11 @@ def _outer_join_changelog_fold(key, rows, state, watermark_us):
         else:
             changes.append(("+I", uid, l, None, seq))
             padded.add(l)
-    df = pd.DataFrame(changes, columns=JOIN_CHANGELOG_OUTPUT.fieldNames())
-    df["r_event_id"] = df["r_event_id"].astype("Int64")
     new_state = {
         "left": lefts + new_l, "padded": sorted(padded), "right": all_r,
         "seq": seq,
     }
-    return df, new_state, _newest_us(rows)
+    return changes, new_state, _newest_us(rows)
 
 
 def streaming_outer_join_changelog(
@@ -420,16 +411,15 @@ def _iterate_fold(step_cents: int):
     def fold(key, rows, state, watermark_us):
         inflight = state or []  # [event_id, value_cents, n_iter]
         drain = False
-        for eid, val in zip(rows["event_id"], rows["value"]):
-            if int(eid) == -1:
+        for r in rows:
+            if r["event_id"] == -1:
                 drain = True  # MAX_WATERMARK sentinel
                 continue
-            fv = float(val)
-            if fv != fv:  # null → NaN in the Arrow batch
+            if r["value"] is None:
                 continue
-            v = int(round(fv * 100))
+            v = int(round(r["value"] * 100))
             if v > 0:
-                inflight.append([int(eid), v, 0])
+                inflight.append([r["event_id"], v, 0])
         done: list[tuple] = []
         keep: list[list[int]] = []
         for eid, v, n_iter in inflight:
@@ -446,8 +436,7 @@ def _iterate_fold(step_cents: int):
                 )
             else:
                 keep.append([eid, v, n_iter])
-        out = pd.DataFrame(done, columns=ITERATE_OUTPUT.fieldNames())
-        return out, keep or None, None
+        return done, keep or None, None
 
     return fold
 

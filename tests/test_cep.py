@@ -697,6 +697,85 @@ def test_buffered_reorder_is_load_bearing(spark, sf_dir):
     assert run(False) != batch_ref
 
 
+_6H_US = 6 * 3600 * 1_000_000
+
+
+def _stream_vs_batch(spark, sf_dir, pat, buffered=False):
+    """(streaming matches over the 4-batch source, batch cep_match_batch
+    matches), each as sorted (user_id, first, last, first_ts, last_ts)."""
+    from flink_1_12_2_spark.registry import load
+    from flink_1_12_2_spark.streaming.cep import (
+        cep_match_batch,
+        cep_pattern_matches,
+    )
+    from flink_1_12_2_spark.streaming.core import (
+        run_to_memory,
+        stream_events_multibatch,
+    )
+
+    ev = stream_events_multibatch(
+        spark, sf_dir, n_files=4, flush_sentinels=buffered
+    )
+    out = run_to_memory(
+        cep_pattern_matches(ev, pat, buffer_to_watermark=buffered),
+        output_mode="append",
+    )
+    cols = ["user_id", "first_event_id", "last_event_id", "first_ts_us",
+            "last_ts_us"]
+    stream = sorted(map(tuple, out.select(*cols).collect()))
+    batch = cep_match_batch(load(spark, sf_dir, "events"), pat)
+    return stream, sorted(map(tuple, batch.select(*cols).collect()))
+
+
+def test_predicate_sees_one_row_model_on_every_path(spark, sf_dir):
+    """A predicate reading the ``ts`` Timestamp column sees the same row
+    in batch, in streaming, and in streaming with ``buffer_to_watermark``,
+    where rows wait in keyed state until the watermark passes them."""
+    pat = (
+        Pattern.begin(
+            "c", lambda r: r["event_type"] == "click" and r["ts"].hour < 12
+        )
+        .followed_by("p", _is("purchase"))
+        .within(_6H_US)
+    )
+    stream, batch = _stream_vs_batch(spark, sf_dir, pat)
+    buffered, _ = _stream_vs_batch(spark, sf_dir, pat, buffered=True)
+    assert len(batch) > 0
+    assert stream == batch
+    assert buffered == batch
+
+
+def test_iterative_condition_streaming_equals_batch(spark, sf_dir):
+    """A two-argument predicate keeps row payloads on its branches, and
+    they carry its matches across micro-batches."""
+    pat = (
+        Pattern.begin("a", _is("click"))
+        .followed_by("b", lambda r, ctx: ctx.last("a")["value"] < r["value"])
+        .within(_6H_US)
+    )
+    stream, batch = _stream_vs_batch(spark, sf_dir, pat)
+    assert len(batch) > 0
+    assert stream == batch
+
+
+def test_with_events_streaming_equals_batch(spark, sf_dir):
+    """``with_events()`` keeps every matched row on the branch; the
+    streaming run over four micro-batches equals the batch run."""
+    pat = (
+        Pattern.begin("a", _is("view"))
+        .times(2)
+        .followed_by(
+            "c",
+            lambda r, ctx: r["value"] > min(e["value"] for e in ctx.events("a")),
+        )
+        .within(12 * _6H_US)
+        .with_events()
+    )
+    stream, batch = _stream_vs_batch(spark, sf_dir, pat)
+    assert len(batch) > 0
+    assert stream == batch
+
+
 def test_match_recognize_stream_front_door(spark, sf_dir):
     """The streaming SQL front door equals the batch front door on the same
     MATCH_RECOGNIZE statement (stream⇄table duality for CEP)."""

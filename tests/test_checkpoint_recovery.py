@@ -14,6 +14,7 @@ import os
 import tempfile
 
 import pyspark.sql.functions as F
+from conftest import keyed_state_buckets
 
 
 def _write_source(spark, tmp, n_files=4, rows_per=50):
@@ -89,28 +90,16 @@ def test_streaming_restart_from_checkpoint_is_exactly_once(spark):
     )
 
 
-def test_cep_restart_from_checkpoint_is_exactly_once(spark, sf_dir):
-    """Keyed CEP stopped after its first micro-batch commits and restarted
-    from the same checkpoint: partial matches carried in keyed state resume,
-    and the matches equal a one-shot run over the same four batches,
-    each exactly once."""
+def _cep_restart(spark, sf_dir, pattern, one_shot):
+    """Run ``pattern`` over the 4-batch source, stop after the first
+    micro-batch commits, restart from the same checkpoint and drain the
+    rest. Checks the output equals ``one_shot`` exactly once; returns the
+    checkpoint directory."""
     import time
 
-    from flink_1_12_2_spark.registry import QUERIES, load_all_query_modules
-    from flink_1_12_2_spark.streaming.cep import Pattern, cep_pattern_matches
+    from flink_1_12_2_spark.streaming.cep import cep_pattern_matches
     from flink_1_12_2_spark.streaming.core import stream_events_multibatch
 
-    load_all_query_modules()
-    one_shot = sorted(
-        map(tuple, QUERIES["stream_cep_multibatch"].fn(spark, sf_dir).collect())
-    )
-    pattern = (
-        Pattern.begin("click", lambda r: r["event_type"] == "click")
-        .bound("event_type = 'click'")
-        .followed_by("purchase", lambda r: r["event_type"] == "purchase")
-        .bound("event_type = 'purchase'")
-        .within(6 * 3600 * 1_000_000)
-    )
     tmp = tempfile.mkdtemp(prefix="cep_recovery_")
     ckpt, out = os.path.join(tmp, "ckpt"), os.path.join(tmp, "out")
 
@@ -137,6 +126,7 @@ def test_cep_restart_from_checkpoint_is_exactly_once(spark, sf_dir):
     assert progress and progress["batchId"] == 0 and progress["numInputRows"] > 0
     n_run1 = spark.read.parquet(out).count()
     assert n_run1 < len(one_shot)
+    run1_state = keyed_state_buckets(spark, ckpt)
 
     # run 2: the rest of the stream from the same checkpoint
     q2 = start({"availableNow": True})
@@ -144,3 +134,51 @@ def test_cep_restart_from_checkpoint_is_exactly_once(spark, sf_dir):
     got = sorted(map(tuple, spark.read.parquet(out).collect()))
     assert got == one_shot
     assert len(set(got)) == len(got)
+    return run1_state
+
+
+def test_cep_restart_from_checkpoint_is_exactly_once(spark, sf_dir):
+    """Keyed CEP stopped after its first micro-batch commits and restarted
+    from the same checkpoint: partial matches carried in keyed state resume,
+    and the matches equal a one-shot run over the same four batches,
+    each exactly once."""
+    from flink_1_12_2_spark.registry import QUERIES, load_all_query_modules
+    from flink_1_12_2_spark.streaming.cep import Pattern
+
+    load_all_query_modules()
+    one_shot = sorted(
+        map(tuple, QUERIES["stream_cep_multibatch"].fn(spark, sf_dir).collect())
+    )
+    pattern = (
+        Pattern.begin("click", lambda r: r["event_type"] == "click")
+        .bound("event_type = 'click'")
+        .followed_by("purchase", lambda r: r["event_type"] == "purchase")
+        .bound("event_type = 'purchase'")
+        .within(6 * 3600 * 1_000_000)
+    )
+    _cep_restart(spark, sf_dir, pattern, one_shot)
+
+
+def test_cep_restart_with_row_payloads_is_exactly_once(spark, sf_dir):
+    """A pattern whose predicate reads the match context keeps row
+    payloads (``vfr``/``vlr``, with the ``ts`` Timestamp) on its branches;
+    a checkpoint holding them restarts and resumes exactly once."""
+    from flink_1_12_2_spark.registry import load
+    from flink_1_12_2_spark.streaming.cep import Pattern, cep_match_batch
+
+    pattern = (
+        Pattern.begin("a", lambda r: r["event_type"] == "click")
+        .followed_by("b", lambda r, ctx: ctx.last("a")["value"] < r["value"])
+        .within(6 * 3600 * 1_000_000)
+    )
+    one_shot = sorted(
+        map(tuple, cep_match_batch(load(spark, sf_dir, "events"), pattern).collect())
+    )
+    run1_state = _cep_restart(spark, sf_dir, pattern, one_shot)
+    payloads = [
+        b["vlr"]["a"]
+        for keys, _ in run1_state.values()
+        for state, _ in keys.values()
+        for b in state["branches"]
+    ]
+    assert payloads and all("ts" in p and "value" in p for p in payloads)

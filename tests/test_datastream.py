@@ -129,14 +129,12 @@ def test_streaming_iterate_cross_batch_feedback():
     sentinel drains in-flight elements to their fixpoint in one call."""
     import json
 
-    import pandas as pd
-
     from flink_1_12_2_spark.streaming.stateful import _iterate_fold
 
     fold = _iterate_fold(2500)
-    batch = lambda rows: pd.DataFrame(  # noqa: E731
-        rows, columns=["event_id", "value"]
-    )
+
+    def batch(rows):
+        return [{"event_id": e, "value": v} for e, v in rows]
 
     def step(rows, st):
         # state crosses micro-batches as JSON, as in keyed_state_apply
@@ -152,19 +150,18 @@ def test_streaming_iterate_cross_batch_feedback():
     # batch 3: third application fires the exit condition; nothing left in
     # flight, so the key's state is deleted
     out3, st = step([], st)
-    assert list(map(tuple, out3.itertuples(index=False))) == [(1, 10, 3, -1500)]
+    assert out3 == [(1, 10, 3, -1500)]
     assert st is None
     # drain: a fresh big element + the sentinel in the same batch finishes
     # at its fixpoint immediately (end-of-input flush)
     out4, st = step([(11, 100.0), (-1, 0.0)], st)
-    assert list(map(tuple, out4.itertuples(index=False))) == [(1, 11, 4, 0)]
+    assert out4 == [(1, 11, 4, 0)]
     assert st is None
 
 
 def test_keyed_process_running_count(spark, tmp_path):
     """KeyedStream.process: a fold keeps a running count per key across two
     micro-batches (one source file per trigger)."""
-    import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
     src = str(tmp_path / "src")
@@ -175,7 +172,7 @@ def test_keyed_process_running_count(spark, tmp_path):
 
     def count_fold(key, rows, state, watermark_us):
         cnt = (state or 0) + len(rows)
-        return pd.DataFrame({"k": [key[0]], "cnt": [cnt]}), cnt, None
+        return [(key[0], cnt)], cnt, None
 
     sdf = (
         spark.readStream.schema("k long")

@@ -125,23 +125,16 @@ def test_lsh_candidates_subset_and_identical_docs_found(spark, docs):
 )
 def test_streaming_topn_state_fold_matches_sort(spark, rows):
     # pure-function check of the top-n fold used by the streaming operator
-    import pandas as pd
-
     from flink_1_12_2_spark.streaming.stateful import _topn_fold
 
     by_key: dict[int, list[tuple[int, float]]] = {}
     for k, eid, v in rows:
         by_key.setdefault(k, []).append((eid, v))
     for k, evs in by_key.items():
-        pdf = pd.DataFrame(
-            {"event_id": [e for e, _ in evs], "value": [v for _, v in evs]}
-        )
-        out, _, _ = _topn_fold(3)((k,), pdf, None, None)
+        rows = [{"event_id": e, "value": v} for e, v in evs]
+        out, _, _ = _topn_fold(3)((k,), rows, None, None)
         expected = sorted(evs, key=lambda t: (-t[1], t[0]))[:3]
-        got = list(zip(out["event_id"], out["value"]))
-        assert [(int(e), float(v)) for e, v in got] == [
-            (int(e), float(v)) for e, v in expected
-        ]
+        assert [(e, v) for _, e, v, _, _ in out] == expected
 
 
 # ---- CEP NFA quantifier laws (pure-function, no Spark) --------------------
@@ -573,29 +566,40 @@ def test_portable_ln_duckdb_bit_identity_random(ns):
 @settings(max_examples=80, deadline=None)
 @given(
     st.lists(
-        st.tuples(st.sampled_from([1, 2, 3, None]), st.sampled_from(["a", "b"])),
+        st.tuples(
+            st.sampled_from([1, 2, 3, None]),
+            st.sampled_from(["a", "b"]),
+            st.sampled_from([0.5, None]),
+        ),
         max_size=30,
     ),
     st.booleans(),
     st.sampled_from([["k1"], ["k2"], ["k1", "k2"]]),
 )
-def test_key_runs_equal_groupby(keys, presorted, by):
-    """``key_runs`` yields what ``groupby(sort=False, dropna=False)`` does:
-    one frame per key in order of first appearance, rows in input order,
-    NULL keys one group, keys as plain tuples with None for NULL."""
+def test_split_by_key_first_appearance_row_order(rows, int64, by):
+    """A frame's rows as the keyed-state folds and batch CEP see them
+    (``frame_rows`` then ``split_by_key``): keys in order of first
+    appearance, each key's rows in input order, NaN as None, and an
+    integral key column held as float (NULLs present) or as ``Int64``
+    giving int keys; NULL keys form one key."""
     import pandas as pd
 
-    from flink_1_12_2_spark.streaming.keyed_state import key_runs
+    from flink_1_12_2_spark.streaming.keyed_state import frame_rows, split_by_key
 
-    pdf = pd.DataFrame(keys, columns=["k1", "k2"], dtype=object)
-    pdf["k1"] = pdf["k1"].astype("Int64")
+    pdf = pd.DataFrame(rows, columns=["k1", "k2", "v"])
+    if int64:
+        pdf["k1"] = pdf["k1"].astype("Int64")
     pdf["row"] = range(len(pdf))
-    if presorted:
-        pdf = pdf.sort_values(by, kind="stable").reset_index(drop=True)
-    got = [(k, list(rows["row"])) for k, rows in key_runs(pdf, by)]
-    want = [
-        (tuple(None if pd.isna(v) else v for v in k), list(rows["row"]))
-        for k, rows in pdf.groupby(by, sort=False, dropna=False)
-    ]
-    assert got == want
-    assert all(type(v) in (int, str, type(None)) for k, _ in got for v in k)
+    got = split_by_key(frame_rows(pdf, {"k1", "row"}), by)
+    want: dict[tuple, list[dict]] = {}
+    for i, (k1, k2, v) in enumerate(rows):
+        row = {"k1": k1, "k2": k2, "v": v, "row": i}
+        want.setdefault(tuple(row[c] for c in by), []).append(row)
+    assert list(got.items()) == list(want.items())
+    assert all(
+        type(r[c]) in (int, str, float, type(None))
+        and (c != "k1" or type(r[c]) is not float)
+        for run in got.values()
+        for r in run
+        for c in r
+    )
