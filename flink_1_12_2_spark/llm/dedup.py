@@ -823,7 +823,7 @@ def exact_substring_pairs(
     # exchange, and the cached partitioning feeds the self-join —
     # the same architecture ngram_jaccard_pairs adopted in r13
     # (phase profile: w2_fill 1.66 s of the 3.4 s query; plan
-    # 17 Exchange + 4 Generate → see plans/r14).
+    # 17 Exchange + 4 Generate).
     w_wh = Window.partitionBy("wh")
     w2 = (
         wins.withColumn(

@@ -15,13 +15,18 @@ Where a row matches more than one reachable step (predicate overlap — e.g.
 a loop extension AND its successor), the branch FORKS, exactly like Flink's
 TAKE/PROCEED computation-state split for ``oneOrMore``; ``greedy()``
 suppresses the proceed-fork while the loop extension matches
-(Pattern.java:365). Branches are deduplicated on
-(start row, step index, loop count, variable map) — the compact per-key
-analogue of Flink's SharedBuffer node sharing — so the branch set stays
-bounded by distinct NFA configurations, and ``within`` expiry retires stale
-starts. A hard cap (``MAX_BRANCHES``) guards pathological patterns with no
-``within``; overflow drops newest-start branches (documented degradation —
-Flink has no cap and can equally grow state unboundedly there).
+(Pattern.java:365). The pattern is compiled once per query into step
+records (``_Nfa``, Flink's NFACompiler), and a branch is an immutable tuple
+of start row, sequence, step index, loop count and per-variable
+(event_id, ts) slots. Equal tuples are one NFA configuration, so branches
+are deduplicated by hashing — the compact per-key analogue of Flink's
+SharedBuffer node sharing — and the branch set stays bounded by distinct
+configurations, while ``within`` expiry retires stale starts. Rows reach
+branches only through the match context, which reads them from one
+per-key ``event_id → row`` buffer. A hard cap (``MAX_BRANCHES``) guards
+pathological patterns with no ``within``; overflow drops newest-start
+branches (documented degradation — Flink has no cap and can equally grow
+state unboundedly there).
 
 Pattern surface (Pattern.java — ``notNext``:273, ``oneOrMore``:350,
 ``greedy``:365, ``times``:379, plus ``optional``, ``consecutive``,
@@ -81,9 +86,9 @@ each batch immediately, correct when batches arrive time-ordered.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 from dataclasses import dataclass, field
-from functools import cached_property
 from typing import Any, Callable, Iterator
 
 import pandas as pd
@@ -105,6 +110,16 @@ from flink_1_12_2_spark.streaming.keyed_state import (
 
 Predicate = Callable[..., bool]
 
+# A branch (Flink's ComputationState) is one immutable tuple
+#   (first_eid, first_ts, pat, step_idx, loop_count, vf, vl, vids)
+# ``pat`` picks the step sequence of a sequence-set pattern; ``vf``/``vl``
+# hold, per variable slot (``_Nfa.slot``), the (event_id, ts_us) of the
+# FIRST/LAST row matched to it or None; ``vids`` holds per slot the tuple
+# of every matched event id when the pattern collects ids, else is None.
+# Equal tuples are the same NFA configuration, so dedup is plain hashing;
+# the state codec stores them as JSON arrays.
+_VF, _VL, _VIDS = 5, 6, 7
+
 
 class MatchContext:
     """Flink IterativeCondition context (IterativeCondition.java:57
@@ -113,43 +128,48 @@ class MatchContext:
     arguments receive ``(row, ctx)``; ``ctx.first(var)`` / ``ctx.last(var)``
     return the row dicts (None while the variable is unmatched). Covers the
     dominant iterative-condition family — comparisons against the match's
-    earlier rows (``B.price > A.price``) — with state of two rows per
-    variable per branch.
+    earlier rows (``B.price > A.price``).
 
-    Branches keep these row payloads (``vfr``/``vlr``) only when some
-    predicate of the pattern takes the context or ``with_events()`` asks
-    for rows; otherwise a branch holds event ids and times only. A payload
-    is the row dict the predicates saw, shared by every branch that
-    consumed the row, not a copy — Flink's SharedBuffer keeps each event
-    once and branches reference it.
+    A branch holds only ``(event_id, ts_us)`` positions. The rows behind
+    them live once per key in an ``event_id → row`` buffer, kept only when
+    some predicate of the pattern takes the context or ``with_events()``
+    asks for rows, and pruned to the rows live branches reference — Flink's
+    SharedBuffer keeps each event once and branches point into it.
 
-    With ``Pattern.with_events()``, branches additionally retain EVERY
-    matched row per variable and ``ctx.events(var)`` returns the full list —
-    exact ``getEventsForPattern`` parity (enables ``B.v > AVG(A.v)``
-    conditions). Opt-in because per-branch state then grows with the match
-    length (bounded by ``within``, like Flink's SharedBuffer residency)."""
+    With ``Pattern.with_events()``, branches additionally record EVERY
+    matched event id per variable and ``ctx.events(var)`` returns the full
+    list of rows — exact ``getEventsForPattern`` parity (enables ``B.v >
+    AVG(A.v)`` conditions). Opt-in because per-branch state then grows with
+    the match length (bounded by ``within``, like Flink's SharedBuffer
+    residency)."""
 
-    __slots__ = ("_vfr", "_vlr", "_ve")
+    __slots__ = ("_branch", "_rows", "_slot", "_events")
 
-    def __init__(self, vfr: dict, vlr: dict, ve: dict | None = None):
-        self._vfr, self._vlr, self._ve = vfr, vlr, ve
+    def __init__(self, branch: tuple, rows: dict, slot: dict, events: bool):
+        self._branch, self._rows, self._slot, self._events = branch, rows, slot, events
+
+    def _at(self, field: int, var: str):
+        s = self._slot.get(var)
+        pos = None if s is None else self._branch[field][s]
+        return None if pos is None else self._rows[pos[0]]
 
     def first(self, var: str):
-        return self._vfr.get(var)
+        return self._at(_VF, var)
 
     def last(self, var: str):
-        return self._vlr.get(var)
+        return self._at(_VL, var)
 
     def events(self, var: str) -> list:
         """All rows matched to ``var`` so far, in match order
         (IterativeCondition.getEventsForPattern). Requires the pattern to
         opt in via ``Pattern.with_events()``."""
-        if self._ve is None:
+        if not self._events:
             raise RuntimeError(
                 "ctx.events(var) needs Pattern.with_events() — full "
                 "per-variable event retention is opt-in (state cost)"
             )
-        return self._ve.get(var, [])
+        s = self._slot.get(var)
+        return [] if s is None else [self._rows[e] for e in self._branch[_VIDS][s]]
 
 
 def _arity(pred) -> int:
@@ -220,32 +240,6 @@ class Step:
     def is_loop(self) -> bool:
         return self.max_times is None or self.max_times > 1
 
-    # the predicates as ``test(row, ctx)``; two-argument predicates receive
-    # the match context (iterative conditions)
-    @cached_property
-    def test(self) -> Callable[[dict, MatchContext], bool]:
-        return _ctx_form(self.pred)
-
-    @cached_property
-    def until_test(self) -> Callable[[dict, MatchContext], bool] | None:
-        return None if self.until_pred is None else _ctx_form(self.until_pred)
-
-    @cached_property
-    def alt_tests(self) -> list[tuple[str, Callable]] | None:
-        return None if self.alts is None else [(n, _ctx_form(p)) for n, p in self.alts]
-
-    @property
-    def takes_ctx(self) -> bool:
-        """Whether any predicate of the step reads the match context."""
-        preds = [self.pred, self.until_pred, *(p for _, p in self.alts or ())]
-        return any(p is not None and _arity(p) >= 2 for p in preds)
-
-    def matching_alts(self, row: dict, ctx: MatchContext | None) -> list[str]:
-        """Names of matching alternatives (a plain step matches as itself)."""
-        if self.alts is None:
-            return [self.name] if self.test(row, ctx) else []
-        return [n for n, t in self.alt_tests if t(row, ctx)]
-
 
 @dataclass
 class Pattern:
@@ -303,11 +297,7 @@ class Pattern:
             alts = []
             for k in range(min_rep, max_rep + 1):
                 alts.append(
-                    [
-                        Step(**{f.name: getattr(s, f.name) for f in s.__dataclass_fields__.values()})
-                        for _ in range(k)
-                        for s in sub.steps
-                    ]
+                    [dataclasses.replace(s) for _ in range(k) for s in sub.steps]
                 )
             alt_lists.append(alts)
         import itertools as _it
@@ -443,7 +433,6 @@ class Pattern:
         """Loop stopping condition (Pattern.java:237): a row firing ``pred``
         is never absorbed into the loop; the loop closes there."""
         self.steps[-1].until_pred = pred
-        self.steps[-1].__dict__.pop("until_test", None)  # cached form
         return self
 
     def greedy(self) -> "Pattern":
@@ -527,298 +516,237 @@ CEP_OUTPUT = StructType(
 )
 
 
-def _new_branch(row: dict, pat: int = 0) -> dict:
-    """A branch about to consume ``row`` as its first row. ``pat`` selects
-    the step sequence for sequence-set patterns (PERMUTE / alternation).
-    Payload maps are added on the first consume, when the pattern keeps
-    them: ``vfr``/``vlr`` (var → FIRST/LAST matched row, for iterative
-    conditions)."""
-    return {
-        "first_eid": row["event_id"],
-        "first_ts": row["ts_us"],
-        "step_idx": 0,
-        "loop_count": 0,
-        "pat": pat,
-        "vf": {},  # var → [eid, ts] of FIRST row mapped to it
-        "vl": {},  # var → [eid, ts] of LAST row mapped to it
-    }
+@dataclass(frozen=True, slots=True)
+class _Rec:
+    """One step of a compiled sequence: the :class:`Step` flags the
+    runtime reads, every predicate in ``test(row, ctx)`` form, and every
+    alternative's variable as its slot."""
 
+    alts: tuple[tuple[int, Callable], ...]  # (slot, test); a plain step is its own one alternative
+    kill: Callable | None  # a negative step's test: a hit kills the branch
+    strict_kill: bool  # negative, tested on the immediately-next row only
+    strict: bool  # positive strict contiguity (Pattern.next)
+    loop: bool
+    min: int
+    max: int | None
+    greedy: bool
+    consecutive: bool
+    any_fork: bool
+    until: Callable | None  # a loop's stopping condition
 
-def _copy_branch(br: dict) -> dict:
-    nb = dict(br)
-    for k in ("vf", "vl", "vfr", "vlr", "vids", "ve"):
-        if k in br:
-            nb[k] = dict(br[k])
-    return nb
-
-
-def _branch_key(br: dict) -> tuple:
-    base = (
-        br["first_eid"],
-        br.get("pat", 0),
-        br["step_idx"],
-        br["loop_count"],
-        tuple(sorted((k, tuple(v)) for k, v in br["vf"].items())),
-        tuple(sorted((k, tuple(v)) for k, v in br["vl"].items())),
-    )
-    if "vids" in br:
-        # with full assignments retained, branches differing in MIDDLE rows
-        # are distinct configurations — keying only (first, last) per var
-        # would silently merge them and lose one assignment's rows
-        base += (
-            tuple(sorted((k, tuple(v)) for k, v in br["vids"].items())),
+    @staticmethod
+    def of(s: Step, slot: dict[str, int]) -> "_Rec":
+        alts = s.alts if s.alts is not None else [(s.name, s.pred)]
+        return _Rec(
+            alts=tuple((slot.get(n), _ctx_form(p)) for n, p in alts),
+            kill=_ctx_form(s.pred) if s.negative else None,
+            strict_kill=s.negative and s.strict_negative,
+            strict=s.strict and not s.negative,
+            loop=s.is_loop,
+            min=s.min_times,
+            max=s.max_times,
+            greedy=s.greedy,
+            consecutive=s.consecutive,
+            any_fork=s.any_fork,
+            until=(
+                _ctx_form(s.until_pred)
+                if s.is_loop and s.until_pred is not None
+                else None
+            ),
         )
-    return base
+
+    def hits(self, row: dict, ctx: MatchContext | None) -> list[int]:
+        """Slots of the alternatives ``row`` matches."""
+        return [s for s, t in self.alts if t(row, ctx)]
 
 
-def _evolve(
-    branch: dict,
-    row: dict,
-    steps: list[Step],
-    collect: tuple[bool, bool, bool] = (False, False, False),
-) -> tuple[list[dict], list[dict], bool]:
-    """Evolve one branch on one row.
+class _Nfa:
+    """A :class:`Pattern` compiled for the runtime, as Flink's NFACompiler
+    turns a Pattern into NFA states: one list of :class:`_Rec` per step
+    sequence and one slot per variable a row can be matched to. Slots are
+    numbered in variable-name order, so ordering branches by slot orders
+    them by name. Compiled from the pattern's fields by each query, never
+    cached on the Pattern (:func:`cep_match_batch` runs a shallow copy)."""
 
-    Returns (successors, completions, survived_unchanged):
-    ``successors`` — forked branches that consumed the row (non-final);
-    ``completions`` — branches that consumed the final step (match done);
-    ``survived_unchanged`` — the branch persists as-is (relaxed contiguity).
-    ``collect`` = (retain per-var event ids, retain per-var full rows,
-    retain first/last row payloads); without payloads no predicate reads
-    the match context, so none is built."""
-    ctx = (
-        MatchContext(
-            branch.get("vfr", {}),
-            branch.get("vlr", {}),
-            branch.get("ve", {}) if collect[1] else None,
+    def __init__(self, pattern: Pattern):
+        seqs = pattern.seqs if pattern.seqs is not None else [pattern.steps]
+        steps = [s for seq in seqs for s in seq]
+        self.names = sorted(
+            {n for s in steps if not s.negative for n, _ in s.alts or [(s.name, None)]}
         )
-        if collect[2]
-        else None
-    )
+        self.slot = {n: i for i, n in enumerate(self.names)}
+        self.seqs = [[_Rec.of(s, self.slot) for s in seq] for seq in seqs]
+        self.within = pattern.within_us
+        self.skip = pattern.skip
+        self.keep_ids = pattern.collect_ids or pattern.collect_events
+        self.events = pattern.collect_events
+        # the per-key event buffer backs the match context: kept only when
+        # a predicate reads the context or with_events() asks for rows
+        self.buffered = pattern.collect_events or any(
+            p is not None and _arity(p) >= 2
+            for s in steps
+            for p in (s.pred, s.until_pred, *(p for _, p in s.alts or ()))
+        )
+
+
+def _advance(
+    seq: list[_Rec], br: tuple, row: dict, ctx: MatchContext | None
+) -> tuple[list[tuple], list[tuple], bool]:
+    """Evolve branch ``br`` on ``row`` against its step sequence.
+
+    Returns (successors, completions, skipped): ``successors`` — the live
+    branches after the row; ``completions`` — branches that completed the
+    pattern on this row; ``skipped`` — ``br`` ignored the row (relaxed
+    contiguity) and is its only successor."""
+    fe, ft, pat, si, lc, vf, vl, vids = br
+    n = len(seq)
     # strict negatives AT the cursor: tested exactly once, on the row
     # immediately following the previous consume
-    step_idx, loop_count = branch["step_idx"], branch["loop_count"]
-    while step_idx < len(steps):
-        s = steps[step_idx]
-        if s.negative and s.strict_negative:
-            if s.test(row, ctx):
-                return [], [], False  # killed
-            step_idx += 1  # satisfied permanently
-        else:
-            break
-    # strict POSITIVE step at the cursor, not yet entered (Pattern.next):
-    # the arriving row must match it — no relaxed skipping, no passover
-    if (
-        step_idx < len(steps)
-        and steps[step_idx].strict
-        and not steps[step_idx].negative
-        and loop_count == 0
-    ):
-        if not steps[step_idx].matching_alts(row, ctx):
+    while si < n and seq[si].strict_kill:
+        if seq[si].kill(row, ctx):
+            return [], [], False  # killed
+        si += 1  # satisfied permanently
+    ext = None  # the entered loop at the cursor, while it may extend
+    if si < n and seq[si].strict and lc == 0:
+        # strict POSITIVE step at the cursor, not yet entered (Pattern.next):
+        # the arriving row must match it — no relaxed skipping, no passover
+        if not seq[si].hits(row, ctx):
             return [], [], False  # strict contiguity broken → branch dies
-        kill_preds, candidates, loop_extend = [], [step_idx], None
-        return _consume_phase(
-            branch, row, steps, step_idx, loop_count,
-            kill_preds, candidates, loop_extend, ctx, collect,
-        )
-    # frontier walk from the cursor: collect armed negative predicates
-    # (kill checks) and consumable candidate steps; stop at the first step
-    # that cannot be passed over. In-walk strict negatives are treated as
-    # relaxed — exact one-row semantics apply only at the cursor.
-    kill_preds: list[Callable[[dict, MatchContext | None], bool]] = []
-    candidates: list[int] = []
-    loop_extend: int | None = None
-    j = step_idx
-    while j < len(steps):
-        s = steps[j]
-        if s.negative:
-            kill_preds.append(s.test)
-            j += 1
-            continue
-        if j == step_idx and s.is_loop and loop_count > 0:
-            until_fired = s.until_pred is not None and s.until_test(row, ctx)
-            if (s.max_times is None or loop_count < s.max_times) and not until_fired:
-                loop_extend = j
-            if loop_count >= s.min_times:
-                j += 1  # enough occurrences → later steps reachable
+        cands = [si]
+    else:
+        # frontier walk from the cursor: collect armed negative tests (kill
+        # checks) and consumable candidate steps; stop at the first step
+        # that cannot be passed over. In-walk strict negatives are treated
+        # as relaxed — exact one-row semantics apply only at the cursor.
+        kills, cands = [], []
+        j = si
+        while j < n:
+            r = seq[j]
+            if r.kill is not None:
+                kills.append(r.kill)
+                j += 1
                 continue
-            if until_fired:
-                return [], [], False  # loop stopped under min → branch dies
+            if j == si and r.loop and lc > 0:
+                until = r.until is not None and r.until(row, ctx)
+                if (r.max is None or lc < r.max) and not until:
+                    ext = j
+                if lc >= r.min:
+                    j += 1  # enough occurrences → later steps reachable
+                    continue
+                if until:
+                    return [], [], False  # loop stopped under min → dies
+                break
+            if r.until is None or not r.until(row, ctx):
+                cands.append(j)
+            if r.min == 0 and not (r.loop and lc > 0):
+                j += 1  # optional, not yet entered → later steps reachable
+                continue
             break
-        if not (
-            s.is_loop and s.until_pred is not None and s.until_test(row, ctx)
-        ):
-            candidates.append(j)
-        if s.min_times == 0 and not (s.is_loop and loop_count > 0):
-            j += 1  # optional, not yet entered → later steps reachable
-            continue
-        break
-    return _consume_phase(
-        branch, row, steps, step_idx, loop_count,
-        kill_preds, candidates, loop_extend, ctx, collect,
-    )
-
-
-def _consume_phase(
-    branch: dict,
-    row: dict,
-    steps: list[Step],
-    step_idx: int,
-    loop_count: int,
-    kill_preds: list[Callable[[dict, MatchContext | None], bool]],
-    candidates: list[int],
-    loop_extend: int | None,
-    ctx: MatchContext | None,
-    collect: tuple[bool, bool, bool] = (False, False, False),
-) -> tuple[list[dict], list[dict], bool]:
-    """Second half of :func:`_evolve`: apply kills, fork consumptions."""
-    if any(t(row, ctx) for t in kill_preds):
-        return [], [], False  # killed by a relaxed negative
-    extend_names = (
-        steps[loop_extend].matching_alts(row, ctx)
-        if loop_extend is not None
-        else []
-    )
+        if kills and any(k(row, ctx) for k in kills):
+            return [], [], False  # killed by a relaxed negative
+    ext_hits = [] if ext is None else seq[ext].hits(row, ctx)
     # greedy loop extension suppresses the proceed-fork (Pattern.java:365)
-    if loop_extend is not None and extend_names and steps[loop_extend].greedy:
-        candidates = []
-
-    def consumed(j: int, var: str) -> dict:
-        nb = {
-            "first_eid": branch["first_eid"],
-            "first_ts": branch["first_ts"],
-            "step_idx": step_idx,
-            "loop_count": loop_count,
-            "pat": branch.get("pat", 0),
-            "vf": dict(branch["vf"]),
-            "vl": dict(branch["vl"]),
-        }
-        pos = [row["event_id"], row["ts_us"]]
-        nb["vf"].setdefault(var, pos)
-        nb["vl"][var] = pos
-        if collect[2]:
-            nb["vfr"] = dict(branch.get("vfr", {}))
-            nb["vlr"] = dict(branch.get("vlr", {}))
-            nb["vfr"].setdefault(var, row)
-            nb["vlr"][var] = row
-        if collect[0] or collect[1]:
-            vids = {k: list(v) for k, v in branch.get("vids", {}).items()}
-            vids.setdefault(var, []).append(row["event_id"])
-            nb["vids"] = vids
-        if collect[1]:
-            ve = {k: list(v) for k, v in branch.get("ve", {}).items()}
-            ve.setdefault(var, []).append(row)
-            nb["ve"] = ve
-        s = steps[j]
-        if s.is_loop:
-            nb["loop_count"] = nb["loop_count"] + 1 if j == step_idx else 1
-            nb["step_idx"] = j
-            if s.max_times is not None and nb["loop_count"] >= s.max_times:
-                nb["step_idx"], nb["loop_count"] = j + 1, 0
-        else:
-            nb["step_idx"], nb["loop_count"] = j + 1, 0
-        return nb
-
-    def finish(nb: dict) -> dict:
-        nb["last_eid"], nb["last_ts"] = row["event_id"], row["ts_us"]
-        return nb
-
-    successors: list[dict] = []
-    completions: list[dict] = []
-    ignore_fork = False
-
-    def route(nb: dict) -> None:
-        """File a consumed branch: completion when past the last step; a
-        trailing loop with min occurrences met emits EAGERLY (a completion
-        snapshot per take — Flink's oneOrMore PROCEED-to-final edge) while
-        the take branch stays live for further extension."""
-        if nb["step_idx"] >= len(steps):
-            completions.append(finish(nb))
-            return
-        successors.append(nb)
-        s = steps[nb["step_idx"]]
-        if (
-            nb["step_idx"] == len(steps) - 1
-            and s.is_loop
-            and nb["loop_count"] >= s.min_times
-        ):
-            completions.append(finish(_copy_branch(nb)))
-
-    for j in candidates:
-        names = steps[j].matching_alts(row, ctx)
-        if names and steps[j].any_fork:
-            ignore_fork = True  # followedByAny: also keep the un-consumed branch
-        for var in names:
-            route(consumed(j, var))
-        # an unentered greedy loop that matches suppresses forking into the
-        # steps beyond it (same Pattern.java:365 preference as the entered
-        # case handled above)
-        if names and steps[j].is_loop and steps[j].greedy:
-            break
-    for var in extend_names:
-        route(consumed(loop_extend, var))
+    greedy_ext = bool(ext_hits) and seq[ext].greedy
+    if greedy_ext:
+        cands = []
+    takes: list[tuple[int, int]] = []  # (step, slot) per consuming fork
+    ignore = False
+    for j in cands:
+        hit = seq[j].hits(row, ctx)
+        if hit:
+            takes += [(j, s) for s in hit]
+            # followedByAny: also keep the un-consumed branch
+            ignore = ignore or seq[j].any_fork
+            # an unentered greedy loop that matches suppresses forking into
+            # the steps beyond it (the same Pattern.java:365 preference)
+            if seq[j].loop and seq[j].greedy:
+                break
     # non-greedy entered loop with min met: Flink ALSO forks an epsilon
     # PROCEED (the loop closes without consuming this row); when a successor
     # candidate matched, that fork already covers the row — otherwise the
     # closed branch persists and skips it (relaxed at the successor). This
     # is what lets (start, [a1], breaking) match alongside
     # (start, [a1, a2], breaking) — UntilConditionITCase's expected set.
-    if (
-        loop_extend is not None
-        and loop_extend + 1 < len(steps)  # a trailing loop has no successor
-        and extend_names
-        and not steps[loop_extend].greedy
-        and loop_count >= steps[loop_extend].min_times
-        and not any(steps[j].matching_alts(row, ctx) for j in candidates)
-    ):
-        nb = _copy_branch(branch)
-        nb["step_idx"], nb["loop_count"] = loop_extend + 1, 0
-        successors.append(nb)
-    if successors or completions:
-        if ignore_fork:
-            nb = _copy_branch(branch)
-            nb["step_idx"], nb["loop_count"] = step_idx, loop_count
-            successors.append(nb)
-        return successors, completions, False
+    proceed = (
+        ext_hits and not greedy_ext and not takes
+        and ext + 1 < n and lc >= seq[ext].min
+    )
+    takes += [(ext, s) for s in ext_hits]
+    succ: list[tuple] = []
+    done: list[tuple] = []
+    pos = (row["event_id"], row["ts_us"])
+    for j, s in takes:
+        r = seq[j]
+        nsi, nlc = j + 1, 0
+        if r.loop:
+            c = (lc if j == si else 0) + 1
+            if r.max is None or c < r.max:
+                nsi, nlc = j, c
+        nb = (
+            fe, ft, pat, nsi, nlc,
+            vf if vf[s] is not None else vf[:s] + (pos,) + vf[s + 1:],
+            vl[:s] + (pos,) + vl[s + 1:],
+            vids if vids is None else vids[:s] + (vids[s] + (pos[0],),) + vids[s + 1:],
+        )
+        if nsi == n:
+            done.append(nb)
+            continue
+        succ.append(nb)
+        # a trailing loop with min occurrences met emits EAGERLY — one
+        # completion per take, Flink's oneOrMore PROCEED-to-final edge —
+        # while the take stays live for further extension
+        if nsi == n - 1 and seq[nsi].loop and nlc >= seq[nsi].min:
+            done.append(nb)
+    if proceed:
+        succ.append((fe, ft, pat, ext + 1, 0, vf, vl, vids))
+    if succ or done:
+        if ignore:
+            succ.append((fe, ft, pat, si, lc, vf, vl, vids))
+        return succ, done, False
     # nothing matched: consecutive loop at the cursor closes (or kills)
-    s0 = steps[step_idx] if step_idx < len(steps) else None
-    if s0 is not None and s0.is_loop and s0.consecutive and loop_count > 0:
-        if loop_count >= s0.min_times:
-            nb = _copy_branch(branch)
-            nb["step_idx"], nb["loop_count"] = step_idx + 1, 0
-            return [nb], [], False
+    r = seq[si] if si < n else None
+    if r is not None and r.loop and r.consecutive and lc > 0:
+        if lc >= r.min:
+            return [(fe, ft, pat, si + 1, 0, vf, vl, vids)], [], False
         return [], [], False  # under min → killed
     # relaxed contiguity: the row is skipped; persist (with any strict
-    # negatives at the cursor now permanently satisfied). Branches are never
-    # changed in place, so an unchanged one is kept, not copied.
-    if step_idx == branch["step_idx"]:
-        return [branch], [], True
-    nb = _copy_branch(branch)
-    nb["step_idx"], nb["loop_count"] = step_idx, loop_count
-    return [nb], [], True
+    # negatives at the cursor now permanently satisfied)
+    if si == br[3]:
+        return [br], [], True
+    return [(fe, ft, pat, si, lc, vf, vl, vids)], [], True
 
 
-def _timeout_rec(b: dict) -> tuple:
+def _timeout_rec(b: tuple) -> tuple:
     """A timed-out partial match record: (first row, LAST CONSUMED row)."""
     last = max(
-        ((v[1], v[0]) for v in b["vl"].values()),
-        default=(b["first_ts"], b["first_eid"]),
+        ((v[1], v[0]) for v in b[_VL] if v is not None), default=(b[1], b[0])
     )
-    return (b["first_eid"], last[1], b["first_ts"], last[0])
+    return (b[0], last[1], b[1], last[0])
+
+
+def _thaw(b: list | tuple) -> tuple:
+    """A branch as the hashable tuple, also when read back from JSON."""
+    fe, ft, pat, si, lc, vf, vl, vids = b
+    vf, vl = (tuple(p if p is None else tuple(p) for p in v) for v in (vf, vl))
+    return (fe, ft, pat, si, lc, vf, vl, vids if vids is None else tuple(map(tuple, vids)))
 
 
 def _match_events(
     rows: list[dict],
-    pattern: Pattern,
+    pattern: Pattern | _Nfa,
     state: dict | None,
     timeouts: list | None = None,
 ) -> tuple[list[tuple], dict]:
-    """Run the branch-exploring NFA over ordered rows.
+    """Run the branch-exploring NFA over ordered rows; ``pattern`` is
+    compiled here unless the caller passes it compiled (the query paths
+    compile it once).
 
     Returns (matches, new_state). State: ``branches`` — the live branch set
-    (Flink ComputationStates). Every row starts a candidate new branch AND
-    evolves every live branch; completions are resolved per the pattern's
-    AfterMatchSkipStrategy (module doc).
+    (Flink ComputationStates, tuples as laid out at ``_VF``) and, for
+    patterns with a match context, ``rows`` — every row a live branch
+    references, once (Flink's SharedBuffer). Every row starts a candidate
+    new branch AND evolves every live branch; completions are resolved per
+    the pattern's AfterMatchSkipStrategy (module doc).
 
     ``timeouts`` (optional out-list): collects TIMED-OUT partial matches —
     branches pruned by ``within`` expiry, Flink's
@@ -827,64 +755,57 @@ def _match_events(
     On a BOUNDED run the caller treats end-of-input as the final watermark
     (Flink MAX_WATERMARK): every branch still pending at the end times out.
     Branches discarded by an AfterMatchSkip strategy are NOT timeouts."""
-    seqs = pattern.seqs if pattern.seqs is not None else [pattern.steps]
-    collect = (
-        pattern.collect_ids or pattern.collect_events,
-        pattern.collect_events,
-        pattern.collect_events
-        or any(s.takes_ctx for steps in seqs for s in steps),
-    )
+    nfa = pattern if isinstance(pattern, _Nfa) else _Nfa(pattern)
+    seqs, slot, within = nfa.seqs, nfa.slot, nfa.within
+    state = state or {}
+    branches = [_thaw(b) for b in state.get("branches", ())]
+    buf = None  # event_id → row, for the match context
+    if nfa.buffered:
+        buf = {r["event_id"]: r for r in state.get("rows", ())}
+        buf.update((r["event_id"], r) for r in rows)
+    empty = (None,) * len(slot)
+    no_ids = ((),) * len(slot) if nfa.keep_ids else None
     matches: list[tuple] = []
-    branches: list[dict] = list(state["branches"]) if state and "branches" in state else []
 
-    def _mk(c: dict) -> tuple:
-        t = (c["first_eid"], c["last_eid"], c["first_ts"], c["last_ts"])
-        if collect[0]:  # append the variable→event-ids assignment (JSON)
-            t += (json.dumps(c.get("vids", {}), sort_keys=True),)
+    def mk(c: tuple, last: tuple) -> tuple:
+        t = (c[0], last[0], c[1], last[1])
+        if nfa.keep_ids:  # append the variable→event-ids assignment (JSON)
+            ids = {n: list(e) for n, e in zip(nfa.names, c[_VIDS]) if e}
+            t += (json.dumps(ids, sort_keys=True),)
         return t
 
     for row in rows:
+        last = (row["event_id"], row["ts_us"])
         # `within` expiry: starts too old to complete are retired. STRICT
         # boundary — Flink NFA.java:301 times out a computation state when
         # `timestamp - startTimestamp >= windowTime`, so a match whose span
         # exactly equals the window is NOT emitted.
-        if pattern.within_us is not None:
+        if within is not None:
             if timeouts is not None:
                 timeouts.extend(
-                    _timeout_rec(b)
-                    for b in branches
-                    if row["ts_us"] - b["first_ts"] >= pattern.within_us
+                    _timeout_rec(b) for b in branches if last[1] - b[1] >= within
                 )
-            branches = [
-                b
-                for b in branches
-                if row["ts_us"] - b["first_ts"] < pattern.within_us
-            ]
-        next_branches: list[dict] = []
-        completions: list[dict] = []
+            branches = [b for b in branches if last[1] - b[1] < within]
+        nxt: list[tuple] = []
+        done: list[tuple] = []
         for br in branches:
-            succ, comp, _ = _evolve(br, row, seqs[br.get("pat", 0)], collect)
-            next_branches.extend(succ)
-            completions.extend(comp)
+            ctx = None if buf is None else MatchContext(br, buf, slot, nfa.events)
+            succ, comp, _ = _advance(seqs[br[2]], br, row, ctx)
+            nxt += succ
+            done += comp
         # every row is a candidate start, once per sequence (Flink: the
         # NFA's start state is always live; PERMUTE = one start family per
         # order); the empty branch evolves on this row only if it actually
         # consumes it
-        for pat_i, pat_steps in enumerate(seqs):
-            start = _new_branch(row, pat_i)
-            succ, comp, unchanged = _evolve(start, row, pat_steps, collect)
-            if not unchanged:  # a start must consume its first row
-                next_branches.extend(succ)
-                completions.extend(comp)
+        for p, seq in enumerate(seqs):
+            start = (*last, p, 0, 0, empty, empty, no_ids)
+            ctx = None if buf is None else MatchContext(start, buf, slot, nfa.events)
+            succ, comp, skipped = _advance(seq, start, row, ctx)
+            if not skipped:  # a start must consume its first row
+                nxt += succ
+                done += comp
         # dedup identical NFA configurations (SharedBuffer node sharing)
-        seen_keys: set = set()
-        deduped: list[dict] = []
-        for b in next_branches:
-            k = _branch_key(b)
-            if k not in seen_keys:
-                seen_keys.add(k)
-                deduped.append(b)
-        branches = deduped
+        branches = list(dict.fromkeys(nxt))
         if len(branches) > MAX_BRANCHES:
             import warnings
 
@@ -895,53 +816,38 @@ def _match_events(
                 RuntimeWarning,
                 stacklevel=2,
             )
-            branches.sort(key=lambda b: (b["first_ts"], b["first_eid"]))
+            branches.sort(key=lambda b: (b[1], b[0]))
             branches = branches[:MAX_BRANCHES]
-        if not completions:
+        if not done:
             continue
-        completions.sort(
+        done.sort(
             key=lambda b: (
-                b["first_ts"],
-                b["first_eid"],
-                b.get("pat", 0),
+                b[1],
+                b[0],
+                b[2],
                 # same-start tie (epsilon-proceed vs take families): prefer
                 # the branch with the LATER last loop-var rows — Flink's
                 # SharedBuffer emits the longer/greedier assignment first —
                 # then an arbitrary-but-stable var-map key
-                tuple(sorted(((k, -v[1], -v[0]) for k, v in b["vl"].items()))),
+                tuple((i, -v[1], -v[0]) for i, v in enumerate(b[_VL]) if v is not None),
             )
         )
-        skip = pattern.skip
-        # dedup key: plain runs collapse same-span completions (the output
-        # schema can't distinguish them); with assignments collected the
-        # variable map IS part of the output (vars_json/CLASSIFIER), so
-        # distinct assignments of one span must each emit — Flink's noSkip
-        # emits every match
-        _dk = _mk if collect[0] else (
-            lambda c: (c["first_eid"], c["last_eid"], c["first_ts"], c["last_ts"])
-        )
+        # plain runs collapse same-span completions (the output schema
+        # can't distinguish them); with assignments collected the variable
+        # map IS part of the match tuple (vars_json/CLASSIFIER), so distinct
+        # assignments of one span each emit — Flink's noSkip emits every match
+        skip = nfa.skip
         if skip == "no_skip":
-            emitted = set()
-            for c in completions:
-                k = _dk(c)
-                if k not in emitted:
-                    emitted.add(k)
-                    matches.append(_mk(c))
+            matches += dict.fromkeys(mk(c, last) for c in done)
         elif skip == "to_next":
             done_starts = set()
-            for c in completions:
-                sk = (c["first_ts"], c["first_eid"])
-                if sk not in done_starts:
-                    done_starts.add(sk)
-                    matches.append(_mk(c))
-            branches = [
-                b
-                for b in branches
-                if (b["first_ts"], b["first_eid"]) not in done_starts
-            ]
+            for c in done:
+                if (c[1], c[0]) not in done_starts:
+                    done_starts.add((c[1], c[0]))
+                    matches.append(mk(c, last))
+            branches = [b for b in branches if (b[1], b[0]) not in done_starts]
         elif skip == "past_last":
-            w = completions[0]
-            matches.append(_mk(w))
+            matches.append(mk(done[0], last))
             # every live branch started before the match end → discard all
             branches = []
         else:  # ("to_first" | "to_last", var)
@@ -950,22 +856,21 @@ def _match_events(
             # target; later same-row completions at/after the target emit
             # too (Flink's per-match prune order)
             mode, var = skip
+            field, s = (_VF if mode == "to_first" else _VL), slot.get(var)
             threshold: tuple | None = None
             emitted = set()
-            for c in completions:
-                if threshold is not None and (
-                    (c["first_ts"], c["first_eid"]) < threshold
-                ):
+            for c in done:
+                if threshold is not None and (c[1], c[0]) < threshold:
                     continue
-                k = _dk(c)
-                if k not in emitted:
-                    emitted.add(k)
-                    matches.append(_mk(c))
-                tgt = (c["vf"] if mode == "to_first" else c["vl"]).get(var)
+                m = mk(c, last)
+                if m not in emitted:
+                    emitted.add(m)
+                    matches.append(m)
+                tgt = None if s is None else c[field][s]
                 if tgt is None:
                     threshold = (float("inf"), float("inf"))  # prune all
                     continue
-                if mode == "to_first" and tgt[0] == c["first_eid"]:
+                if mode == "to_first" and tgt[0] == c[0]:
                     # SKIP TO FIRST at the match's own start would rescan the
                     # same match forever — Flink throws exactly here
                     # (skipToLast at the own start is legal: it only prunes
@@ -976,24 +881,25 @@ def _match_events(
                         "AfterMatchSkipStrategy raises the same way"
                     )
                 threshold = (tgt[1], tgt[0])
-            if threshold is None:
-                branches = []
-            else:
-                branches = [
-                    b
-                    for b in branches
-                    if (b["first_ts"], b["first_eid"]) >= threshold
-                ]
-    if timeouts is not None and pattern.within_us is not None:
+            branches = (
+                []
+                if threshold is None
+                else [b for b in branches if (b[1], b[0]) >= threshold]
+            )
+    if timeouts is not None and within is not None:
         # bounded run: end-of-input = final watermark → pending branches
         # time out (Flink flushes the same way at MAX_WATERMARK); dedupe
         # identical (first, last-consumed) partials across forked branches
         timeouts.extend(_timeout_rec(b) for b in branches)
-        seen_t: set = set()
-        deduped_t = [t for t in timeouts if not (t in seen_t or seen_t.add(t))]
-        timeouts.clear()
-        timeouts.extend(deduped_t)
-    return matches, {"branches": branches}
+        timeouts[:] = dict.fromkeys(timeouts)
+    new_state: dict = {"branches": branches}
+    if buf is not None:
+        # keep each row a live branch references, once
+        live = {p[0] for b in branches for v in b[_VF:_VIDS] for p in v if p}
+        if nfa.events:
+            live.update(e for b in branches for ids in b[_VIDS] for e in ids)
+        new_state["rows"] = [r for e, r in buf.items() if e in live]
+    return matches, new_state
 
 
 def _nfa_rows(rows: list[dict], time_col: str) -> list[dict]:
@@ -1136,8 +1042,10 @@ def cep_match_batch(
         else CEP_OUTPUT
     )
 
+    nfa = _Nfa(pattern)
+
     def fn(key, rows: list[dict]) -> list[tuple]:
-        matches, _ = _match_events(_nfa_rows(rows, time_col), pattern, None)
+        matches, _ = _match_events(_nfa_rows(rows, time_col), nfa, None)
         return [(key, *m) for m in matches]
 
     events = cep_pregate(events, pattern, key_col, key_gate=True)
@@ -1229,9 +1137,11 @@ def cep_timed_out_partials(
     if pattern.within_us is None:
         raise ValueError("timeout side output requires Pattern.within(...)")
 
+    nfa = _Nfa(pattern)
+
     def fn(key, rows: list[dict]) -> list[tuple]:
         touts: list[tuple] = []
-        _match_events(_nfa_rows(rows, time_col), pattern, None, timeouts=touts)
+        _match_events(_nfa_rows(rows, time_col), nfa, None, timeouts=touts)
         return [(key, *t) for t in touts]
 
     return _keyed_apply(events, key_col, fn, CEP_OUTPUT)
@@ -1272,13 +1182,26 @@ def cep_pattern_matches(
 
 def _cep_fold(pattern: Pattern, time_col: str, buffer_to_watermark: bool):
     """The keyed-state fold of :func:`cep_pattern_matches`: the key's
-    state is its live branch set plus, with ``buffer_to_watermark``, the
-    rows still above the watermark (``pending``)."""
+    state is the ``_match_events`` state — its live branches as JSON
+    arrays, plus the rows they reference when the pattern has a match
+    context — and, with ``buffer_to_watermark``, the rows still above the
+    watermark (``pending``)."""
+    nfa = _Nfa(pattern)
 
     def fold(key, rows, raw, watermark_us):
-        if not isinstance(raw, dict) or "branches" not in raw:
-            raw = None  # unknown/legacy state → fresh
-        partial = {"branches": raw["branches"]} if raw else None
+        if raw is not None and not (
+            isinstance(raw, dict)
+            and isinstance(raw.get("branches"), list)
+            and all(isinstance(b, list) and len(b) == 8 for b in raw["branches"])
+        ):
+            # a silent fresh start would drop every live partial match
+            raise ValueError(
+                "CEP keyed state must be {'branches': [[first_eid, "
+                "first_ts, pat, step_idx, loop_count, vf, vl, vids], ...], "
+                "'rows': [...], 'pending': [...]}; got "
+                f"{str(raw)[:200]} (a checkpoint written with dict branches "
+                "cannot restart: start the query from a new checkpoint)"
+            )
         rows = (raw.get("pending", []) if raw else []) + [
             # sentinel flush rows carry no data
             r for r in rows if r["event_id"] is None or r["event_id"] >= 0
@@ -1289,7 +1212,7 @@ def _cep_fold(pattern: Pattern, time_col: str, buffer_to_watermark: bool):
             wm_us = watermark_us()
             hold = [r for r in rows if r["ts_us"] > wm_us]
             rows = [r for r in rows if r["ts_us"] <= wm_us]
-        matches, new_state = _match_events(rows, pattern, partial)
+        matches, new_state = _match_events(rows, nfa, raw)
         new_state["pending"] = hold
         # m[4], the variable map of patterns that collect ids, is not part
         # of the streaming output

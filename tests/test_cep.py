@@ -309,9 +309,53 @@ def test_quantified_state_across_batches():
     # A{2} B with the two A's in different batches
     p = Pattern.begin("a", _is("A")).times(2).followed_by("b", _is("B"))
     m1, st = _match_events(_rows([(1, 10, "A")]), p, None)
-    assert m1 == [] and st["branches"][0]["loop_count"] == 1
+    # a branch is (first_eid, first_ts, pat, step_idx, loop_count, ...)
+    assert m1 == [] and st["branches"][0][4] == 1
     m2, st2 = _match_events(_rows([(2, 20, "A"), (3, 30, "B")]), p, st)
     assert m2 == [(1, 3, 10, 30)] and st2["branches"] == []
+
+
+def test_max_branches_overflow_keeps_oldest_starts():
+    """Past ``MAX_BRANCHES`` live starts (no ``within``) the NFA warns and
+    keeps the oldest starts: with SKIP TO NEXT ROW each kept start pairs
+    with the closing B, and the newest three starts are gone. The match
+    list is the one the dict-branch interpreter produced on this input."""
+    from flink_1_12_2_spark.streaming.cep import MAX_BRANCHES
+
+    n = MAX_BRANCHES + 3
+    rows = _rows([(i, 10 * i, "A") for i in range(1, n + 1)] + [(n + 1, 10 * (n + 1), "B")])
+    p = _pat().skip_to_next_row()
+    with pytest.warns(RuntimeWarning, match="MAX_BRANCHES"):
+        m1, st = _match_events(rows[:-1], p, None)
+    assert m1 == [] and [b[0] for b in st["branches"]] == list(range(1, MAX_BRANCHES + 1))
+    m2, _ = _match_events(rows[-1:], p, st)
+    assert m2 == [(i, n + 1, 10 * i, 10 * (n + 1)) for i in range(1, MAX_BRANCHES + 1)]
+
+
+def test_cep_fold_rejects_state_it_cannot_read():
+    """The streaming fold raises on a state it cannot read instead of
+    starting the key afresh, which would drop its live partial matches:
+    dict branches as older checkpoints hold them, and a non-dict state.
+    Its own state, through JSON, resumes the match."""
+    import json
+
+    from flink_1_12_2_spark.streaming.cep import _cep_fold
+
+    fold = _cep_fold(_pat(), "ts", False)
+    dict_branches = {
+        "branches": [
+            {"first_eid": 1, "first_ts": 10, "step_idx": 1, "loop_count": 0,
+             "pat": 0, "vf": {"a": [1, 10]}, "vl": {"a": [1, 10]}}
+        ],
+        "pending": [],
+    }
+    for bad in (dict_branches, [1, 10, 0, 1, 0]):
+        with pytest.raises(ValueError, match="CEP keyed state must be"):
+            fold((7,), _rows([(2, 20, "B")]), bad, lambda: 0)
+    out, st, _ = fold((7,), _rows([(1, 10, "A")]), None, lambda: 0)
+    assert out == []
+    out, _, _ = fold((7,), _rows([(2, 20, "B")]), json.loads(json.dumps(st)), lambda: 0)
+    assert out == [(7, 1, 2, 10, 20)]
 
 
 def test_quantified_batch_equals_streaming(spark, sf_dir):
@@ -1009,20 +1053,18 @@ def test_reluctant_loop_epsilon_proceed():
     extending row forks BOTH the take (count+1) and the loop-closed
     (epsilon-proceed) branch — UntilConditionITCase's
     (start, [a1], breaking) + (start, [a1, a2], breaking) expected set."""
-    from flink_1_12_2_spark.streaming.cep import _evolve, _new_branch
-
     p = (
         Pattern.begin("a", _is("A"))
         .one_or_more()
         .followed_by("b", _is("B"))
     )
     rows = _rows([(1, 10, "A"), (2, 20, "A")])
-    start = _new_branch(rows[0])
-    succ, comp, _ = _evolve(start, rows[0], p.steps)
-    assert len(succ) == 1 and comp == []  # entered the loop, count 1
-    succ2, comp2, _ = _evolve(succ[0], rows[1], p.steps)
-    assert comp2 == []
-    states = sorted((b["step_idx"], b["loop_count"]) for b in succ2)
+    # branches as (step_idx, loop_count): b[3], b[4] of the branch tuple
+    m1, st = _match_events(rows[:1], p, None)
+    assert m1 == [] and [(b[3], b[4]) for b in st["branches"]] == [(0, 1)]
+    m2, st2 = _match_events(rows[1:], p, st)
+    assert m2 == []
+    states = sorted((b[3], b[4]) for b in st2["branches"] if b[0] == 1)
     # take (still in loop, count 2) AND epsilon-proceed (loop closed)
     assert states == [(0, 2), (1, 0)]
     # iterative to_last emission on the same-start tie: the longer (later

@@ -160,9 +160,10 @@ def test_cep_restart_from_checkpoint_is_exactly_once(spark, sf_dir):
 
 
 def test_cep_restart_with_row_payloads_is_exactly_once(spark, sf_dir):
-    """A pattern whose predicate reads the match context keeps row
-    payloads (``vfr``/``vlr``, with the ``ts`` Timestamp) on its branches;
-    a checkpoint holding them restarts and resumes exactly once."""
+    """A pattern whose predicate reads the match context keeps the rows
+    its branches reference (with the ``ts`` Timestamp) once per key in the
+    state's ``rows`` buffer; a checkpoint holding them restarts and
+    resumes exactly once."""
     from flink_1_12_2_spark.registry import load
     from flink_1_12_2_spark.streaming.cep import Pattern, cep_match_batch
 
@@ -175,10 +176,10 @@ def test_cep_restart_with_row_payloads_is_exactly_once(spark, sf_dir):
         map(tuple, cep_match_batch(load(spark, sf_dir, "events"), pattern).collect())
     )
     run1_state = _cep_restart(spark, sf_dir, pattern, one_shot)
-    payloads = [
-        b["vlr"]["a"]
-        for keys, _ in run1_state.values()
-        for state, _ in keys.values()
-        for b in state["branches"]
-    ]
+    states = [state for keys, _ in run1_state.values() for state, _ in keys.values()]
+    payloads = [r for state in states for r in state["rows"]]
     assert payloads and all("ts" in p and "value" in p for p in payloads)
+    # every row a branch points at (its LAST `a`, slot 0) is in the buffer
+    for state in states:
+        ids = {r["event_id"] for r in state["rows"]}
+        assert all(b[6][0][0] in ids for b in state["branches"])
