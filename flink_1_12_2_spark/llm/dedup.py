@@ -43,14 +43,14 @@ def fan_out(df: DataFrame) -> DataFrame:
     return rebalance_scan(df)
 
 
-#: Minimum SOURCE split count at which persisted intermediates are
-#: filled EAGERLY (a count() barrier right after persist). The racing
-#: consumers of a lazily-persisted frame each recompute its subtree on a
-#: cold cache (measured 2x end-to-end at 10x sf0.1), but the barrier
-#: jobs' fixed latency dominates when the raced data is tiny (measured
-#: ~1 s/slot at single-split sf0.1). Split count is the same volume
-#: proxy rebalance_scan uses: real corpora arrive as many splits, local
-#: test files as one.
+#: Minimum SOURCE split count at which :func:`is_multisplit` reports real
+#: data volume (the proxy rebalance_scan uses: real corpora arrive as many
+#: splits, local test files as one). It no longer gates any barrier in the
+#: engine: every dedup cache fills lazily, since on Spark 4.1 the
+#: consumers of one persisted frame share a single fill
+#: (``tests/test_llm.py::test_persisted_frame_fills_once_for_all_consumers``).
+#: Only the ``eager=`` switch of :func:`lsh_candidate_pairs` still reads it,
+#: for callers that stage the pipeline themselves.
 EAGER_FILL_MIN_SPLITS = 8
 
 
@@ -71,13 +71,6 @@ def is_multisplit(df: DataFrame) -> bool:
     if n >= (1 << 30):  # no file scan behind this frame
         return False
     return n >= EAGER_FILL_MIN_SPLITS
-
-
-def _maybe_eager(cached: DataFrame, source: DataFrame) -> DataFrame:
-    """Barrier the cache fill when the SOURCE is genuinely multi-split."""
-    if is_multisplit(source):
-        cached.count()
-    return cached
 
 
 NUM_PERM = 16  # minhash permutations
@@ -185,17 +178,11 @@ def shingle_sets(
     store between pipeline stages — memory-and-disk persist is the
     single-job equivalent.
     """
-    out = fan_out(df).select(
+    # filled lazily: the signature aggregate and both verify sides read
+    # one fill (no count() barrier needed)
+    return fan_out(df).select(
         F.col(id_col), word_shingles(F.col(text_col), n).alias("sh_arr")
     ).persist()
-    # Eager fill (multi-split sources only): the frame feeds several
-    # INDEPENDENT map stages (signature agg, both verify sides); left
-    # lazy, those stages race to fill the same cold cache and each
-    # recomputes the shingle subtree (A/B at 10x sf0.1: 16.8 s -> 8.6 s
-    # cold end-to-end with barriers). On single-split local files the
-    # raced data is tiny and the barrier jobs' fixed latency would
-    # dominate — see EAGER_FILL_MIN_SPLITS.
-    return _maybe_eager(out, df)
 
 
 def minhash_signatures(
@@ -238,7 +225,11 @@ def lsh_candidate_pairs(
     """LSH banding: docs sharing any band hash become candidate pairs
     (id_1 < id_2, distinct). Band hashes shared by more than ``band_df_cap``
     docs are dropped before the self-join (quadratic hot-band guard; exact
-    verification downstream is unaffected for surviving candidates)."""
+    verification downstream is unaffected for surviving candidates).
+
+    ``eager=True`` fills the band cache with a ``count()`` before the join
+    is built, for callers that time each stage; the engine's own pipelines
+    leave the fill to the join."""
     bands = F.array(
         *[
             F.struct(
@@ -370,13 +361,8 @@ def ngram_jaccard_pairs(
     sides and both verify sides. With it, shingling runs once and every
     consumer reads the columnar cache (at real scale: checkpoint the shingle
     table between stages — same shape)."""
-    # persisted: the array cache both feeds the posting-list cache fill
-    # below and BOUNDS what a lazy-fill race can recompute (r13 A/B:
-    # dropping this cache and rebuilding verify arrays from the posting
-    # cache looked strictly leaner on paper but ran 3× slower at bench
-    # scale — the posting cache's racers then each re-ran the whole
-    # text→shingle pipeline; with this boundary a racer recomputes only
-    # explode+window from columnar cache)
+    # persisted: when a hot shingle exists, three consumers read these
+    # arrays (the posting list below and both verify sides)
     docs = fan_out(df).select(
         F.col(id_col).alias("__id"),
         F.transform(word_shingles(F.col(text_col), n), md5int60).alias("sh_arr"),
@@ -397,7 +383,6 @@ def ngram_jaccard_pairs(
         .withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("sh")))
         .persist()
     )
-    _maybe_eager(sh, df)  # every downstream consumer reads this cache
     cold = sh.filter(F.col("__df") <= shingle_df_cap).drop("__df")
     # Data-adaptive plan pruning (AQE-style, recomputed every invocation):
     # probe whether ANY shingle exceeds the cap. When none does — every
@@ -463,7 +448,6 @@ def ngram_jaccard_pairs(
         # aggregation would execute once per branch
         .persist()
     )
-    _maybe_eager(counted, df)  # the two branches otherwise race the cold fill
     exact_part = counted.filter(F.col("__h1").isNull() & F.col("__h2").isNull()).select(
         "id_1",
         "id_2",
@@ -550,11 +534,9 @@ def simhash_pairs(
     n_sub = max_distance + 1
     sub_width = -(-comp_bits // n_sub)  # ceil: 24 bits → 4 × 6-bit sub-bands
     sub_mask = (1 << sub_width) - 1
-    # persist: simhash32 is 32 bit-vote aggregates per row — compute once,
-    # not once per self-join side (tiny cache: id + one bigint per doc)
     with_sh = fan_out(df).select(
         F.col(id_col).alias("__id"), simhash32(F.col(text_col)).alias("simhash")
-    ).persist()
+    )
     bands = F.array(
         *[
             F.struct(
@@ -570,7 +552,8 @@ def simhash_pairs(
     # downstream self-equijoin needs, so the exchange is shared — then split
     # into the cold direct join and the hot sub-band-refined join. persist:
     # both the cold and hot branches (and both self-join sides of each)
-    # consume this frame.
+    # consume this frame, so simhash32 (32 bit-vote aggregates per row)
+    # runs once.
     banded = (
         with_sh.select("__id", "simhash", F.explode(bands).alias("b"))
         .select(
@@ -579,7 +562,6 @@ def simhash_pairs(
         .withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("band", "bv")))
         .persist()
     )
-    _maybe_eager(banded, df)  # cold/hot branches + their self-join sides race otherwise
     cold = banded.filter(F.col("__df") <= band_df_cap).drop("__df")
     # complementary 24 bits for band b: low 8b bits ∪ bits above (b+1)·8,
     # packed into one 24-bit value, then re-banded into n_sub sub-bands
@@ -739,7 +721,6 @@ def cosine_pairs(
         .select("__id", "vec_n", F.col("b.band").alias("band"), F.col("b.bv").alias("bv"))
         .persist()
     )
-    _maybe_eager(banded, df)  # both self-join map stages read this cache
     a = banded.select("__id", "band", "bv", F.col("vec_n").alias("v1"))
     b = banded.select(
         F.col("__id").alias("__id2"), "band", "bv", F.col("vec_n").alias("v2")
@@ -835,13 +816,11 @@ def exact_substring_pairs(
         # persisted: both self-join sides consume the capped posting list
         .persist()
     )
-    _maybe_eager(w2, df)  # both self-join sides read this cache
     a = w2.select("wh", F.col("__id").alias("id_1"), F.col("pos").alias("pa"))
     b = w2.select("wh", F.col("__id").alias("id_2"), F.col("pos").alias("pb"))
     # persisted: the pair stream feeds BOTH the run-extension windows and
     # the shared-window count
     pr = a.join(b, "wh").filter(F.col("id_1") < F.col("id_2")).persist()
-    _maybe_eager(pr, df)  # run-extension and shared-window consumers race otherwise
     cells = pr.select(
         "id_1", "id_2", (F.col("pa") - F.col("pb")).alias("diag"), "pa"
     ).distinct()
@@ -922,8 +901,7 @@ def semantic_dedup(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    cc = cells.persist()
-    _maybe_eager(cc, df)  # pair sides + the final join-back read this cache
+    cc = cells.persist()  # pair sides + the final join-back read this cache
     a = cc.select(
         F.col("cell"), F.col(id_col).alias("id_1"), F.col("vec_n").alias("v1")
     )

@@ -122,10 +122,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified too — not just the final pair set."""
     d = load(spark, sf_dir, "documents")
     sets_ = D.shingle_sets(d, "doc_id", "text")
-    # sigs persisted too: the LSH banding self-join otherwise recomputes the
-    # signature aggregation for its broadcast/build side (tiny: K ints/doc)
-    sigs = D.minhash_signatures_from_sets(sets_, "doc_id").persist()
-    cand = D.lsh_candidate_pairs(sigs, "doc_id", eager=D.is_multisplit(d))
+    sigs = D.minhash_signatures_from_sets(sets_, "doc_id")
+    cand = D.lsh_candidate_pairs(sigs, "doc_id")
     ver = D.jaccard_verify(cand, d, "doc_id", "text", sets_df=sets_)
     return (
         ver.filter(F.col("jaccard") >= JACCARD_T)
@@ -291,8 +289,8 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster boundaries are verified, not just pairs."""
     d = load(spark, sf_dir, "documents")
     sets_ = D.shingle_sets(d, "doc_id", "text")
-    sigs = D.minhash_signatures_from_sets(sets_, "doc_id").persist()
-    cand = D.lsh_candidate_pairs(sigs, "doc_id", eager=D.is_multisplit(d))
+    sigs = D.minhash_signatures_from_sets(sets_, "doc_id")
+    cand = D.lsh_candidate_pairs(sigs, "doc_id")
     pairs = D.jaccard_verify(cand, d, "doc_id", "text", sets_df=sets_).filter(
         F.col("jaccard") >= JACCARD_T
     )

@@ -809,17 +809,6 @@ def match_recognize(df: DataFrame, sql: str) -> DataFrame:
         # output once while keeping the subtree visible to EXPLAIN/plan
         # tests and reclaimable via spark.catalog.clearCache().
         out = out.persist()
-        # ALWAYS eager-fill this cache: every per-variable aggregate join
-        # scans it, and left lazy their map stages race the cold fill and
-        # each re-runs the subtree (r10 finding). The r11 adaptive
-        # heuristic (_maybe_eager: skip the barrier on single-split
-        # sources) was built for dedup pipelines whose raced subtree is a
-        # cheap scan — here the subtree is the PYTHON NFA, expensive at
-        # any split count, so the race costs ~1 s even on a single local
-        # file (r12 A/B at sf0.1: lazy min 3.6 s vs eager min 2.6 s —
-        # the real cause of the r11 bench drift on this row, previously
-        # misattributed to co-tenant load).
-        out.count()
     for which, col, alias in plain:
         anchor = f"{which.lower()}_event_id"
         side = df.select(

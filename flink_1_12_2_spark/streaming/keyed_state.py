@@ -56,6 +56,7 @@ import json
 import operator
 from typing import Any, Callable, Collection, Iterator, Sequence
 
+import numpy as np
 import orjson
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -130,9 +131,12 @@ def frame_rows(
     cols = []
     for name in names:
         s = frame[name]
+        # only float, datetime and extension columns can hold NaN/NaT/NA;
+        # numpy int and bool columns cannot, so they skip the scan
+        nullable = s.dtype.kind in "fMm" or not isinstance(s.dtype, np.dtype)
         vals = (
             s.astype(object).where(s.notna(), None).tolist()
-            if s.dtype != object and s.hasnans
+            if nullable and s.hasnans
             else s.tolist()
         )
         if name in integral and s.dtype.kind == "f":

@@ -135,7 +135,7 @@ def test_rebalance_scan_widens_narrow_and_leaves_wide(spark):
 
 
 def test_is_multisplit_reads_file_index_not_rdd(spark, sf_dir):
-    """The eager-fill discriminator must derive volume from the SOURCE
+    """The volume discriminator must derive volume from the SOURCE
     scan's file index: single small local files are never multi-split,
     frames with no file scan (in-memory, post-shuffle synthetic) have no
     volume signal, and a derived/aggregated frame reports its source
@@ -152,3 +152,77 @@ def test_is_multisplit_reads_file_index_not_rdd(spark, sf_dir):
     # post-shuffle derived frame: signal still comes from the file index
     agg = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
     assert is_multisplit(agg) is False
+
+
+def test_persisted_frame_fills_once_for_all_consumers(spark):
+    """The dedup pipelines persist frames that two or more independent
+    stages read and leave the fill to the query itself (no count()
+    barrier). That holds only while every consumer of a lazily persisted
+    frame reads one fill: Python must see each row once. A Spark whose
+    consumers each recomputed the cold cache would double the Python work
+    silently; this fails loudly instead."""
+    import pyspark.sql.functions as F
+
+    from flink_1_12_2_spark.session import pinned_repartition
+
+    n = 20_000
+    seen = spark.sparkContext.accumulator(0)
+
+    def double(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf.assign(v=pdf["id"] * 2)
+
+    src = spark.range(n).withColumn("k", F.col("id") % 97)
+    cached = (
+        pinned_repartition(src, "k")
+        .mapInPandas(double, "id long, k long, v long")
+        .persist()
+    )
+    try:
+        per_k = cached.groupBy("k").agg(F.sum("v").alias("sv"))
+        per_m = cached.groupBy((F.col("id") % 13).alias("m")).agg(
+            F.count(F.lit(1)).alias("c")
+        )
+        out = (
+            cached.select("id", "k", (F.col("id") % 13).alias("m"))
+            .join(per_k, "k")
+            .join(per_m, "m")
+        )
+        assert out.count() == n
+        assert seen.value == n
+    finally:
+        cached.unpersist()
+
+
+def test_near_dup_pipelines_on_multisplit_source(spark, sf_dir, tmp_path):
+    """Real corpora arrive as many files, local test tables as one. The
+    near-dup pipelines must return the same rows from the sf0.01
+    documents written as 8 parquet files (no rebalance_scan widening;
+    every cache fills from 8 scan splits) as from the single-file table."""
+    import os
+
+    from flink_1_12_2_spark.llm.dedup import is_multisplit
+    from flink_1_12_2_spark.registry import QUERIES, load, load_all_query_modules
+
+    base = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    split = str(tmp_path)
+    load(spark, base, "documents").repartition(8).write.parquet(
+        f"{split}/documents.parquet"
+    )
+    assert is_multisplit(load(spark, split, "documents")) is True
+    load_all_query_modules()
+    for name in (
+        "dedup_minhash_lsh",
+        "dedup_ngram_jaccard",
+        "text_chunk_dedup",
+        "dedup_exact_substring",
+        "dedup_simhash",
+    ):
+        rows = []
+        for sf in (base, split):
+            spark.catalog.clearCache()
+            rows.append(sorted(QUERIES[name].fn(spark, sf).collect(), key=repr))
+        spark.catalog.clearCache()
+        assert rows[0], name
+        assert rows[1] == rows[0], name

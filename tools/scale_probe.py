@@ -5,9 +5,8 @@ The salt (every word suffixed ``_{copy}`` for copies ≥ 1) makes content
 growth honest: no cross-copy near-duplicates, so candidate structure
 replicates per copy and a linear algorithm should scale ≈ N× (minus
 fixed overhead), while an accidental all-pairs or cache-race pathology
-shows up as a superlinear ratio. This is the experiment that found (and
-now regression-guards) the r10 cold-cache fill races — see SCALE.md
-"Round-10: the 10× scaling experiment".
+shows up as a superlinear ratio. See SCALE.md "Round-10: the 10× scaling
+experiment" and its dated correction.
 
 Each query runs in its OWN subprocess/JVM: long-lived local[32] sessions
 degrade order-dependently under the scaled corpus' allocation pattern
@@ -19,9 +18,9 @@ Usage: python tools/scale_probe.py [base_sf_dir] [copies] [query ...]
 Defaults: /root/testdata/sf0.1, 10 copies, the four near-dup headliners
 plus the two Python-NFA rows (events scale by per-copy key shifts).
 Prints one line per query: base seconds, scaled seconds, ratio. The
-timed region is fn() + write on cold caches — the production path
-(r11; a write-only region after clearCache would time the lazy
-multi-consumer recompute race the in-fn barriers exist to prevent).
+timed region is fn() + write on cold caches — the production path: the
+work of any action a query runs inside fn() (ngram's plan-pruning probe,
+exact-substring's result fill, the streaming rows) is timed with it.
 Absolute seconds are NOT bench-comparable; only the base/scaled RATIO
 is the signal. Exit 1 if any ratio is clearly superlinear (> 2 × copies).
 """
@@ -74,10 +73,7 @@ fn(spark, {base!r}).write.format("noop").mode("overwrite").save()
 out = []
 for sf in ({base!r}, {scaled!r}):
     # timed region = fn() + write, cold caches: the operator's PRODUCTION
-    # path. Timing write alone after a clearCache would re-run the
-    # persisted subtrees LAZILY — racing multi-consumer fills, the exact
-    # pathology the in-fn eager barriers exist to prevent — and for
-    # streaming rows fn() is where the work happens anyway.
+    # path, including any action fn() itself runs
     spark.catalog.clearCache()
     t0 = time.time()
     df = fn(spark, sf)
@@ -138,8 +134,8 @@ def build_scaled_dir(base: str, copies: int) -> str:
     u = parts[0]
     for p in parts[1:]:
         u = u.unionByName(p)
-    # many splits: the scaled dir must look like a real corpus so the
-    # adaptive eager fills (llm/dedup.EAGER_FILL_MIN_SPLITS) engage
+    # many splits: the scaled dir must look like a real corpus, which
+    # arrives as many files (llm/dedup.is_multisplit reads True)
     u.repartition(32).write.mode("overwrite").parquet(docs_path)
 
     # events scale the same way for the CEP/MATCH_RECOGNIZE probes (r10
