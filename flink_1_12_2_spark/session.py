@@ -11,10 +11,14 @@ Spark-first design notes (100 TB scale):
   agg rules.
 - ``spark.sql.shuffle.partitions`` is a session-level knob; on a real cluster
   AQE coalescing makes the initial value mostly a ceiling.
-- Tables are registered as temp views over ``spark.read.parquet`` so every
-  query gets DataSource V2 predicate pushdown + column pruning + partition
-  pruning for free (Flink's SupportsFilterPushDown/SupportsProjectionPushDown
-  contracts, reference: flink-table/flink-table-common/.../connector/source/abilities/).
+- Tables are registered as temp views over their connector's scan, so
+  every query gets DataSource V2 predicate pushdown + column pruning +
+  partition pruning for free (Flink's SupportsFilterPushDown/
+  SupportsProjectionPushDown contracts, reference:
+  flink-table/flink-table-common/.../connector/source/abilities/). One
+  function, ``sql.ddl.scan_frame``, builds every scan of a ``TableMeta``:
+  the plain view, OPTIONS-hinted views, kafka refreshes, the view
+  re-exposed after INSERT and ``stream_table``'s stream.
 """
 
 from __future__ import annotations
@@ -24,7 +28,6 @@ import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 TESTDATA_TABLES = (
     "region",
@@ -76,14 +79,16 @@ _DEFAULT_CONF = {
 # fires exactly when memory is short, so landing spill on a nearly-full
 # shm inverts §5's safety valve (ENOSPC / OS memory pressure — r13
 # verdict item 1). 8 GiB is conservative vs the sandbox's <1 MB bench
-# shuffles and still trips the fallback on small-RAM hosts; override
-# with SPARK_GRAFT_SHM_MIN_FREE (bytes).
+# shuffles and still trips the fallback on small-RAM hosts.
 SHM_MIN_FREE_BYTES = 8 << 30
 
 
-def _fast_local_dir(path: str = "/dev/shm") -> str | None:
-    """``path`` when it exists AND has tmpfs headroom, else ``None``
-    (callers fall back to the system temp / Spark default)."""
+def _fast_local_dir(
+    path: str = "/dev/shm", min_free: int = SHM_MIN_FREE_BYTES
+) -> str | None:
+    """``path`` when it exists AND has at least ``min_free`` bytes of
+    tmpfs headroom, else ``None`` (callers fall back to the system temp /
+    Spark default)."""
     if not os.path.isdir(path):
         return None
     try:
@@ -91,12 +96,6 @@ def _fast_local_dir(path: str = "/dev/shm") -> str | None:
         free = st.f_bavail * st.f_frsize
     except OSError:
         return None
-    try:
-        min_free = int(
-            os.environ.get("SPARK_GRAFT_SHM_MIN_FREE", SHM_MIN_FREE_BYTES)
-        )
-    except ValueError:
-        min_free = SHM_MIN_FREE_BYTES
     return path if free >= min_free else None
 
 
@@ -179,18 +178,15 @@ def get_spark(
     # rows). The daemon subprocess must be able to import this package —
     # export the repo root on PYTHONPATH before the JVM launches (static:
     # first session of the JVM only; harmless if already importable).
-    if os.environ.get("SPARK_GRAFT_DAEMON_PRELOAD", "1") != "0":
-        _repo_root = os.path.dirname(
-            os.path.dirname(os.path.abspath(__file__))
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pp = os.environ.get("PYTHONPATH", "")
+    if repo_root not in pp.split(os.pathsep):
+        os.environ["PYTHONPATH"] = repo_root + (
+            (os.pathsep + pp) if pp else ""
         )
-        _pp = os.environ.get("PYTHONPATH", "")
-        if _repo_root not in _pp.split(os.pathsep):
-            os.environ["PYTHONPATH"] = (
-                _repo_root + ((os.pathsep + _pp) if _pp else "")
-            )
-        builder = builder.config(
-            "spark.python.daemon.module", "flink_1_12_2_spark.daemon_preload"
-        )
+    builder = builder.config(
+        "spark.python.daemon.module", "flink_1_12_2_spark.daemon_preload"
+    )
     if hive:
         builder = builder.enableHiveSupport()
     conf = dict(_DEFAULT_CONF)
@@ -491,51 +487,16 @@ class EngineSession:
 
     # -- registry -----------------------------------------------------------
     def register_table(self, name: str, meta: TableMeta) -> None:
+        """Register ``name``: its temp view is the table's scan
+        (``sql.ddl.scan_frame``, the one scan path), and a kafka-backed
+        table records its topic fingerprint for query-time refresh."""
+        from flink_1_12_2_spark.sql.ddl import scan_frame
+
+        scan_frame(self, meta).createOrReplaceTempView(name)
         self._tables[name] = meta
         self._catalogs.setdefault(self._current_catalog, set()).add(name)
-        if meta.connector == "jdbc":
-            from flink_1_12_2_spark.sql.ddl import _jdbc_frame
-
-            _jdbc_frame(self.spark, meta).createOrReplaceTempView(name)
-            return
         if meta.connector in ("kafka", "upsert-kafka"):
-            if meta.connector == "upsert-kafka":
-                from flink_1_12_2_spark.sources.kafka_emu import (
-                    read_upsert_topic_batch,
-                )
-
-                df = read_upsert_topic_batch(
-                    self.spark, meta.path, meta.schema_ddl or "",
-                    list(meta.primary_key),
-                    value_format=meta.fmt, options=meta.options,
-                )
-            else:
-                from flink_1_12_2_spark.sources.kafka_emu import topic_table
-
-                df = topic_table(
-                    self.spark, meta.path, meta.fmt,
-                    payload_schema=meta.schema_ddl or "",
-                    options=meta.options,
-                    metadata_cols=meta.metadata_cols,
-                )
-            for cname, cexpr in meta.computed_cols:
-                from flink_1_12_2_spark.sql.rewriter import rewrite_expr
-
-                df = df.withColumn(cname, F.expr(rewrite_expr(cexpr)))
-            if meta.declared_columns and set(meta.declared_columns) == set(
-                df.columns
-            ):
-                # SELECT * presents the DDL's declared column order
-                # (Flink keeps metadata/computed columns in declared
-                # position, not appended)
-                df = df.select(*meta.declared_columns)
-            df.createOrReplaceTempView(name)
             self._kafka_fps[name] = self._topic_fingerprint(meta.path)
-            return
-        reader = self.spark.read.format(meta.fmt)
-        for k, v in meta.options.items():
-            reader = reader.option(k, v)
-        reader.load(meta.path).createOrReplaceTempView(name)
 
     @staticmethod
     def _topic_fingerprint(path: str) -> tuple[str, ...]:
@@ -612,24 +573,9 @@ class EngineSession:
                 merged.pop("scan.startup.__excluded", None)
             hinted = dataclasses.replace(meta, options=merged)
             view = f"__hint_{name}_{abs(hash(frozenset(overrides.items()))) % 10**8}"
-            df = scan_frame(self, hinted)
-            for cname, cexpr in meta.computed_cols:
-                # the hinted scan exposes the SAME declared schema as
-                # the plain one — computed columns included, for every
-                # connector (computed_cols rides TableMeta)
-                from flink_1_12_2_spark.sql.rewriter import rewrite_expr
-
-                df = df.withColumn(cname, F.expr(rewrite_expr(cexpr)))
-            if meta.declared_columns and set(meta.declared_columns) == set(
-                df.columns
-            ):
-                # SELECT * through the hint presents DDL-declared column
-                # order, like register_table's plain view. EQUALITY, not
-                # subset: a CDC scan carries engine columns beyond the
-                # declared ones (_row_kind, ts_ms) that a subset-select
-                # would silently drop, corrupting the changelog
-                df = df.select(*meta.declared_columns)
-            df.createOrReplaceTempView(view)
+            # the hinted scan exposes the SAME declared schema as the
+            # plain view: same scan path, other options
+            scan_frame(self, hinted).createOrReplaceTempView(view)
             return view
 
         return hint_re.sub(repl, q)
@@ -637,15 +583,18 @@ class EngineSession:
     def _refresh_stale_kafka_views(self) -> None:
         """Re-resolve kafka-backed views whose topic changed since their
         registration (Flink's scan resolves at query time; the emulated
-        view pins its file index when built — r11 advice). The check is
-        one os.listdir per kafka table; a refresh re-runs the topic read
-        only for topics that actually changed."""
+        view pins its file index when built — r11 advice)."""
         for name, meta in list(self._tables.items()):
-            if meta.connector not in ("kafka", "upsert-kafka"):
-                continue
-            fp = self._topic_fingerprint(meta.path)
-            if fp and fp != self._kafka_fps.get(name):
-                self.register_table(name, meta)
+            self._refresh_if_stale(name, meta)
+
+    def _refresh_if_stale(self, name: str, meta: TableMeta) -> None:
+        """The stale-topic check: one os.listdir per kafka table; the
+        topic read re-runs only for topics that actually changed."""
+        if meta.connector not in ("kafka", "upsert-kafka"):
+            return
+        fp = self._topic_fingerprint(meta.path)
+        if fp and fp != self._kafka_fps.get(name):
+            self.register_table(name, meta)
 
     def register_view_meta(self, name: str, meta: TableMeta) -> None:
         """Attach registry metadata (event time / watermark / PK) to an
@@ -680,10 +629,8 @@ class EngineSession:
 
     def table(self, name: str) -> DataFrame:
         meta = self._tables.get(name)
-        if meta is not None and meta.connector in ("kafka", "upsert-kafka"):
-            fp = self._topic_fingerprint(meta.path)
-            if fp and fp != self._kafka_fps.get(name):
-                self.register_table(name, meta)
+        if meta is not None:
+            self._refresh_if_stale(name, meta)
         return self.spark.table(name)
 
     def meta(self, name: str) -> TableMeta | None:
@@ -691,78 +638,15 @@ class EngineSession:
 
     # -- streaming scan with watermark from registry metadata ---------------
     def stream_table(self, name: str) -> DataFrame:
-        """Read a registered table as a stream, applying its watermark.
+        """Read a registered table as a stream: the same scan as its
+        batch view (``sql.ddl.scan_frame``), plus its watermark.
 
         Flink parity: StreamExecTableSourceScan + WatermarkAssigner
         (reference: flink-table/flink-table-planner-blink/.../physical/stream/StreamExecTableSourceScan.scala).
         """
-        meta = self._tables[name]
-        if meta.connector == "jdbc":
-            raise ValueError(
-                "jdbc tables are bounded scans (+ lookup joins) — Flink's "
-                "jdbc source has no unbounded mode either"
-            )
-        if meta.connector in ("print", "blackhole"):
-            raise ValueError(
-                f"{meta.connector!r} is a sink-only connector"
-            )
-        if meta.connector == "datagen":
-            from flink_1_12_2_spark.sources.devgen import datagen_stream
+        from flink_1_12_2_spark.sql.ddl import scan_frame
 
-            df = datagen_stream(
-                self.spark, meta.schema_ddl or "", meta.options
-            )
-            if meta.event_time_col and meta.watermark_delay:
-                df = df.withWatermark(
-                    meta.event_time_col, meta.watermark_delay
-                )
-            return df
-        if meta.connector == "upsert-kafka":
-            from flink_1_12_2_spark.sources.kafka_emu import (
-                read_upsert_topic_changelog_stream,
-            )
-
-            df = read_upsert_topic_changelog_stream(
-                self.spark, meta.path, meta.schema_ddl or "",
-                list(meta.primary_key),
-                value_format=meta.fmt, options=meta.options,
-            )
-        elif meta.connector == "kafka":
-            from flink_1_12_2_spark.sources.kafka_emu import (
-                topic_table_stream,
-            )
-
-            df = topic_table_stream(
-                self.spark, meta.path, meta.fmt,
-                payload_schema=meta.schema_ddl or "",
-                options=meta.options,
-                metadata_cols=meta.metadata_cols,
-            )
-        else:
-            from flink_1_12_2_spark.sql.ddl import _format_scan_options
-
-            # the PHYSICAL schema (declared columns only): the batch
-            # view's schema includes computed columns the files don't
-            # carry, which would make every csv/json record malformed —
-            # computed columns re-apply AFTER the load, like the batch
-            # scan path
-            physical = meta.schema_ddl or self.spark.table(name).schema
-            r = self.spark.readStream.format(meta.fmt).schema(physical)
-            # same Flink→Spark format-option mapping as the batch scan
-            # (csv.field-delimiter → sep, ignore-parse-errors → mode, …)
-            for k, v in _format_scan_options(meta.fmt, meta.options).items():
-                r = r.option(k, v)
-            if meta.fmt == "csv":
-                r = r.option("header", "true")
-            df = r.load(meta.path)
-            if meta.computed_cols:
-                from flink_1_12_2_spark.sql.rewriter import rewrite_expr
-
-                for cname, cexpr in meta.computed_cols:
-                    df = df.withColumn(cname, F.expr(rewrite_expr(cexpr)))
-        if meta.event_time_col and meta.watermark_delay:
-            df = df.withWatermark(meta.event_time_col, meta.watermark_delay)
-        return df
+        return scan_frame(self, self._tables[name], streaming=True)
 
     # -- SQL front door ------------------------------------------------------
     def sql(self, query: str) -> DataFrame:

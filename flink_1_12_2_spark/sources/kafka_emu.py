@@ -143,23 +143,11 @@ def read_topic_stream(
     the engine's ``_row_kind`` column (operators/cdc_formats.py).
     ``options['scan.startup.mode']`` positions the consumer (see
     :func:`_startup_excluded`)."""
-    def _reader():
-        r = spark.readStream.schema("value string").option(
-            "recursiveFileLookup", "true"
-        )
-        if max_files_per_trigger:
-            r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        return r
-
-    paths = _topic_paths(topic_dir)
-    # Spark's file stream source takes ONE path (globs count as one);
-    # a semicolon topic list becomes a union of per-topic streams —
-    # exactly a consumer subscribed to several topics
-    raw = _per_path_union(
-        lambda p: _reader().text(p), paths, metadata_cols
+    return _read_topic(
+        spark, topic_dir, value_format, payload_schema, options,
+        metadata_cols, streaming=True,
+        max_files_per_trigger=max_files_per_trigger,
     )
-    raw = _apply_startup(raw, topic_dir, options)
-    return _decode_value(raw, value_format, payload_schema, metadata_cols)
 
 
 def read_topic_batch(
@@ -172,17 +160,41 @@ def read_topic_batch(
 ) -> DataFrame:
     """Bounded read of the topic from the startup position to the current
     end (Flink's kafka source consuming to the latest offset)."""
-    paths = _topic_paths(topic_dir)
-    if metadata_cols:
-        raw = _per_path_union(
-            lambda p: spark.read.option(
-                "recursiveFileLookup", "true"
-            ).text(p),
-            paths,
-            metadata_cols,
-        )
+    return _read_topic(
+        spark, topic_dir, value_format, payload_schema, options,
+        metadata_cols, streaming=False,
+    )
+
+
+def _read_topic(
+    spark: SparkSession,
+    topic_dir: str,
+    value_format: str,
+    payload_schema: str,
+    options: dict | None,
+    metadata_cols,
+    streaming: bool,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """The one topic read behind :func:`read_topic_stream` and
+    :func:`read_topic_batch`: raw value lines from the startup position,
+    decoded per the value format."""
+    if streaming:
+        r = spark.readStream.schema("value string")
     else:
-        raw = spark.read.option("recursiveFileLookup", "true").text(paths)
+        r = spark.read
+    r = r.option("recursiveFileLookup", "true")
+    if max_files_per_trigger:
+        r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    paths = _topic_paths(topic_dir)
+    if streaming or metadata_cols:
+        # Spark's file stream source takes ONE path (globs count as one),
+        # and metadata columns attach per file-source frame: a semicolon
+        # topic list becomes a union of per-topic frames — exactly a
+        # consumer subscribed to several topics
+        raw = _per_path_union(r.text, paths, metadata_cols)
+    else:
+        raw = r.text(paths)
     raw = _apply_startup(raw, topic_dir, options)
     return _decode_value(raw, value_format, payload_schema, metadata_cols)
 
@@ -376,21 +388,26 @@ def topic_table(
     payload_schema: str = "",
     options: dict | None = None,
     metadata_cols=(),
+    streaming: bool = False,
 ) -> DataFrame:
-    """Bounded table over a topic — the DDL front door's scan path
-    (KafkaDynamicTableFactory.java:95 createDynamicTableSource). Formats:
-    json / raw / the three CDC formats (read_topic_batch) plus
+    """Table over a topic — the DDL front door's scan path
+    (KafkaDynamicTableFactory.java:95 createDynamicTableSource), bounded
+    or, with ``streaming``, as a Structured Stream (mapInPandas decode
+    works on streaming frames, so avro-confluent streams too). Formats:
+    json / raw / the three CDC formats (:func:`_read_topic`) plus
     ``avro-confluent`` (registry-framed messages decoded against the
     subject's latest reader schema — RegistryAvroDeserializationSchema).
     ``metadata_cols`` attach FLIP-107 readable metadata beside the
     payload columns."""
+
+    def read(fmt: str, schema: str) -> DataFrame:
+        return _read_topic(
+            spark, topic_dir, fmt, schema, options, metadata_cols, streaming
+        )
+
     if value_format == "avro-confluent":
         reg, subject = _registry_opts(topic_dir, options)
-        raw = read_topic_batch(
-            spark, topic_dir, "raw", "", options=options,
-            metadata_cols=metadata_cols,
-        )
-        return _avro_decode_keep(raw, reg, subject, metadata_cols)
+        return _avro_decode_keep(read("raw", ""), reg, subject, metadata_cols)
     if value_format == "debezium-avro-confluent":
         # DebeziumAvroFormatFactory: the debezium envelope, Avro-coded
         # against the registry — registry-decode to the JSON envelope,
@@ -400,16 +417,9 @@ def topic_table(
         )
 
         reg, subject = _registry_opts(topic_dir, options)
-        raw = read_topic_batch(
-            spark, topic_dir, "raw", "", options=options,
-            metadata_cols=metadata_cols,
-        )
-        jsoned = avro_registry_to_json(raw, reg, subject)
+        jsoned = avro_registry_to_json(read("raw", ""), reg, subject)
         return parse_debezium_json(jsoned, "value", payload_schema)
-    return read_topic_batch(
-        spark, topic_dir, value_format, payload_schema, options=options,
-        metadata_cols=metadata_cols,
-    )
+    return read(value_format, payload_schema)
 
 
 def _avro_decode_keep(raw, reg, subject, metadata_cols):
@@ -427,48 +437,6 @@ def _avro_decode_keep(raw, reg, subject, metadata_cols):
     )
     md_names = [m[0] for m in metadata_cols]
     return out.select("__v.*", *md_names)
-
-
-def topic_table_stream(
-    spark: SparkSession,
-    topic_dir: str,
-    value_format: str,
-    payload_schema: str = "",
-    options: dict | None = None,
-    max_files_per_trigger: int | None = None,
-    metadata_cols=(),
-) -> DataFrame:
-    """Streaming twin of :func:`topic_table` (mapInPandas decode works on
-    streaming frames, so avro-confluent streams too)."""
-    if value_format == "avro-confluent":
-        reg, subject = _registry_opts(topic_dir, options)
-        raw = read_topic_stream(
-            spark, topic_dir, "raw", "",
-            max_files_per_trigger=max_files_per_trigger,
-            options=options,
-            metadata_cols=metadata_cols,
-        )
-        return _avro_decode_keep(raw, reg, subject, metadata_cols)
-    if value_format == "debezium-avro-confluent":
-        from flink_1_12_2_spark.sources.schema_registry import (
-            avro_registry_to_json,
-        )
-
-        reg, subject = _registry_opts(topic_dir, options)
-        raw = read_topic_stream(
-            spark, topic_dir, "raw", "",
-            max_files_per_trigger=max_files_per_trigger,
-            options=options,
-            metadata_cols=metadata_cols,
-        )
-        jsoned = avro_registry_to_json(raw, reg, subject)
-        return parse_debezium_json(jsoned, "value", payload_schema)
-    return read_topic_stream(
-        spark, topic_dir, value_format, payload_schema,
-        max_files_per_trigger=max_files_per_trigger,
-        options=options,
-        metadata_cols=metadata_cols,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -654,53 +622,27 @@ def read_upsert_topic_batch(
     so only the surviving per-key latest rows pay the Avro decode."""
     from pyspark.sql import Window
 
-    raw = spark.read.option("recursiveFileLookup", "true").text(topic_dir)
-    env = raw.select(
-        F.get_json_object("value", "$.b").cast("bigint").alias("__b"),
-        F.coalesce(
-            F.get_json_object("value", "$.s").cast("bigint"), F.lit(0)
-        ).alias("__s"),
-        F.get_json_object("value", "$.k").alias("__k"),
-        F.get_json_object("value", "$.v").alias("__vraw"),
-    )
+    env = _upsert_envelopes(spark, topic_dir, streaming=False)
     w = Window.partitionBy("__k").orderBy(
-        F.col("__b").desc(), F.col("__s").desc()
+        F.col("__seq").desc(), F.col("__sub").desc()
     )
     latest = (
         env.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .filter(F.col("__vraw").isNotNull() & (F.col("__vraw") != "null"))
+        .filter(~_is_tombstone())
     )
-    fields = _payload_fields(payload_schema)
-    except_key = _value_fields_include(options) == "EXCEPT_KEY"
-    if value_format == "avro-confluent":
-        from flink_1_12_2_spark.sources.schema_registry import (
-            avro_registry_decode,
-            avro_registry_struct_decode,
-        )
-
-        reg, subject = _registry_opts(topic_dir, options)
-        if not except_key:
-            return avro_registry_decode(
-                latest.select(F.unbase64("__vraw").alias("value")),
-                reg, subject,
-            )
-        latest = avro_registry_struct_decode(
-            latest.withColumn("__vbin", F.unbase64("__vraw")),
-            reg, subject, value_col="__vbin", out_col="__v",
-        )
-        v = F.col("__v")
-    elif except_key:
-        v = F.from_json(
-            F.col("__vraw"), _schema_without(payload_schema, pk_cols)
-        )
-    else:
-        v = F.from_json(F.col("__vraw"), f"struct<{payload_schema}>")
-    k = F.from_json(F.col("__k"), _key_struct(payload_schema, pk_cols))
+    latest, v = _upsert_value(
+        latest, payload_schema, pk_cols, value_format, options, topic_dir
+    )
+    if value_format == "avro-confluent" and (
+        _value_fields_include(options) == "ALL"
+    ):
+        # the subject's latest reader schema, as registered
+        return latest.select("__v.*")
     return latest.select(
         *[
-            (k[f] if (except_key and f in pk_cols) else v[f]).alias(f)
-            for f in fields
+            _upsert_field(f, pk_cols, v, payload_schema, options)
+            for f in _payload_fields(payload_schema)
         ]
     )
 
@@ -712,35 +654,98 @@ def read_upsert_topic_changelog(
     pk_cols: list[str],
     value_format: str = "json",
     options: dict | None = None,
+    streaming: bool = False,
 ) -> DataFrame:
     """The source's CHANGELOG view (what the Flink planner sees before
     ChangelogNormalize): +U per upsert envelope, -D per tombstone, with
     the batch sequence for downstream ordering. Tombstones carry the KEY
-    fields (payload columns null) — all a kafka tombstone has."""
-    raw = spark.read.option("recursiveFileLookup", "true").text(topic_dir)
-    return _upsert_changelog_frame(
-        raw, payload_schema, pk_cols, value_format, options, topic_dir
+    fields (payload columns null) — all a kafka tombstone has. With
+    ``streaming`` it is a Structured Stream (the shape Flink's
+    upsert-kafka source hands the planner)."""
+    from flink_1_12_2_spark.operators.changelog import ROW_KIND
+
+    env, v = _upsert_value(
+        _upsert_envelopes(spark, topic_dir, streaming),
+        payload_schema, pk_cols, value_format, options, topic_dir,
+    )
+    is_del = _is_tombstone()
+    return env.select(
+        F.when(is_del, F.lit("-D")).otherwise(F.lit("+U")).alias(ROW_KIND),
+        *[
+            _upsert_field(f, pk_cols, v, payload_schema, options, is_del)
+            for f in _payload_fields(payload_schema)
+        ],
+        F.col("__seq"),
+        F.col("__sub"),
     )
 
 
-def read_upsert_topic_changelog_stream(
-    spark: SparkSession,
-    topic_dir: str,
+def _upsert_envelopes(
+    spark: SparkSession, topic_dir: str, streaming: bool
+) -> DataFrame:
+    """Parse every upsert envelope line of the topic into (__seq batch
+    sequence, __sub sub-sequence, __k key json, __vraw value text)."""
+    if streaming:
+        r = spark.readStream.schema("value string")
+    else:
+        r = spark.read
+    raw = r.option("recursiveFileLookup", "true").text(topic_dir)
+    return raw.select(
+        F.get_json_object("value", "$.b").cast("bigint").alias("__seq"),
+        F.coalesce(
+            F.get_json_object("value", "$.s").cast("bigint"), F.lit(0)
+        ).alias("__sub"),
+        F.get_json_object("value", "$.k").alias("__k"),
+        F.get_json_object("value", "$.v").alias("__vraw"),
+    )
+
+
+def _is_tombstone():
+    return F.col("__vraw").isNull() | (F.col("__vraw") == "null")
+
+
+def _upsert_value(
+    env: DataFrame,
     payload_schema: str,
     pk_cols: list[str],
-    value_format: str = "json",
-    options: dict | None = None,
-) -> DataFrame:
-    """Streaming twin — the upsert changelog as a Structured Stream (the
-    shape Flink's upsert-kafka source hands the planner)."""
-    raw = (
-        spark.readStream.schema("value string")
-        .option("recursiveFileLookup", "true")
-        .text(topic_dir)
-    )
-    return _upsert_changelog_frame(
-        raw, payload_schema, pk_cols, value_format, options, topic_dir
-    )
+    value_format: str,
+    options: dict | None,
+    topic_dir: str,
+):
+    """Decode the envelopes' value → (frame, value struct column).
+    avro-confluent bodies decode into ``__v`` via the registry (readers
+    see the subject's latest schema; older writer ids resolve by name);
+    tombstones decode to a null struct."""
+    if value_format == "avro-confluent":
+        from flink_1_12_2_spark.sources.schema_registry import (
+            avro_registry_struct_decode,
+        )
+
+        reg, subject = _registry_opts(topic_dir, options)
+        env = avro_registry_struct_decode(
+            env.withColumn("__vbin", F.unbase64("__vraw")),
+            reg, subject, value_col="__vbin", out_col="__v",
+        )
+        return env, F.col("__v")
+    if _value_fields_include(options) == "EXCEPT_KEY":
+        schema = _schema_without(payload_schema, pk_cols)
+    else:
+        schema = f"struct<{payload_schema}>"
+    return env, F.from_json(F.col("__vraw"), schema)
+
+
+def _upsert_field(f, pk_cols, v, payload_schema, options, is_del=None):
+    """Payload column ``f`` of an envelope: key columns ride the record
+    key on every row under EXCEPT_KEY, and on tombstones (``is_del``)
+    otherwise."""
+    if f not in pk_cols:
+        return v[f].alias(f)
+    k = F.from_json(F.col("__k"), _key_struct(payload_schema, pk_cols))
+    if _value_fields_include(options) == "EXCEPT_KEY":
+        return k[f].alias(f)
+    if is_del is None:
+        return v[f].alias(f)
+    return F.when(is_del, k[f]).otherwise(v[f]).alias(f)
 
 
 def _key_struct(payload_schema: str, pk_cols: list[str]):
@@ -759,62 +764,3 @@ def _schema_without(payload_schema: str, pk_cols: list[str]):
 
     full = _parse_datatype_string(f"struct<{payload_schema}>")
     return StructType([f for f in full.fields if f.name not in pk_cols])
-
-
-def _upsert_changelog_frame(
-    raw: DataFrame,
-    payload_schema: str,
-    pk_cols: list[str],
-    value_format: str = "json",
-    options: dict | None = None,
-    topic_dir: str = "",
-) -> DataFrame:
-    from flink_1_12_2_spark.operators.changelog import ROW_KIND
-
-    env = raw.select(
-        F.get_json_object("value", "$.b").cast("bigint").alias("__seq"),
-        F.coalesce(
-            F.get_json_object("value", "$.s").cast("bigint"), F.lit(0)
-        ).alias("__sub"),
-        F.get_json_object("value", "$.k").alias("__k"),
-        F.get_json_object("value", "$.v").alias("__vraw"),
-    )
-    k = F.from_json(F.col("__k"), _key_struct(payload_schema, pk_cols))
-    is_del = F.col("__vraw").isNull() | (F.col("__vraw") == "null")
-    fields = _payload_fields(payload_schema)
-    except_key = _value_fields_include(options) == "EXCEPT_KEY"
-    if value_format == "avro-confluent":
-        # decode the Avro body into a struct column via the registry
-        # (readers see the subject's latest schema; older writer ids
-        # resolve by name), then assemble the changelog rows exactly
-        # like the json path
-        from flink_1_12_2_spark.sources.schema_registry import (
-            avro_registry_struct_decode,
-        )
-
-        reg, subject = _registry_opts(topic_dir, options)
-        env = avro_registry_struct_decode(
-            env.withColumn("__vbin", F.unbase64("__vraw")),
-            reg, subject, value_col="__vbin", out_col="__v",
-        )
-        v = F.col("__v")
-    elif except_key:
-        v = F.from_json(
-            F.col("__vraw"), _schema_without(payload_schema, pk_cols)
-        )
-    else:
-        v = F.from_json(F.col("__vraw"), f"struct<{payload_schema}>")
-
-    def _field(f: str):
-        if f not in pk_cols:
-            return v[f].alias(f)
-        if except_key:  # key columns ride the record key on EVERY row
-            return k[f].alias(f)
-        return F.when(is_del, k[f]).otherwise(v[f]).alias(f)
-
-    return env.select(
-        F.when(is_del, F.lit("-D")).otherwise(F.lit("+U")).alias(ROW_KIND),
-        *[_field(f) for f in fields],
-        F.col("__seq"),
-        F.col("__sub"),
-    )

@@ -18,10 +18,13 @@ DESCRIBE [TABLE] t · DROP TABLE [IF EXISTS] t · ALTER TABLE t RENAME TO u ·
 CREATE [TEMPORARY] VIEW v AS <query> · DROP VIEW [IF EXISTS] v — dispatched
 by :func:`execute_statement`.
 
-The declared schema is applied on read; the WATERMARK clause becomes
-``TableMeta.event_time_col/watermark_delay`` which ``EngineSession
-.stream_table`` turns into ``withWatermark`` — exactly Flink's split between
-DDL-declared watermarks and runtime assignment (WatermarkAssignerOperator).
+Every view of a registry table is built by :func:`scan_frame`, the one
+``TableMeta`` → DataFrame path: it applies the declared schema on read,
+the computed columns and the declared column order; the WATERMARK clause
+becomes ``TableMeta.event_time_col/watermark_delay``, which it turns into
+``withWatermark`` when ``EngineSession.stream_table`` asks for the stream —
+exactly Flink's split between DDL-declared watermarks and runtime
+assignment (WatermarkAssignerOperator).
 """
 
 from __future__ import annotations
@@ -398,45 +401,96 @@ def _create_table_like(engine: EngineSession, m: "re.Match"):
     return engine.spark.createDataFrame([("OK",)], "result string")
 
 
-def scan_frame(engine, meta) -> "DataFrame":
-    """Build the scan DataFrame for a registry TableMeta WITHOUT
-    registering a view — the connector dispatch shared by OPTIONS-hint
-    scans (dynamic table options build a one-off scan with merged
-    options) and plain re-reads."""
-    spark = engine.spark
-    if meta.connector == "jdbc":
-        return _jdbc_frame(spark, meta)
-    if meta.connector == "upsert-kafka":
-        from flink_1_12_2_spark.sources.kafka_emu import (
-            read_upsert_topic_batch,
-        )
+def scan_frame(engine, meta, streaming: bool = False) -> "DataFrame":
+    """The one place a registry ``TableMeta`` becomes a DataFrame (Flink's
+    one table source per table, FactoryUtil.createTableSource, scanned by
+    the batch and the streaming planner alike). Every view of a table —
+    ``register_table``'s plain view, OPTIONS-hinted scans, LIKE clones,
+    the view re-exposed after INSERT, kafka refreshes and
+    ``stream_table`` — is built here, in four steps:
 
-        return read_upsert_topic_batch(
-            spark, meta.path, meta.schema_ddl or "",
-            list(meta.primary_key),
-            value_format=meta.fmt, options=meta.options,
-        )
-    if meta.connector == "kafka":
+    1. connector dispatch: filesystem (Flink format options mapped, csv
+       header, the declared schema), kafka, upsert-kafka, jdbc, datagen;
+       print/blackhole are sink-only and raise;
+    2. computed columns;
+    3. the DDL's declared column order — only when the scan exposes
+       exactly the declared columns, so engine columns of a CDC scan
+       (``_row_kind``) survive;
+    4. the WATERMARK, when ``streaming``."""
+    spark = engine.spark
+    c = meta.connector
+    if c in ("print", "blackhole"):
+        raise ValueError(f"{c!r} is a sink-only connector")
+    if c == "jdbc":
+        if streaming:
+            raise ValueError(
+                "jdbc tables are bounded scans (+ lookup joins) — Flink's "
+                "jdbc source has no unbounded mode either"
+            )
+        df = _jdbc_frame(spark, meta)
+    elif c == "upsert-kafka":
+        from flink_1_12_2_spark.sources import kafka_emu
+
+        args = (spark, meta.path, meta.schema_ddl or "",
+                list(meta.primary_key))
+        kw = {"value_format": meta.fmt, "options": meta.options}
+        if streaming:
+            # the stream is the source's changelog; the bounded scan is
+            # its normalized latest state
+            df = kafka_emu.read_upsert_topic_changelog(
+                *args, streaming=True, **kw
+            )
+        else:
+            df = kafka_emu.read_upsert_topic_batch(*args, **kw)
+    elif c == "kafka":
         from flink_1_12_2_spark.sources.kafka_emu import topic_table
 
-        return topic_table(
+        df = topic_table(
             spark, meta.path, meta.fmt,
             payload_schema=meta.schema_ddl or "",
             options=meta.options,
             metadata_cols=meta.metadata_cols,
+            streaming=streaming,
         )
-    if meta.connector == "datagen":
-        from flink_1_12_2_spark.sources.devgen import datagen_frame
+    elif c == "datagen":
+        from flink_1_12_2_spark.sources.devgen import (
+            datagen_frame,
+            datagen_stream,
+        )
 
-        return datagen_frame(spark, meta.schema_ddl or "", meta.options)
-    reader = spark.read.format(meta.fmt)
-    for k, v in _format_scan_options(meta.fmt, meta.options).items():
-        reader = reader.option(k, v)
-    if meta.fmt == "csv":
-        reader = reader.option("header", "true")
-    if meta.schema_ddl:
-        reader = reader.schema(meta.schema_ddl)
-    return reader.load(meta.path)
+        gen = datagen_stream if streaming else datagen_frame
+        df = gen(spark, meta.schema_ddl or "", meta.options)
+    else:
+        opts = _format_scan_options(meta.fmt, meta.options)
+        if meta.fmt == "csv":
+            opts["header"] = "true"
+        schema = meta.schema_ddl
+        if streaming and not schema:
+            # a file stream needs its physical schema up front: take the
+            # bounded scan's
+            schema = spark.read.format(meta.fmt).options(**opts).load(
+                meta.path
+            ).schema
+        reader = (spark.readStream if streaming else spark.read).format(
+            meta.fmt
+        ).options(**opts)
+        if schema:
+            reader = reader.schema(schema)
+        df = reader.load(meta.path)
+    if meta.computed_cols:
+        # PROCTIME() is the canonical Flink computed column; any other
+        # Flink-name expression goes through the engine's rewrite pass
+        from flink_1_12_2_spark.sql.rewriter import rewrite_expr
+
+        for cname, cexpr in meta.computed_cols:
+            df = df.withColumn(cname, F.expr(rewrite_expr(cexpr)))
+    if meta.declared_columns and set(meta.declared_columns) == set(
+        df.columns
+    ):
+        df = df.select(*meta.declared_columns)
+    if streaming and meta.event_time_col and meta.watermark_delay:
+        df = df.withWatermark(meta.event_time_col, meta.watermark_delay)
+    return df
 
 
 def _format_scan_options(fmt: str, opts: dict) -> dict:
@@ -518,13 +572,13 @@ def _jdbc_frame(spark, meta):
 
 
 def execute_ddl(engine: EngineSession, ddl: str):
-    """Execute a CREATE TABLE statement against the engine's registry."""
-    from pyspark.sql import functions as F
-
+    """Execute a CREATE TABLE statement against the engine's registry: a
+    table whose source exists gets its scan view (``register_table`` →
+    :func:`scan_frame`), any other is registered as a sink."""
     like = _CREATE_LIKE.match(ddl)
     if like:
         return _create_table_like(engine, like)
-    name, schema, meta, _part, computed = parse_create_table(ddl)
+    name, schema, meta, _part, _computed = parse_create_table(ddl)
     if engine._catalog_types.get(engine._current_catalog) == "hive":
         # hive-catalog shim: the table persists in the Spark session
         # catalog (external table over the declared path) instead of a
@@ -542,93 +596,47 @@ def execute_ddl(engine: EngineSession, ddl: str):
         engine._tables[name] = meta
         engine._catalogs.setdefault(cat, set()).add(name)
         return engine.spark.createDataFrame([("OK",)], "result string")
-    if meta.connector == "jdbc":
-        # Flink's CREATE TABLE never contacts the store (errors surface
-        # at query time); here the view materializes eagerly, so a
-        # not-yet-created remote table registers as a sink instead —
-        # INSERT creates it, after which re-registration exposes the scan
-        try:
-            df = _jdbc_frame(engine.spark, meta)
-        except Exception as e:  # noqa: BLE001 — see filter below
-            # ONLY table-not-found means "sink-first" (the table appears
-            # when INSERT creates it). Connection/driver/auth failures
-            # must surface AT DDL TIME — silently registering a sink
-            # would defer them to a confusing missing-view error later
-            # (r11 advice).
-            from flink_1_12_2_spark.sources.jdbc import table_missing_error
-
-            if not table_missing_error(e):
-                raise
-            engine.register_sink(name, meta)
-            return engine.spark.createDataFrame([("OK",)], "result string")
-        df.createOrReplaceTempView(name)
-        engine._tables[name] = meta
-        engine._catalogs.setdefault(engine._current_catalog, set()).add(name)
-        return df
     if meta.connector == "datagen":
-        from flink_1_12_2_spark.sources.devgen import (
-            _bounded_rows,
-            datagen_frame,
-        )
+        from flink_1_12_2_spark.sources.devgen import _bounded_rows
 
-        if _bounded_rows(meta.schema_ddl or "", meta.options) is not None:
-            df = datagen_frame(
-                engine.spark, meta.schema_ddl or "", meta.options
-            )
-            df.createOrReplaceTempView(name)
-            engine._tables[name] = meta
-            engine._catalogs.setdefault(
-                engine._current_catalog, set()
-            ).add(name)
-            return df
         # unbounded: meta only — stream_table() reads it; a batch scan
         # fails in datagen_frame with the bound-it-or-stream-it error
-        engine.register_sink(name, meta)
-        return engine.spark.createDataFrame([("OK",)], "result string")
-    if meta.connector in ("print", "blackhole"):
-        engine.register_sink(name, meta)
-        return engine.spark.createDataFrame([("OK",)], "result string")
-    if meta.connector in ("kafka", "upsert-kafka"):
+        scannable = (
+            _bounded_rows(meta.schema_ddl or "", meta.options) is not None
+        )
+    elif meta.connector in ("print", "blackhole"):
+        scannable = False
+    elif meta.connector == "jdbc":
+        scannable = True  # the store answers below
+    elif meta.connector in ("kafka", "upsert-kafka"):
         from flink_1_12_2_spark.sources.kafka_emu import _topic_paths
 
-        topic_exists = any(
-            os.path.exists(p) for p in _topic_paths(meta.path)
-        )
+        scannable = any(os.path.exists(p) for p in _topic_paths(meta.path))
     else:
-        topic_exists = os.path.exists(meta.path)
-    if not topic_exists:
-        # sink table: the path doesn't exist yet (Flink's CREATE TABLE for a
-        # filesystem sink, or a kafka topic nothing has produced to) —
-        # register metadata only, INSERT/publish will create it (for kafka
-        # topics the first query-time refresh then builds the scan view,
-        # computed columns included)
-        engine.register_sink(name, meta)
-        return engine.spark.createDataFrame([("OK",)], "result string")
-    if meta.connector in ("kafka", "upsert-kafka"):
-        # register_table owns the topic read (and re-runs it whenever the
-        # topic fingerprint changes — scans resolve at query time like
-        # Flink's, not at CREATE time); the DDL only records computed
-        # columns so refreshes re-apply them
-        engine.register_table(name, meta)
-        return engine.spark.table(name)
-    reader = engine.spark.read.format(meta.fmt)
-    for k, v in _format_scan_options(meta.fmt, meta.options).items():
-        reader = reader.option(k, v)
-    if meta.fmt == "csv":
-        reader = reader.option("header", "true")
-    if schema:
-        reader = reader.schema(schema)
-    df = reader.load(meta.path)
-    for cname, cexpr in computed:
-        # PROCTIME() is the canonical Flink computed column; route any other
-        # Flink-name expression through the engine's rewrite pass
-        from flink_1_12_2_spark.sql.rewriter import rewrite_expr
+        scannable = os.path.exists(meta.path)
+    if scannable:
+        # kafka views re-scan whenever the topic fingerprint changes —
+        # they resolve at query time like Flink's, not at CREATE time
+        try:
+            engine.register_table(name, meta)
+            return engine.spark.table(name)
+        except Exception as e:  # noqa: BLE001 — see filter below
+            # Flink's CREATE TABLE never contacts a jdbc store; here the
+            # view materializes eagerly, so ONLY a missing remote table
+            # means "sink-first" (INSERT creates it, then re-exposes the
+            # scan). Connection/driver/auth failures must surface AT DDL
+            # TIME — a silent sink would defer them to a confusing
+            # missing-view error later (r11 advice).
+            from flink_1_12_2_spark.sources.jdbc import table_missing_error
 
-        df = df.withColumn(cname, F.expr(rewrite_expr(cexpr)))
-    df.createOrReplaceTempView(name)
-    engine._tables[name] = meta
-    engine._catalogs.setdefault(engine._current_catalog, set()).add(name)
-    return df
+            if meta.connector != "jdbc" or not table_missing_error(e):
+                raise
+    # sink table: the path doesn't exist yet (Flink's CREATE TABLE for a
+    # filesystem sink, or a kafka topic nothing has produced to) —
+    # register metadata only, INSERT/publish will create it (for kafka
+    # topics the first query-time refresh then builds the scan view)
+    engine.register_sink(name, meta)
+    return engine.spark.createDataFrame([("OK",)], "result string")
 
 
 # ---- catalog statements (ddl/dql inventory) --------------------------------

@@ -38,31 +38,25 @@ _INSERT = re.compile(
 _PSPEC_ITEM = re.compile(r"(\w+)\s*=\s*(?:'([^']*)'|(\S+))")
 
 
-def _reexpose_filesystem(spark, meta, out_df, sink: str) -> None:
-    """A Flink registered table is source AND sink: (re)expose the
-    written path as the table's temp view so follow-up SELECTs in the
-    same session read what was just inserted (CREATE TABLE for a
-    not-yet-existing path could not)."""
-    from flink_1_12_2_spark.sql.ddl import _format_scan_options
+def _reexpose(engine, sink: str, meta, out_df: DataFrame) -> None:
+    """A Flink registered table is source AND sink: (re)register the
+    sink's scan view so follow-up SELECTs in the same session read what
+    was just inserted (CREATE TABLE for a not-yet-existing path or topic
+    could not). A csv/json file sink with no declared schema reads back with
+    the written frame's schema: text formats lose types, and inferSchema
+    would hand follow-up SELECTs DIFFERENT types than were written (STRING
+    '007' re-inferred as INT 7; r9 advice)."""
+    if (
+        meta.connector == "filesystem"
+        and meta.fmt in ("csv", "json")
+        and meta.schema_ddl is None
+    ):
+        import dataclasses
 
-    reader = spark.read.format(meta.fmt)
-    for k, v in _format_scan_options(meta.fmt, meta.options).items():
-        reader = reader.option(k, v)
-    if meta.fmt == "csv":
-        reader = reader.option("header", "true")
-    if meta.fmt in ("csv", "json"):
-        # Text formats lose types on read-back; re-apply the written
-        # DataFrame's schema (mirrors execute_ddl's schema-applied read
-        # path) — inferSchema would hand follow-up SELECTs DIFFERENT
-        # types than the declared DDL schema (e.g. STRING '007'
-        # re-inferred as INT 7, dropping leading zeros; r9 advice).
-        reader = reader.schema(out_df.schema)
-    elif meta.partition_cols and meta.schema_ddl:
-        # partition-directory values are type-INFERRED on read
-        # ('2020-01-01' → DATE) — pin the declared DDL types instead,
-        # like execute_ddl's schema-applied read
-        reader = reader.schema(meta.schema_ddl)
-    reader.load(meta.path).createOrReplaceTempView(sink)
+        meta = dataclasses.replace(
+            meta, schema_ddl=out_df.schema.toDDL()
+        )
+    engine.register_table(sink, meta)
 
 
 def _commit_partitions(meta, out_df: DataFrame) -> None:
@@ -260,7 +254,6 @@ class StatementSet:
                     from flink_1_12_2_spark.operators.changelog import (
                         ROW_KIND,
                     )
-                    from flink_1_12_2_spark.sql.ddl import _jdbc_frame
                     from flink_1_12_2_spark.sources.jdbc import (
                         DERBY_DRIVER,
                         jdbc_upsert_write,
@@ -300,7 +293,7 @@ class StatementSet:
                             driver=meta.options.get("driver", DERBY_DRIVER),
                             mode="overwrite" if b.overwrite else "append",
                         )
-                    _jdbc_frame(spark, meta).createOrReplaceTempView(b.sink)
+                    _reexpose(self.engine, b.sink, meta, out_df)
                     results.append((b.sink, n_out))
                     continue
                 if meta.connector == "upsert-kafka":
@@ -311,7 +304,6 @@ class StatementSet:
                     )
                     from flink_1_12_2_spark.sources.kafka_emu import (
                         publish_upsert,
-                        read_upsert_topic_batch,
                     )
 
                     n_out = out_df.count()
@@ -321,11 +313,7 @@ class StatementSet:
                         row_kind_col=rk,
                         value_format=meta.fmt, options=meta.options,
                     )
-                    read_upsert_topic_batch(
-                        spark, meta.path, meta.schema_ddl or "",
-                        list(meta.primary_key),
-                        value_format=meta.fmt, options=meta.options,
-                    ).createOrReplaceTempView(b.sink)
+                    _reexpose(self.engine, b.sink, meta, out_df)
                     results.append((b.sink, n_out))
                     continue
                 if meta.connector == "kafka":
@@ -350,19 +338,24 @@ class StatementSet:
                     # re-expose: the CREATE-time view snapshot predates
                     # this batch's files (and a sink-registered topic has
                     # no view yet) — follow-up SELECTs must see the batch
-                    from flink_1_12_2_spark.sources.kafka_emu import (
-                        topic_table,
-                    )
-
-                    topic_table(
-                        spark, meta.path, meta.fmt,
-                        payload_schema=meta.schema_ddl or "",
-                        options=meta.options,
-                    ).createOrReplaceTempView(b.sink)
+                    _reexpose(self.engine, b.sink, meta, out_df)
                     results.append((b.sink, n_out))
                     continue
                 from flink_1_12_2_spark.sql.ddl import _format_scan_options
 
+                if meta.schema_ddl and tuple(out_df.columns) == meta.columns:
+                    # Flink's INSERT casts the query to the sink's
+                    # declared types; the re-exposed view reads the
+                    # files back with them
+                    from pyspark.sql.types import _parse_datatype_string
+
+                    declared = _parse_datatype_string(
+                        f"struct<{meta.schema_ddl}>"
+                    )
+                    out_df = out_df.select(
+                        *[out_df[f.name].cast(f.dataType)
+                          for f in declared.fields]
+                    )
                 fmt_opts = _format_scan_options(meta.fmt, meta.options)
                 if (
                     meta.options.get("auto-compaction", "false").lower()
@@ -392,7 +385,7 @@ class StatementSet:
                         options=wopts,
                     )
                     _commit_partitions(meta, out_df)
-                    _reexpose_filesystem(spark, meta, out_df, b.sink)
+                    _reexpose(self.engine, b.sink, meta, out_df)
                     results.append((b.sink, b.df.count()))
                     continue
                 writer = out_df.write.format(meta.fmt).mode(
@@ -417,7 +410,7 @@ class StatementSet:
                     writer = writer.option("header", "true")
                 writer.save(meta.path)
                 _commit_partitions(meta, out_df)
-                _reexpose_filesystem(spark, meta, out_df, b.sink)
+                _reexpose(self.engine, b.sink, meta, out_df)
                 results.append((b.sink, b.df.count()))
         finally:
             for df in shared:

@@ -1,11 +1,7 @@
-"""Round-14 optimization pins: tmpfs capacity guard, driver-memory clamp
-and the streaming schema cache."""
+"""Session helpers: the tmpfs capacity guard behind the fast local dir
+and the host-derived driver-memory default."""
 
 from __future__ import annotations
-
-import os
-
-import pytest
 
 
 # ---- /dev/shm capacity guard (r13 verdict item 1 / ADVICE medium) ----------
@@ -18,7 +14,6 @@ def test_fast_local_dir_falls_back_when_shm_small(monkeypatch):
         f_bavail = 100
         f_frsize = 4096  # ~400 KB free — far below any sane headroom
 
-    monkeypatch.delenv("SPARK_GRAFT_SHM_MIN_FREE", raising=False)
     monkeypatch.setattr(S.os, "statvfs", lambda p: FakeSt())
     assert S._fast_local_dir("/dev/shm") is None
 
@@ -30,12 +25,11 @@ def test_fast_local_dir_used_when_headroom(monkeypatch):
         f_bavail = (64 << 30) // 4096  # 64 GiB free
         f_frsize = 4096
 
-    monkeypatch.delenv("SPARK_GRAFT_SHM_MIN_FREE", raising=False)
     monkeypatch.setattr(S.os, "statvfs", lambda p: FakeSt())
     assert S._fast_local_dir("/dev/shm") == "/dev/shm"
 
 
-def test_fast_local_dir_env_threshold(monkeypatch):
+def test_fast_local_dir_threshold_argument(monkeypatch):
     from flink_1_12_2_spark import session as S
 
     class FakeSt:
@@ -43,10 +37,8 @@ def test_fast_local_dir_env_threshold(monkeypatch):
         f_frsize = 4096
 
     monkeypatch.setattr(S.os, "statvfs", lambda p: FakeSt())
-    monkeypatch.setenv("SPARK_GRAFT_SHM_MIN_FREE", str(512 << 20))
-    assert S._fast_local_dir("/dev/shm") == "/dev/shm"
-    monkeypatch.setenv("SPARK_GRAFT_SHM_MIN_FREE", str(2 << 30))
-    assert S._fast_local_dir("/dev/shm") is None
+    assert S._fast_local_dir("/dev/shm", min_free=512 << 20) == "/dev/shm"
+    assert S._fast_local_dir("/dev/shm", min_free=2 << 30) is None
 
 
 def test_fast_local_dir_missing_path():
@@ -66,25 +58,3 @@ def test_default_driver_memory_clamp():
     assert d(16 << 30) == "6g"  # 16 GiB: half is 8 GiB >= 6g
     assert d(8 << 30) == "4096m"  # 8 GiB host: half
     assert d(1 << 30) == "512m"  # tiny host: floor at 512m
-
-
-def test_static_schema_cache_sees_part_file_rewritten_in_place(spark, tmp_path):
-    """A part file rewritten in place leaves its directory's mtime and size
-    alone; the streaming schema cache must still notice the new schema."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from flink_1_12_2_spark.streaming.core import _static_schema
-
-    table_dir = tmp_path / "t.parquet"
-    table_dir.mkdir()
-    part = table_dir / "part-0.parquet"
-    pq.write_table(pa.table({"a": [1]}), part)
-    os.utime(part, ns=(1_000_000_000, 1_000_000_000))
-    assert _static_schema(spark, str(table_dir)).fieldNames() == ["a"]
-
-    dir_stat = os.stat(table_dir)
-    pq.write_table(pa.table({"a": [1], "b": ["x"]}), part)  # same inode
-    assert os.stat(table_dir).st_mtime_ns == dir_stat.st_mtime_ns
-    assert os.stat(table_dir).st_size == dir_stat.st_size
-    assert _static_schema(spark, str(table_dir)).fieldNames() == ["a", "b"]

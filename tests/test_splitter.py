@@ -1,13 +1,16 @@
-"""The multibatch harness splitter must be executor-parallel (no global
-window) while reproducing ntile()'s chunk assignment bit-for-bit — the
-chunk contents pin every per-batch state test."""
+"""streaming/core.py helpers. The multibatch harness splitter must be
+executor-parallel (no global window) while reproducing ntile()'s chunk
+assignment bit-for-bit — the chunk contents pin every per-batch state
+test. The streaming schema cache must notice a rewritten part file."""
 
 from __future__ import annotations
+
+import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import Window as W
 
-from flink_1_12_2_spark.streaming.core import _tag_ntile_chunks
+from flink_1_12_2_spark.streaming.core import _static_schema, _tag_ntile_chunks
 
 
 def _static_events(spark, sf_dir):
@@ -77,3 +80,23 @@ def test_split_chunks_deterministic_hash(spark, sf_dir):
         return out
 
     assert chunk_sets(4) == chunk_sets(4)
+
+
+def test_static_schema_cache_sees_part_file_rewritten_in_place(spark, tmp_path):
+    """A part file rewritten in place leaves its directory's mtime and size
+    alone; the streaming schema cache must still notice the new schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table_dir = tmp_path / "t.parquet"
+    table_dir.mkdir()
+    part = table_dir / "part-0.parquet"
+    pq.write_table(pa.table({"a": [1]}), part)
+    os.utime(part, ns=(1_000_000_000, 1_000_000_000))
+    assert _static_schema(spark, str(table_dir)).fieldNames() == ["a"]
+
+    dir_stat = os.stat(table_dir)
+    pq.write_table(pa.table({"a": [1], "b": ["x"]}), part)  # same inode
+    assert os.stat(table_dir).st_mtime_ns == dir_stat.st_mtime_ns
+    assert os.stat(table_dir).st_size == dir_stat.st_size
+    assert _static_schema(spark, str(table_dir)).fieldNames() == ["a", "b"]

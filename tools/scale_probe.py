@@ -8,7 +8,7 @@ fixed overhead), while an accidental all-pairs or cache-race pathology
 shows up as a superlinear ratio. See SCALE.md "Round-10: the 10× scaling
 experiment" and its dated correction.
 
-Each query runs in its OWN subprocess/JVM: long-lived local[32] sessions
+Each query runs in its OWN subprocess/JVM: long-lived local sessions
 degrade order-dependently under the scaled corpus' allocation pattern
 (G1 humongous-allocation churn — the same pathology behind the one 212 s
 outlier in the original experiment), so in-session sequencing would
@@ -23,6 +23,11 @@ work of any action a query runs inside fn() (ngram's plan-pruning probe,
 exact-substring's result fill, the streaming rows) is timed with it.
 Absolute seconds are NOT bench-comparable; only the base/scaled RATIO
 is the signal. Exit 1 if any ratio is clearly superlinear (> 2 × copies).
+
+Every JVM takes the engine's host-derived defaults: master
+``local[$SPARK_GRAFT_CPUS]`` (else the CPUs this process may run on) and
+``session._default_driver_memory`` as the driver heap (half of physical
+RAM, at most 6g), so the scaled runs fit the host they run on.
 """
 
 from __future__ import annotations
@@ -59,9 +64,9 @@ _CHILD = """
 import sys, time
 sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master("local[32]")
+spark = (SparkSession.builder.master({master!r})
          .config("spark.sql.shuffle.partitions", "32")
-         .config("spark.driver.memory", "48g")
+         .config("spark.driver.memory", {heap!r})
          .config("spark.sql.session.timeZone", "UTC").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 import __spark_entry__ as m
@@ -85,6 +90,17 @@ print("RESULT", out[0][0], out[1][0], out[0][1], out[1][1])
 """
 
 
+def _host_conf() -> tuple[str, str]:
+    """(master, driver heap) from the engine's host-derived defaults."""
+    from flink_1_12_2_spark.session import (
+        _default_driver_memory,
+        _mem_total_bytes,
+    )
+
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return f"local[{cpus}]", _default_driver_memory(_mem_total_bytes())
+
+
 def build_scaled_dir(base: str, copies: int) -> str:
     # _v2: the original salt lambda took (element, index) — PySpark's
     # binary transform form — so the "copy" suffix was the stringified
@@ -101,10 +117,11 @@ def build_scaled_dir(base: str, copies: int) -> str:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    master, heap = _host_conf()
     spark = (
-        SparkSession.builder.master("local[32]")
+        SparkSession.builder.master(master)
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "8g")
+        .config("spark.driver.memory", heap)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -174,10 +191,12 @@ def main() -> int:
     names = sys.argv[3:] or DEFAULT_QUERIES
     scaled = build_scaled_dir(base, copies)
 
+    master, heap = _host_conf()
     worst = 0.0
     for name in names:
         child = _CHILD.format(
-            repo=_REPO, name=name, base=base, scaled=scaled
+            repo=_REPO, name=name, base=base, scaled=scaled,
+            master=master, heap=heap,
         )
         r = subprocess.run(
             [sys.executable, "-c", child],
