@@ -19,11 +19,38 @@ column plus these operators:
 
 from __future__ import annotations
 
+import zlib
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 ROW_KIND = "_row_kind"
 INSERT, UPDATE_BEFORE, UPDATE_AFTER, DELETE = "+I", "-U", "+U", "-D"
+
+#: The upsert store's bucket layout (``upsert_foreach_batch``): each row
+#: lives under ``__bucket=NN/``, NN = ``pmod(crc32(concat_ws(_KEY_SEP, pk
+#: as string)), num_buckets)``. ``state_api`` reads and bootstraps the
+#: same layout through :func:`bucket_expr` and :func:`bucket_of`.
+BUCKET_COL = "__bucket"
+_KEY_SEP = "\x1f"
+
+
+def bucket_expr(pks, num_buckets: int):
+    """The bucket id of each row keyed by the ``pks`` columns."""
+    return F.pmod(
+        F.crc32(F.concat_ws(_KEY_SEP, *[F.col(k).cast("string") for k in pks])),
+        F.lit(num_buckets),
+    ).cast("int")
+
+
+def bucket_of(key_values: tuple, num_buckets: int) -> int:
+    """Driver-side bucket id for one key tuple — matches
+    :func:`bucket_expr` (zlib.crc32 and java.util.zip.CRC32 share the IEEE
+    polynomial). Parity holds when ``str(v)`` equals Spark's string cast —
+    integer and string keys; for other types read_keyed_state skips bucket
+    pruning rather than risk pruning the wrong directory."""
+    raw = _KEY_SEP.join(str(v) for v in key_values).encode("utf-8")
+    return zlib.crc32(raw) % num_buckets
 
 
 def last_change_per_key(
@@ -269,27 +296,21 @@ def upsert_foreach_batch(
         w = Window.partitionBy(*pks).orderBy(
             *[F.col(c).desc() for c in order_cols]
         )
-        bucket = F.pmod(
-            F.crc32(
-                F.concat_ws("\x1f", *[F.col(k).cast("string") for k in pks])
-            ),
-            F.lit(num_buckets),
-        ).cast("int")
         last = (
             drop_update_before(batch_df)
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
-            .withColumn("__bucket", bucket)
+            .withColumn(BUCKET_COL, bucket_expr(pks, num_buckets))
         )
-        touched_keys = last.select(*pks, "__bucket")
+        touched_keys = last.select(*pks, BUCKET_COL)
         if ROW_KIND in last.columns:
             survivors = last.filter(F.col(ROW_KIND) != DELETE).drop(ROW_KIND)
         else:  # insert/upsert-only batch: every row survives
             survivors = last
         touched_buckets = [
-            r["__bucket"]
-            for r in touched_keys.select("__bucket").distinct().collect()
+            r[BUCKET_COL]
+            for r in touched_keys.select(BUCKET_COL).distinct().collect()
         ]
         if not touched_buckets:
             return
@@ -302,30 +323,30 @@ def upsert_foreach_batch(
                 raise  # a real read error must not masquerade as empty state
             existing = None
         if existing is not None:
-            if "__bucket" not in existing.columns:
+            if BUCKET_COL not in existing.columns:
                 raise ValueError(
                     f"state table at {state_dir} is not bucketed (pre-r5 "
                     "layout?) — migrate it by rewriting with partitionBy "
                     "__bucket before resuming this sink"
                 )
             existing = existing.filter(
-                F.col("__bucket").isin(touched_buckets)  # partition pruning
+                F.col(BUCKET_COL).isin(touched_buckets)  # partition pruning
             )
         if existing is not None:
             untouched = existing.join(
-                touched_keys.drop("__bucket"), pks, "left_anti"
+                touched_keys.drop(BUCKET_COL), pks, "left_anti"
             )
             merged = untouched.unionByName(survivors)
         else:
             merged = survivors
         # truncate lineage so the write target isn't also a read path
         merged = merged.repartition(
-            max(1, min(8, len(touched_buckets))), "__bucket"
+            max(1, min(8, len(touched_buckets))), BUCKET_COL
         ).localCheckpoint(eager=True)
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
-            merged.write.mode("overwrite").partitionBy("__bucket").parquet(
+            merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
                 state_dir
             )
         finally:
@@ -336,8 +357,8 @@ def upsert_foreach_batch(
         # explicitly through the Hadoop FS API (works for hdfs://, s3a://,
         # file:// alike; a table format would use delete vectors instead)
         surviving = {
-            r["__bucket"]
-            for r in merged.select("__bucket").distinct().collect()
+            r[BUCKET_COL]
+            for r in merged.select(BUCKET_COL).distinct().collect()
         }
         doomed = set(touched_buckets) - surviving
         if doomed:

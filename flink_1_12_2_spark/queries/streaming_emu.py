@@ -1289,8 +1289,9 @@ def match_recognize_skip_to_next(spark: SparkSession, sf_dir: str) -> DataFrame:
 def match_recognize_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MEASURES clause (FIRST(col)/LAST(col) match-level accessors —
     MatchCodeGenerator measure projection in StreamExecMatch): the matched
-    rows' payload columns surface in the output via key-partitioned joins
-    back to the input."""
+    rows' payload columns surface in the output through the one
+    explode-join of each match's rows back to the input, folded by one
+    groupBy per match."""
     from flink_1_12_2_spark.registry import load as _load
     from flink_1_12_2_spark.sql.match_recognize import match_recognize
 
@@ -1391,8 +1392,9 @@ def match_recognize_agg_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     flink-table-planner-blink MatchRecognizeITCase family): PATTERN (A{2} B)
     with SUM/AVG/COUNT/LAST over A's two rows, the classifier of the last
     row, and the per-partition match number. The NFA records each match's
-    variable→event-ids assignment; measures posexplode it and join back to
-    the input (key-partitioned, no NFA changes)."""
+    variable→event-ids assignment; it is exploded and joined back to the
+    input once (key-partitioned, no NFA changes), and every measure is a
+    conditional aggregate of one groupBy per match."""
     from flink_1_12_2_spark.registry import load as _load
     from flink_1_12_2_spark.sql.match_recognize import match_recognize
 
@@ -1651,7 +1653,8 @@ def match_recognize_all_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     MATCH_NUMBER(). BEYOND the reference surface: Flink 1.12 rejects ALL
     ROWS PER MATCH (docs/dev/table/streaming/match_recognize "known
     limitations"); the branch NFA's recorded variable→event assignments
-    make the row-grain emission a posexplode + key-partitioned join-back.
+    make the row-grain emission the one explode + key-partitioned
+    join-back that ONE ROW PER MATCH measures also read.
 
     Same click→purchase match set as ``match_recognize_sql`` (hash-proven
     against the same recursive-CTE recursion, re-projected to row grain):
@@ -1707,9 +1710,9 @@ _SUBSET_FINAL = """
 def match_recognize_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SUBSET union variables (SQL:2016) — BEYOND the reference surface
     (Flink 1.12 rejects SUBSET, docs known limitations). ``U = (A, B)``
-    aggregates over the union of both variables' matched rows: the NFA's
-    per-variable id lists concatenate before the measure join-back, so a
-    subset measure costs the same one posexplode as a plain variable."""
+    aggregates over the union of both variables' matched rows: a subset
+    measure is the same conditional aggregate over the matched rows as a
+    plain variable's, with the members in its condition."""
     from flink_1_12_2_spark.registry import load as _load
     from flink_1_12_2_spark.sql.match_recognize import match_recognize
 

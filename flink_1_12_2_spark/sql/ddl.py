@@ -35,6 +35,7 @@ import re
 from pyspark.sql import functions as F
 
 from flink_1_12_2_spark.session import EngineSession, TableMeta
+from flink_1_12_2_spark.sql.rewriter import interval_unit
 
 _TYPE_MAP = {
     "STRING": "string",
@@ -55,8 +56,6 @@ _TYPE_MAP = {
     "VARBINARY": "binary",
     "BINARY": "binary",
 }
-
-_UNITS = {"SECOND": "seconds", "MINUTE": "minutes", "HOUR": "hours", "DAY": "days"}
 
 _CREATE_HEAD = re.compile(
     r"(?is)^\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>\w+)\s*\("
@@ -207,7 +206,7 @@ def parse_create_table(
     event_time_col = delay = None
     if wm:
         event_time_col = wm.group("col")
-        delay = f"{wm.group('n')} {_UNITS[wm.group('unit').upper()]}"
+        delay = f"{wm.group('n')} {interval_unit(wm.group('unit'))[0]}"
         cols_block = _WATERMARK.sub("", cols_block)
 
     def _split_top_level(s: str) -> list[str]:

@@ -69,14 +69,8 @@ import re
 
 from pyspark.sql import DataFrame
 
+from flink_1_12_2_spark.sql.rewriter import interval_unit
 from flink_1_12_2_spark.streaming.cep import Pattern, cep_match_batch
-
-_UNIT_US = {
-    "SECOND": 1_000_000,
-    "MINUTE": 60 * 1_000_000,
-    "HOUR": 3600 * 1_000_000,
-    "DAY": 86400 * 1_000_000,
-}
 
 _MR = re.compile(
     r"(?is)MATCH_RECOGNIZE\s*\(\s*"
@@ -494,7 +488,7 @@ def _parse_mr(sql: str) -> tuple[str, str, Pattern, set]:
         )
         pat = _apply_quantifier(pat, sm.group("quant"))
     if m.group("n"):
-        pat = pat.within(int(m.group("n")) * _UNIT_US[m.group("unit").upper()])
+        pat = pat.within(int(m.group("n")) * interval_unit(m.group("unit"))[1])
     skip_raw = (m.group("skip") or "").split()
     skip = [w.upper() for w in skip_raw]
     if skip[:2] == ["TO", "NEXT"]:
@@ -585,7 +579,7 @@ def _split_measures(text: str | None) -> list[str]:
     return [i.strip() for i in items if i.strip()]
 
 
-def _parse_measures(text: str | None, all_rows: bool) -> tuple:
+def _parse_measures(text: str | None, all_rows: bool, subsets: dict) -> tuple:
     """MEASURES list → (aggs, plain, fn0).
 
     ``aggs``: (fn, var, col, alias, offset, final) per ``AGG(Var.col[, n])``
@@ -593,7 +587,9 @@ def _parse_measures(text: str | None, all_rows: bool) -> tuple:
     col, alias) match-boundary accessors; ``fn0``: {CLASSIFIER |
     MATCH_NUMBER | MATCH_ROWTIME | MATCH_PROCTIME: alias}. ALL ROWS PER
     MATCH (``all_rows``) rejects FIRST/LAST in both forms (RUNNING
-    boundary accessors are not implemented for row-grain output)."""
+    boundary accessors are not implemented for row-grain output), and
+    FIRST/LAST on a SUBSET variable of ``subsets`` is rejected in both
+    modes (its members' rows have no single match-order position)."""
     where = "ALL ROWS PER MATCH: " if all_rows else ""
     aggs: list[tuple[str, str, str, str, int, bool]] = []
     plain: list[tuple[str, str, str]] = []
@@ -605,6 +601,10 @@ def _parse_measures(text: str | None, all_rows: bool) -> tuple:
             fn = fn.upper()
             if all_rows and fn in ("FIRST", "LAST"):
                 raise ValueError(f"{where}FIRST/LAST measures unsupported: {it!r}")
+            if var in subsets and fn in ("FIRST", "LAST"):
+                raise ValueError(
+                    f"FIRST/LAST unsupported on SUBSET variable {var!r}: {it!r}"
+                )
             off = int(off) if off else 0
             if off and fn not in ("FIRST", "LAST"):
                 raise ValueError(
@@ -655,9 +655,66 @@ def match_recognize_stream(
     )
 
 
+def _match_order(part: str):
+    """The window MATCH_NUMBER() counts in: a partition's matches by start.
+    The last_event_id tiebreak matters: overlapping matches can share a
+    start (eager trailing loops, SKIP TO FIRST/LAST), and the numbering
+    must stay deterministic for the oracle hash."""
+    from pyspark.sql import Window
+
+    return Window.partitionBy(part).orderBy(
+        "first_ts_us", "first_event_id", "last_ts_us", "last_event_id"
+    )
+
+
+def _matched_rows(df: DataFrame, out: DataFrame, part: str, cols: list):
+    """The matched rows both MEASURES modes read: one row per (match,
+    matched input row), and the only reader of the NFA output ``out``. Its
+    variable → event-ids map (``vars_json``) explodes once into
+    ``__var``/``__eid`` and joins back to ``df`` once on (partition,
+    event_id), both sides key-partitioned. Each row carries the columns
+    of ``out`` (partition renamed ``__k``) as its match's identity,
+    ``cols`` of ``df``, and ``__vpos``: the row's index among its
+    variable's rows, which the NFA lists in the order it consumed them,
+    i.e. match order."""
+    import pyspark.sql.functions as F
+
+    pairs = (
+        out.withColumnRenamed(part, "__k")
+        .select(
+            "*",
+            F.explode(
+                F.from_json("vars_json", "map<string,array<bigint>>")
+            ).alias("__var", "__ids"),
+        )
+        .select("*", F.posexplode("__ids").alias("__vpos", "__eid"))
+        .drop("__ids")
+    )
+    side = df.select(
+        F.col(part).alias("__k"), F.col("event_id").alias("__eid"), *cols
+    )
+    return pairs.join(side, ["__k", "__eid"])
+
+
+def _in_var(var: str, subsets: dict):
+    """Condition on a matched row: the match assigned it to ``var``, or to
+    one of its members when ``var`` is a SUBSET union variable."""
+    import pyspark.sql.functions as F
+
+    return F.col("__var").isin(*subsets.get(var, [var]))
+
+
+def _agg(fn: str, val):
+    """SUM/COUNT/AVG/MIN/MAX of ``val`` (NULLs ignored, COUNT of none is 0)."""
+    import pyspark.sql.functions as F
+
+    fns = {"SUM": F.sum, "COUNT": F.count, "AVG": F.avg, "MIN": F.min, "MAX": F.max}
+    return fns[fn](val)
+
+
 def _match_recognize_all_rows(
-    df: DataFrame, nfa_in: DataFrame, m, part: str, order: str, pat,
-    aggs: list, fn0: dict,
+    df: DataFrame, out: DataFrame, part: str, order: str, aggs: list,
+    fn0: dict, subsets: dict,
 ) -> DataFrame:
     """ALL ROWS PER MATCH emission (SQL:2016 R010; BEYOND the reference —
     Flink 1.12 rejects it, docs/dev/table/streaming/match_recognize "known
@@ -670,35 +727,15 @@ def _match_recognize_all_rows(
     - ``MATCH_NUMBER()`` — same numbering as ONE ROW mode.
     ``FIRST/LAST`` measures are rejected by :func:`_parse_measures`.
 
-    Scale: the NFA emits (match → var → event-id) assignments; rows
-    explode per match and join back to the input key-partitioned; the
-    running window partitions by (partition, match_number) — bounded by
-    match length, never by partition size."""
+    Scale: the matched rows (:func:`_matched_rows`) are numbered per
+    match before the explode; the running window partitions by
+    (partition, match_number) — bounded by match length, never by
+    partition size."""
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    out = cep_match_batch(
-        nfa_in, pat, key_col=part, time_col=order, include_vars=True
-    )
-    wmn = Window.partitionBy(part).orderBy(
-        "first_ts_us", "first_event_id", "last_ts_us", "last_event_id"
-    )
-    pairs = (
-        out.withColumn("__mn", F.row_number().over(wmn))
-        .withColumn(
-            "__vars", F.from_json("vars_json", "map<string,array<bigint>>")
-        )
-        .select(
-            F.col(part).alias("__k"),
-            "__mn",
-            F.explode("__vars").alias("__var", "__ids"),
-        )
-        .select("__k", "__mn", "__var", F.explode("__ids").alias("__eid"))
-    )
-    side = df.select(
-        F.col(part).alias("__k"), F.col("event_id").alias("__eid"), "*"
-    )
-    joined = pairs.join(side, ["__k", "__eid"])
+    numbered = out.withColumn("__mn", F.row_number().over(_match_order(part)))
+    rows = _matched_rows(df, numbered, part, df.columns)
     runw = (
         Window.partitionBy("__k", "__mn")
         .orderBy(order, "event_id")
@@ -711,25 +748,12 @@ def _match_recognize_all_rows(
         .orderBy(order, "event_id")
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
-    subsets = _parse_subsets(m.group("subset"))
     proj = [F.col(c) for c in df.columns]
     # final=True pins the whole-match value on every row (SQL:2016 FINAL
     # keyword; the default here is RUNNING)
     for fn, var, col, alias, _off, final in aggs:
-        cond = (
-            F.col("__var").isin(*subsets[var])
-            if var in subsets
-            else F.col("__var") == var
-        )
-        val = F.when(cond, F.col(col))
-        expr = {
-            "SUM": F.sum(val),
-            "COUNT": F.count(val),
-            "AVG": F.avg(val),
-            "MIN": F.min(val),
-            "MAX": F.max(val),
-        }[fn]
-        proj.append(expr.over(finw if final else runw).alias(alias))
+        val = F.when(_in_var(var, subsets), F.col(col))
+        proj.append(_agg(fn, val).over(finw if final else runw).alias(alias))
     if "CLASSIFIER" in fn0:
         proj.append(F.col("__var").alias(fn0["CLASSIFIER"]))
     if "MATCH_NUMBER" in fn0:
@@ -740,7 +764,57 @@ def _match_recognize_all_rows(
         proj.append(F.col(order).alias(fn0["MATCH_ROWTIME"]))
     if "MATCH_PROCTIME" in fn0:
         proj.append(F.current_timestamp().alias(fn0["MATCH_PROCTIME"]))
-    return joined.select(*proj)
+    return rows.select(*proj)
+
+
+def _one_row_measures(
+    aggs: list, plain: list, cls_alias: str | None, subsets: dict
+) -> list:
+    """ONE ROW PER MATCH measures as aggregates over one match's matched
+    rows (:func:`_matched_rows`), in the output's column order: the
+    boundary accessors, CLASSIFIER, then the variable measures grouped by
+    variable in order of first mention. A RUNNING or FINAL prefix changes
+    nothing: ONE ROW PER MATCH evaluates at the final row, where RUNNING
+    == FINAL."""
+    import pyspark.sql.functions as F
+
+    # max_by over "is this the row with event id `anchor`": the one row of
+    # the match that has it wins
+    def at(anchor: str, val):
+        return F.max_by(val, F.col("__eid") == F.col(anchor))
+
+    exprs = [
+        at(f"{which.lower()}_event_id", F.col(f"__c_{col}")).alias(alias)
+        for which, col, alias in plain
+    ]
+    if cls_alias is not None:
+        exprs.append(at("last_event_id", F.col("__var")).alias(cls_alias))
+    mentioned = list(dict.fromkeys(var for _, var, *_ in aggs))
+    for fn, var, col, alias, off, _final in sorted(
+        aggs, key=lambda a: mentioned.index(a[1])
+    ):
+        cond, val = _in_var(var, subsets), F.col(f"__c_{col}")
+        if fn not in ("FIRST", "LAST"):
+            expr = _agg(fn, F.when(cond, val))
+        elif off:
+            # logical offset navigation (FIRST(A.c, n) = n rows after the
+            # variable's first; LAST(A.c, n) = n before its last; out of
+            # range → NULL): the variable's (position, value) pairs sorted
+            # into match order — state bounded by match length
+            lst = F.sort_array(
+                F.collect_list(
+                    F.when(cond, F.struct(F.col("__vpos").alias("p"), val.alias("v")))
+                )
+            )
+            idx = F.lit(off + 1) if fn == "FIRST" else F.size(lst) - F.lit(off)
+            expr = F.when(F.size(lst) > off, F.element_at(lst, idx)["v"])
+        else:
+            # the variable's boundary row in match order; rows of other
+            # variables have a NULL ordering, which min_by/max_by skip
+            by = F.min_by if fn == "FIRST" else F.max_by
+            expr = by(val, F.when(cond, F.col("__vpos")))
+        exprs.append(expr.alias(alias))
+    return exprs
 
 
 def match_recognize(df: DataFrame, sql: str) -> DataFrame:
@@ -763,19 +837,13 @@ def match_recognize(df: DataFrame, sql: str) -> DataFrame:
       partition (ordered by match start).
 
     Implementation: the NFA records each match's variable→event-ids
-    assignment (``vars_json``); per-variable measures posexplode the id
-    list and join back to the input on (partition, event_id) — both sides
-    key-partitioned, aggregate state bounded by match length. The NFA
-    itself stays measure-agnostic.
-
-    Cache contract: when the MEASURES reference per-variable aggregates,
-    the (match-count-sized) NFA output is persisted so each aggregate
-    join does not recompute the Python-NFA subtree; the cache lives until
-    the caller unpersists the result or runs
-    ``spark.catalog.clearCache()`` (the registry harness does between
-    queries)."""
+    assignment (``vars_json``). Measures that read rows read them once,
+    from :func:`_matched_rows` (one explode of the assignment, one join
+    back to the input on (partition, event_id)); ONE ROW PER MATCH folds
+    them with one ``groupBy`` per match, so the NFA output has exactly one
+    consumer and nothing is cached. The NFA itself stays
+    measure-agnostic."""
     import pyspark.sql.functions as F
-    from pyspark.sql import Window
 
     m = _MR.search(sql)
     part, order, pat, navs = _parse_mr(sql)
@@ -783,165 +851,41 @@ def match_recognize(df: DataFrame, sql: str) -> DataFrame:
     # columns exist, so PREV/NEXT still see every row of the partition
     nfa_in = _with_nav_columns(df, part, order, navs)
     all_rows = (m.group("rows") or "").upper().startswith("ALL")
-    aggs, plain, fn0 = _parse_measures(m.group("measures"), all_rows)
-    if all_rows:
-        return _match_recognize_all_rows(df, nfa_in, m, part, order, pat, aggs, fn0)
-    # per variable: (fn, col, alias, offset); RUNNING|FINAL both legal
-    # here: ONE ROW PER MATCH evaluates at the final row where RUNNING ==
-    # FINAL
-    var_aggs: dict[str, list[tuple[str, str, str, int]]] = {}
-    for fn, var, col, alias, off, _final in aggs:
-        var_aggs.setdefault(var, []).append((fn, col, alias, off))
-    cls_alias = fn0.get("CLASSIFIER")
-    mn_alias = fn0.get("MATCH_NUMBER")
-    mrt_alias = fn0.get("MATCH_ROWTIME")
-    mpt_alias = fn0.get("MATCH_PROCTIME")
-    need_vars = bool(var_aggs) or cls_alias is not None
-    out = cep_match_batch(
-        nfa_in, pat, key_col=part, time_col=order, include_vars=need_vars
-    )
-    if var_aggs:
-        # each per-variable aggregate joins `out` back against an
-        # aggregation DERIVED FROM `out` — without a cache boundary Spark
-        # recomputes the whole Python-NFA subtree once per reference
-        # (measured: 6.5 s vs 1.4 s single-pass at sf0.1). persist() (not
-        # localCheckpoint) computes the (small, match-count-sized) NFA
-        # output once while keeping the subtree visible to EXPLAIN/plan
-        # tests and reclaimable via spark.catalog.clearCache().
-        out = out.persist()
-    for which, col, alias in plain:
-        anchor = f"{which.lower()}_event_id"
-        side = df.select(
-            F.col(part).alias("__mk"),
-            F.col("event_id").alias("__mid"),
-            F.col(col).alias(alias),
-        )
-        out = out.join(
-            side,
-            (out[part] == side["__mk"]) & (out[anchor] == side["__mid"]),
-            "left",
-        ).drop("__mk", "__mid")
-    if need_vars:
-        out = out.withColumn(
-            "__vars", F.from_json("vars_json", "map<string,array<bigint>>")
-        )
-    if cls_alias is not None:
-        # the variable whose id list contains the match's last row
-        ent = F.filter(
-            F.map_entries(F.col("__vars")),
-            lambda e: F.array_contains(e["value"], F.col("last_event_id")),
-        )
-        out = out.withColumn(cls_alias, F.element_at(ent, 1)["key"])
     subsets = _parse_subsets(m.group("subset"))
-    for var, specs in var_aggs.items():
-        if var in subsets:
-            # union variable: concatenate the member id lists (order-
-            # insensitive aggregates only — FIRST/LAST positions are
-            # per-member and would be meaningless on the concat)
-            bad = [a for fn, _, a, _ in specs if fn in ("FIRST", "LAST")]
-            if bad:
-                raise ValueError(
-                    f"FIRST/LAST unsupported on SUBSET variable {var!r}: {bad}"
-                )
-            empty = F.array().cast("array<bigint>")
-            eids = F.flatten(
-                F.array(
-                    *[
-                        F.coalesce(
-                            F.element_at(F.col("__vars"), F.lit(mv)), empty
-                        )
-                        for mv in subsets[var]
-                    ]
-                )
-            )
-        else:
-            eids = F.coalesce(
-                F.element_at(F.col("__vars"), F.lit(var)),
-                F.lit(None).cast("array<bigint>"),
-            )
-        ex = out.select(
-            F.col(part).alias("__k"),
-            F.col("first_event_id").alias("__f"),
-            F.col("last_event_id").alias("__l"),
-            F.posexplode(eids).alias("__pos", "__eid"),
+    aggs, plain, fn0 = _parse_measures(m.group("measures"), all_rows, subsets)
+    cls_alias = fn0.get("CLASSIFIER")
+    reads_rows = all_rows or bool(aggs or plain) or cls_alias is not None
+    out = cep_match_batch(
+        nfa_in, pat, key_col=part, time_col=order, include_vars=reads_rows
+    )
+    if all_rows:
+        return _match_recognize_all_rows(df, out, part, order, aggs, fn0, subsets)
+    if reads_rows:
+        cols = sorted({c for _, c, _ in plain} | {c for _, _, c, *_ in aggs})
+        rows = _matched_rows(
+            df, out, part, [F.col(c).alias(f"__c_{c}") for c in cols]
         )
-        cols = sorted({c for _, c, _, _ in specs})
-        side = df.select(
-            F.col(part).alias("__k"),
-            F.col("event_id").alias("__eid"),
-            *[F.col(c).alias(f"__c_{c}") for c in cols],
+        out = (
+            rows.groupBy("__k", *[c for c in out.columns if c != part])
+            .agg(*_one_row_measures(aggs, plain, cls_alias, subsets))
+            .withColumnRenamed("__k", part)
         )
-        joined = ex.join(side, ["__k", "__eid"])
-        aggs = []
-        for fn, c, alias, off in specs:
-            col = F.col(f"__c_{c}")
-            if fn in ("FIRST", "LAST") and off:
-                # logical offset navigation (FIRST(A.c, n) = n rows after
-                # the variable's first; LAST(A.c, n) = n before its last;
-                # out of range → NULL): collect (pos, val), sort by match
-                # position, index — state bounded by match length
-                lst = F.sort_array(
-                    F.collect_list(
-                        F.struct(F.col("__pos").alias("p"), col.alias("v"))
-                    )
-                )
-                idx = (
-                    F.lit(off + 1)
-                    if fn == "FIRST"
-                    else F.size(lst) - F.lit(off)
-                )
-                expr = F.when(
-                    F.size(lst) > off, F.element_at(lst, idx)["v"]
-                )
-            else:
-                expr = {
-                    "SUM": F.sum(col),
-                    "COUNT": F.count(col),
-                    "AVG": F.avg(col),
-                    "MIN": F.min(col),
-                    "MAX": F.max(col),
-                    # boundary rows by position in MATCH order (posexplode),
-                    # not by raw event-id
-                    "FIRST": F.min_by(col, F.col("__pos")),
-                    "LAST": F.max_by(col, F.col("__pos")),
-                }[fn]
-            aggs.append(expr.alias(alias))
-        aggd = joined.groupBy("__k", "__f", "__l").agg(*aggs)
-        out = out.join(
-            aggd,
-            (out[part] == aggd["__k"])
-            & (out["first_event_id"] == aggd["__f"])
-            & (out["last_event_id"] == aggd["__l"]),
-            "left",
-        ).drop("__k", "__f", "__l")
-        for fn, _, alias, _ in specs:
-            if fn == "COUNT":
-                # SQL COUNT over an empty variable (e.g. A? unmatched) is
-                # 0, not NULL — the left join leaves NULL when no row of
-                # the match mapped to the variable
-                out = out.withColumn(
-                    alias, F.coalesce(F.col(alias), F.lit(0))
-                )
-    if mn_alias is not None:
-        # last_event_id tiebreak: overlapping matches can share a start
-        # (eager trailing loops, SKIP TO FIRST/LAST) — numbering must stay
-        # deterministic for the oracle hash
-        w = Window.partitionBy(part).orderBy(
-            "first_ts_us", "first_event_id", "last_ts_us", "last_event_id"
+    if "MATCH_NUMBER" in fn0:
+        out = out.withColumn(
+            fn0["MATCH_NUMBER"], F.row_number().over(_match_order(part))
         )
-        out = out.withColumn(mn_alias, F.row_number().over(w))
-    if mrt_alias is not None:
+    if "MATCH_ROWTIME" in fn0:
         # MATCH_ROWTIME(): the match's event-time attribute — its LAST
         # row's rowtime, in this surface's epoch-micros convention (same
         # unit as first_ts_us/last_ts_us), so a downstream window
         # aggregate can tumble over MATCH_RECOGNIZE output exactly as
         # Flink chains windows after MATCH_ROWTIME()
-        out = out.withColumn(mrt_alias, F.col("last_ts_us"))
-    if mpt_alias is not None:
+        out = out.withColumn(fn0["MATCH_ROWTIME"], F.col("last_ts_us"))
+    if "MATCH_PROCTIME" in fn0:
         # MATCH_PROCTIME(): processing-time marker — inherently
         # nondeterministic (wall clock), same contract as the engine's
         # PROCTIME() rewrite; excluded from value-hash oracles
-        out = out.withColumn(mpt_alias, F.current_timestamp())
+        out = out.withColumn(fn0["MATCH_PROCTIME"], F.current_timestamp())
     # vars_json also appears when DEFINE aggregates forced event retention
     # without any var-anchored measure — always scrub the internals
-    return out.drop("__vars", "vars_json")
+    return out.drop("vars_json")

@@ -26,23 +26,42 @@ from __future__ import annotations
 
 import re
 
+# The SQL front door's one INTERVAL unit table (window sizes here, DDL
+# WATERMARK delays, MATCH_RECOGNIZE WITHIN): Flink unit → (Spark duration
+# word, microseconds)
 _INTERVAL_UNITS = {
-    "SECOND": "seconds",
-    "MINUTE": "minutes",
-    "HOUR": "hours",
-    "DAY": "days",
+    "SECOND": ("seconds", 1_000_000),
+    "MINUTE": ("minutes", 60_000_000),
+    "HOUR": ("hours", 3_600_000_000),
+    "DAY": ("days", 86_400_000_000),
 }
 
 
+def interval_unit(unit: str) -> tuple[str, int]:
+    """A Flink INTERVAL unit, singular or plural in any case (``HOUR``,
+    ``hours``) → (Spark duration word, microseconds per unit). Any other
+    unit raises ValueError naming it and the accepted ones."""
+    key = unit.upper()
+    if key not in _INTERVAL_UNITS:
+        key = key.removesuffix("S")
+    if key not in _INTERVAL_UNITS:
+        raise ValueError(
+            f"unsupported INTERVAL unit {unit!r}; accepted: "
+            f"{', '.join(_INTERVAL_UNITS)} (singular or plural)"
+        )
+    return _INTERVAL_UNITS[key]
+
+
 def _interval_to_duration(txt: str) -> str:
-    """``INTERVAL '10' MINUTE`` → ``'10 minutes'`` (Spark window duration)."""
+    """``INTERVAL '10' MINUTE`` → ``'10 minutes'`` (Spark window duration);
+    text in any other form passes through stripped."""
     m = re.match(
-        r"(?is)\s*INTERVAL\s+'([\d.]+)'\s+(SECOND|MINUTE|HOUR|DAY)S?\s*",
+        rf"(?is)\s*INTERVAL\s+'([\d.]+)'\s+({'|'.join(_INTERVAL_UNITS)})S?\s*",
         txt,
     )
     if not m:
         return txt.strip()
-    return f"'{m.group(1)} {_INTERVAL_UNITS[m.group(2).upper()]}'"
+    return f"'{m.group(1)} {interval_unit(m.group(2))[0]}'"
 
 
 _TUMBLE = re.compile(r"(?is)\bTUMBLE\s*\(\s*([^,]+?)\s*,\s*(INTERVAL\s+'[^']+'\s+\w+)\s*\)")

@@ -38,15 +38,14 @@ driver except the metadata json and point-lookup bucket ids.
 from __future__ import annotations
 
 import json
-import zlib
 from dataclasses import asdict, dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-BUCKET_COL = "__bucket"
+from flink_1_12_2_spark.operators.changelog import BUCKET_COL, bucket_expr, bucket_of
+
 _METADATA = "_metadata.json"
-_KEY_SEP = "\x1f"
 
 #: State kinds (ExistingSavepoint read* families). UNION state reads the
 #: same stored rows as LIST state — the union/redistribute split only
@@ -121,28 +120,6 @@ def _read_text(spark: SparkSession, path: str) -> str:
     baos = jvm.java.io.ByteArrayOutputStream()
     jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 64 * 1024, True)
     return bytes(baos.toByteArray()).decode("utf-8")
-
-
-def bucket_of(key_values: tuple, num_buckets: int) -> int:
-    """Driver-side bucket id for one key tuple — matches the Spark-side
-    expression ``pmod(crc32(concat_ws(US, pks as string)), num_buckets)``
-    (zlib.crc32 and java.util.zip.CRC32 share the IEEE polynomial).
-    Parity holds when ``str(v)`` equals Spark's string cast — integer
-    and string keys; for other types read_keyed_state skips bucket
-    pruning rather than risk pruning the wrong directory."""
-    raw = _KEY_SEP.join(str(v) for v in key_values).encode("utf-8")
-    return zlib.crc32(raw) % num_buckets
-
-
-def _bucket_expr(primary_key: tuple[str, ...], num_buckets: int):
-    return F.pmod(
-        F.crc32(
-            F.concat_ws(
-                _KEY_SEP, *[F.col(k).cast("string") for k in primary_key]
-            )
-        ),
-        F.lit(num_buckets),
-    ).cast("int")
 
 
 class ExistingSavepoint:
@@ -360,7 +337,7 @@ class WritableSavepoint:
                     )
                 out = df.withColumn(
                     BUCKET_COL,
-                    _bucket_expr(spec.primary_key, spec.num_buckets),
+                    bucket_expr(spec.primary_key, spec.num_buckets),
                 )
                 (
                     out.repartition(

@@ -411,17 +411,33 @@ def test_match_recognize_quantified_pattern(spark, sf_dir):
 
 
 def test_match_recognize_times_and_optional_parse():
+    import pytest as _pytest
+
     from flink_1_12_2_spark.sql.match_recognize import parse_match_recognize
 
-    _, _, pat = parse_match_recognize(
-        """SELECT * FROM t MATCH_RECOGNIZE (
-             PARTITION BY u ORDER BY ts PATTERN (A{2,3} B? C)
-             DEFINE A AS t = 'a', B AS t = 'b', C AS t = 'c')"""
-    )
-    a, b, c = pat.steps
+    def parse(within: str = ""):
+        return parse_match_recognize(
+            f"""SELECT * FROM t MATCH_RECOGNIZE (
+                 PARTITION BY u ORDER BY ts PATTERN (A{{2,3}} B? C)
+                 {within}
+                 DEFINE A AS t = 'a', B AS t = 'b', C AS t = 'c')"""
+        )[2]
+
+    a, b, c = parse().steps
     assert (a.min_times, a.max_times, a.greedy) == (2, 3, True)
     assert (b.min_times, b.max_times) == (0, 1)
     assert (c.min_times, c.max_times) == (1, 1)
+    # WITHIN takes the INTERVAL units the SQL rewriter takes, singular or
+    # plural in any case; any other unit is a ValueError naming it
+    for within, us in [
+        ("WITHIN INTERVAL '6' HOUR", 6 * 3_600_000_000),
+        ("WITHIN INTERVAL '6' HOURS", 6 * 3_600_000_000),
+        ("WITHIN INTERVAL '90' seconds", 90_000_000),
+        ("WITHIN INTERVAL '2' Day", 2 * 86_400_000_000),
+    ]:
+        assert parse(within).within_us == us, within
+    with _pytest.raises(ValueError, match="'MILLISECOND'.*SECOND, MINUTE"):
+        parse("WITHIN INTERVAL '5' MILLISECOND")
 
 
 def test_match_recognize_trailing_quantifier_greedy_vs_reluctant():
@@ -1577,7 +1593,9 @@ def test_prev_rejected_on_stream_front_door():
 def test_last_offset_in_define_and_measures(spark):
     """FIRST/LAST(Var.col, n) logical offsets (MatchRecognizeITCase.scala:142
     — LAST(A.name, 2)): index into the variable's matched rows; offsets
-    past the start are NULL (→ predicate not-true in DEFINE)."""
+    past the start are NULL (→ predicate not-true in DEFINE). Then the
+    offset among the other ONE ROW measures, all folded from the same
+    matched rows."""
     from flink_1_12_2_spark.sql.match_recognize import match_recognize
 
     sql = """
@@ -1597,6 +1615,74 @@ def test_last_offset_in_define_and_measures(spark):
     ]
     # match 1: A=[8,6] (LAST(A,1)=8 < 9=B row); match 2: A=[5,3,2], B=7>3
     assert got == [(1, 3, 8.0, 6.0, 2), (4, 7, 3.0, 3.0, 3)]
+
+    # every ONE ROW measure kind in one statement: boundary accessors, an
+    # offset, a SUBSET aggregate, COUNT and SUM over an unmatched optional
+    # variable, CLASSIFIER and MATCH_NUMBER, on overlapping matches
+    import datetime as dt
+
+    base = dt.datetime(2024, 1, 1)
+    rows = [
+        (eid, u, base + dt.timedelta(minutes=eid), tag, v)
+        for eid, u, tag, v in [
+            (1, 1, "a", 1.0), (2, 1, "a", 2.0), (3, 1, "a", 4.0),
+            (4, 1, "c", 8.0),
+            (11, 2, "a", 10.0), (12, 2, "a", 20.0), (13, 2, "b", 40.0),
+            (14, 2, "c", 80.0),
+        ]
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, user_id long, ts timestamp, tag string, value double"
+    )
+    sql = """
+    SELECT * FROM t MATCH_RECOGNIZE (
+      PARTITION BY user_id ORDER BY ts
+      MEASURES FIRST(value) AS v_first, LAST(value) AS v_last,
+               LAST(A.value, 1) AS a_prev, SUM(U.value) AS u_sum,
+               COUNT(B.value) AS n_b, SUM(B.value) AS s_b,
+               CLASSIFIER() AS cls, MATCH_NUMBER() AS mn
+      AFTER MATCH SKIP TO NEXT ROW
+      PATTERN (A{2} B? C)
+      SUBSET U = (B, C)
+      DEFINE A AS tag = 'a', B AS tag = 'b', C AS tag = 'c'
+    )"""
+    got = [
+        (r.user_id, r.first_event_id, r.last_event_id, r.v_first, r.v_last,
+         r.a_prev, r.u_sum, r.n_b, r.s_b, r.cls, r.mn)
+        for r in match_recognize(df, sql)
+        .orderBy("user_id", "first_event_id")
+        .collect()
+    ]
+    assert got == [
+        # A=[1,2], B unmatched, C=[4]
+        (1, 1, 4, 1.0, 8.0, 1.0, 8.0, 0, None, "C", 1),
+        # overlaps the first match: A=[2,3], B unmatched, C=[4]
+        (1, 2, 4, 2.0, 8.0, 2.0, 8.0, 0, None, "C", 2),
+        # A=[11,12], B=[13], C=[14]
+        (2, 11, 14, 10.0, 80.0, 10.0, 120.0, 1, 40.0, "C", 1),
+    ]
+
+    # one row matching both alternatives: two matches over the same span,
+    # each measured over its own assignment only
+    sql = """
+    SELECT * FROM t MATCH_RECOGNIZE (
+      PARTITION BY user_id ORDER BY ts
+      MEASURES COUNT(A.value) AS n_a, SUM(B.value) AS s_b,
+               SUM(C.value) AS s_c
+      AFTER MATCH SKIP TO LAST A
+      PATTERN (A (B | C) D)
+      DEFINE A AS tag = 'a', B AS value > 0, C AS value < 10, D AS tag = 'd'
+    )"""
+    df = spark.createDataFrame(
+        [(eid, 1, base + dt.timedelta(minutes=eid), tag, v)
+         for eid, tag, v in [(1, "a", -1.0), (2, "x", 5.0), (3, "d", -1.0)]],
+        "event_id long, user_id long, ts timestamp, tag string, value double",
+    )
+    got = {
+        (r.first_event_id, r.last_event_id, r.n_a, r.s_b, r.s_c)
+        for r in match_recognize(df, sql).collect()
+    }
+    assert got == {(1, 3, 1, 5.0, None), (1, 3, 1, None, 5.0)}
 
 
 def test_last_is_null_define_atom(spark):

@@ -11,19 +11,32 @@ from flink_1_12_2_spark.table_api import Table
 
 
 def test_parse_create_table_with_watermark():
-    name, schema, meta, part, _comp = parse_create_table(
-        """CREATE TABLE ev (
-             event_id BIGINT, ts TIMESTAMP(3), user_id BIGINT, value DOUBLE,
-             WATERMARK FOR ts AS ts - INTERVAL '10' MINUTE
-           ) PARTITIONED BY (user_id)
-           WITH ('connector'='filesystem', 'path'='/x', 'format'='parquet')"""
-    )
+    def parse(interval: str):
+        return parse_create_table(
+            f"""CREATE TABLE ev (
+                 event_id BIGINT, ts TIMESTAMP(3), user_id BIGINT, value DOUBLE,
+                 WATERMARK FOR ts AS ts - INTERVAL {interval}
+               ) PARTITIONED BY (user_id)
+               WITH ('connector'='filesystem', 'path'='/x', 'format'='parquet')"""
+        )
+
+    name, schema, meta, part, _comp = parse("'10' MINUTE")
     assert name == "ev"
     assert meta.event_time_col == "ts"
     assert meta.watermark_delay == "10 minutes"
     assert meta.path == "/x" and meta.fmt == "parquet"
     assert part == ("user_id",)
     assert "ts timestamp_ntz" in schema  # Flink TIMESTAMP = no time zone
+    # the INTERVAL units the SQL rewriter takes, singular or plural in any
+    # case; any other unit is a ValueError naming it
+    for interval, delay in [
+        ("'5' SECONDS", "5 seconds"),
+        ("'2' hours", "2 hours"),
+        ("'1' Day", "1 days"),
+    ]:
+        assert parse(interval)[2].watermark_delay == delay, interval
+    with pytest.raises(ValueError, match="'MILLISECOND'.*SECOND, MINUTE"):
+        parse("'5' MILLISECOND")
 
 
 def test_parse_create_table_decimal_and_errors():

@@ -443,6 +443,10 @@ def test_match_recognize_pregate_below_nfa(spark, sf_dir):
         for ln in pushed
     ), pushed
     assert "REPARTITION_BY_NUM" in plan
+    # the measures read the NFA output once, through one explode-join:
+    # nothing cached, one NFA stage
+    assert "InMemoryTableScan" not in plan
+    assert len(re.findall(r"^\(\d+\) MapInPandas", plan, re.M)) == 1, plan
 
 
 def test_match_recognize_prev_nav_one_keyed_exchange(spark, sf_dir):
