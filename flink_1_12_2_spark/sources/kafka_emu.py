@@ -14,8 +14,18 @@ the source/sink format strings; every downstream operator (CDC decode,
 changelog normalize, upsert) is identical.
 
 Scale note: the file-stream source checkpoints consumed files exactly as the
-kafka source checkpoints offsets; at real scale the directory is an object
--store prefix and the listing cost is the analogue of partition discovery.
+kafka source checkpoints offsets. Where the kafka source reads offsets, this
+one lists files, in the driver, at two points: every trigger's
+``latestOffset`` lists the topic's batch directories, and ``getBatch``
+hands the new part files to a file index as root paths. Above 32 paths
+(or child directories) Spark's default would list them with a Spark job
+of one task per path, ~10 ms of wall time per path on ``local[N]``: 0.9 s
+of a 100-file catch-up batch, and 0.3-0.4 s per trigger once a topic holds
+40 batches. ``session.get_spark`` therefore raises
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` so both stay
+serial (~30 ms for 100 files); the driver's listing grows with the topic's
+batch count, and a cluster deployment over an object-store prefix can
+restore the parallel listing through ``get_spark(extra_conf=...)``.
 """
 
 from __future__ import annotations

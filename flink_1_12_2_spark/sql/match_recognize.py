@@ -643,16 +643,36 @@ def match_recognize_stream(
     through the keyed streaming NFA (StreamExecMatch.scala:68 — Flink's
     MATCH_RECOGNIZE is a streaming operator first). ``sdf`` is a streaming
     DataFrame with a watermark; returns the streaming matches frame
-    (append mode). MEASURES projections are not available on the stream
-    (they join back to the input — do that on the materialized output);
+    (append mode), keyed by the PARTITION BY column like the batch output.
+    MEASURES projections are not available on the stream (they join back
+    to the input — do that on the materialized output);
     ``buffer_to_watermark`` forwards Flink's out-of-order buffering."""
     from flink_1_12_2_spark.streaming.cep import cep_pattern_matches
 
     part, order, pat = parse_match_recognize(sql)
+    _check_partition_column(sdf, part)
     return cep_pattern_matches(
         sdf, pat, key_col=part, time_col=order,
         buffer_to_watermark=buffer_to_watermark,
+    ).withColumnRenamed("user_id", part)
+
+
+def _check_partition_column(df: DataFrame, part: str) -> None:
+    """Raise unless ``part`` is an integral column of ``df``. The CEP
+    operators emit the key as ``CEP_OUTPUT``'s bigint ``user_id``, which
+    both front doors rename to the PARTITION BY column."""
+    from pyspark.sql.types import IntegralType
+
+    field = next(
+        (f for f in df.schema.fields if f.name.lower() == part.lower()), None
     )
+    if field is None:
+        raise ValueError(f"PARTITION BY column {part!r} is not in the input")
+    if not isinstance(field.dataType, IntegralType):
+        raise ValueError(
+            f"PARTITION BY column {part!r} is {field.dataType.simpleString()};"
+            " MATCH_RECOGNIZE partitions by an integral column only"
+        )
 
 
 def _match_order(part: str):
@@ -819,9 +839,10 @@ def _one_row_measures(
 
 def match_recognize(df: DataFrame, sql: str) -> DataFrame:
     """Execute a restricted MATCH_RECOGNIZE statement against ``df`` (batch).
-    Returns (user_id, first_event_id, last_event_id, first_ts_us, last_ts_us)
-    per match plus MEASURES columns — one row per completed match (ONE ROW
-    PER MATCH → FINAL semantics). With ``ALL ROWS PER MATCH`` in the SQL,
+    Returns (<PARTITION BY column> as bigint, first_event_id,
+    last_event_id, first_ts_us, last_ts_us) per match plus MEASURES
+    columns — one row per completed match (ONE ROW PER MATCH → FINAL
+    semantics). With ``ALL ROWS PER MATCH`` in the SQL,
     emits one row per MATCHED INPUT ROW instead (RUNNING measures,
     per-row CLASSIFIER — see :func:`_match_recognize_all_rows`).
 
@@ -847,6 +868,7 @@ def match_recognize(df: DataFrame, sql: str) -> DataFrame:
 
     m = _MR.search(sql)
     part, order, pat, navs = _parse_mr(sql)
+    _check_partition_column(df, part)
     # the CEP pre-gate inside cep_match_batch runs AFTER the lag/lead
     # columns exist, so PREV/NEXT still see every row of the partition
     nfa_in = _with_nav_columns(df, part, order, navs)
@@ -857,7 +879,7 @@ def match_recognize(df: DataFrame, sql: str) -> DataFrame:
     reads_rows = all_rows or bool(aggs or plain) or cls_alias is not None
     out = cep_match_batch(
         nfa_in, pat, key_col=part, time_col=order, include_vars=reads_rows
-    )
+    ).withColumnRenamed("user_id", part)
     if all_rows:
         return _match_recognize_all_rows(df, out, part, order, aggs, fn0, subsets)
     if reads_rows:

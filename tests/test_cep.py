@@ -1492,6 +1492,68 @@ def test_all_rows_and_subset_reject_boundary_measures(spark):
         match_recognize(df, subset_sql).collect()
 
 
+def test_match_recognize_partition_by_names_the_key_column(spark):
+    """The output's key column is the PARTITION BY column: over a copy of
+    the ALL ROWS input with ``user_id`` renamed ``u``, row-reading
+    MEASURES and MATCH_NUMBER return the rows of PARTITION BY user_id,
+    and the stream is keyed by ``u`` too. A partition column the bigint
+    CEP key cannot hold raises a ValueError naming it."""
+    import datetime as dt
+
+    import pytest as _pytest
+    import pyspark.sql.functions as F
+
+    from flink_1_12_2_spark.sql.match_recognize import (
+        match_recognize,
+        match_recognize_stream,
+    )
+
+    base = dt.datetime(2024, 1, 1)
+    seq = [(0, "a", 1.0), (1, "b", 10.0), (2, "b", 20.0), (3, "x", 0.0),
+           (4, "a", 2.0), (5, "b", 5.0), (6, "b", 7.0)]
+    rows = [
+        (10 * user + i, user, base + dt.timedelta(minutes=i), t, v)
+        for user, n in ((1, 7), (2, 3))
+        for i, t, v in seq[:n]
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, user_id int, ts timestamp, event_type string, value double"
+    )
+    renamed = df.withColumnRenamed("user_id", "u")
+    sql = """
+    SELECT * FROM t MATCH_RECOGNIZE (
+      PARTITION BY {part} ORDER BY ts
+      MEASURES FIRST(A.value) AS fa, SUM(B.value) AS sb, CLASSIFIER() AS cls,
+               MATCH_NUMBER() AS mn
+      PATTERN (A B{{2}})
+      DEFINE A AS event_type = 'a', B AS event_type = 'b'
+    )"""
+    want = match_recognize(df, sql.format(part="user_id"))
+    got = match_recognize(renamed, sql.format(part="u"))
+    assert got.columns == ["u" if c == "user_id" else c for c in want.columns]
+    got = got.collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want.collect()))
+    assert sorted((r.u, r.fa, r.sb, r.cls, r.mn) for r in got) == [
+        (1, 1.0, 30.0, "B", 1), (1, 2.0, 12.0, "B", 2), (2, 1.0, 30.0, "B", 1)
+    ]
+
+    stream = (
+        spark.readStream.format("rate").load()
+        .select(
+            F.col("value").alias("event_id"), (F.col("value") % 2).alias("u"),
+            F.col("timestamp").alias("ts"), F.lit("a").alias("event_type"),
+        )
+        .withWatermark("ts", "1 second")
+    )
+    assert match_recognize_stream(
+        stream, sql.format(part="u")
+    ).columns[0] == "u"
+
+    keyed_by_string = renamed.withColumn("u", F.col("u").cast("string"))
+    with _pytest.raises(ValueError, match="PARTITION BY column 'u' is string"):
+        match_recognize(keyed_by_string, sql.format(part="u"))
+
+
 def _nav_df(spark):
     """Ticker-style fixture: one partition, strictly ordered prices."""
     import datetime as dt

@@ -137,3 +137,81 @@ def test_insert_writes_declared_types_to_file_sinks(eng, tmp_path):
     df = eng.sql("SELECT * FROM pqs")
     assert df.dtypes == [("k", "int"), ("v", "bigint")]
     assert [tuple(r) for r in df.collect()] == [(1, 2)]
+
+
+def _producer_batches(topic, n: int, files: int = 1) -> None:
+    """``n`` producer batches of ``files`` one-record part files each, in
+    ``publish``'s layout but without a Spark write per batch. Each batch
+    directory appears whole (renamed into the topic), as a producer's
+    commit does."""
+    import os
+    import uuid
+
+    os.makedirs(topic, exist_ok=True)
+    for _ in range(n):
+        name = f"batch_{uuid.uuid4().hex[:12]}"
+        staged = os.path.join(os.path.dirname(topic), "_staged_" + name)
+        os.makedirs(staged)
+        for f in range(files):
+            with open(os.path.join(staged, f"part-{f:05d}.txt"), "w") as fh:
+                fh.write('{"k": %d}\n' % f)
+        os.rename(staged, os.path.join(topic, name))
+
+
+def _group_jobs(spark, group: str) -> int:
+    """Jobs the status tracker holds for ``group``, once the listener bus
+    has delivered every event posted so far."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_topic_reads_list_files_without_a_spark_job(spark, tmp_path):
+    """File listing runs in the driver, never as a Spark job of one task
+    per path (Spark's default above 32 paths): a bounded read of a topic
+    of 40 producer batches launches the jobs a 2-batch read launches, and
+    every job of a stream's run is a micro-batch's write, both when one
+    micro-batch reads a producer batch of 40 part files and when triggers
+    run on a topic of more than 32 batch directories."""
+    from flink_1_12_2_spark.sources.kafka_emu import (
+        read_topic_batch,
+        read_topic_stream,
+    )
+
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (2, 40):
+        topic = str(tmp_path / f"bounded_{n}")
+        _producer_batches(topic, n)
+        group = f"bounded_read_{n}_{tmp_path.name}"
+        sc.setJobGroup(group, f"bounded read of {n} producer batches")
+        try:
+            rows = read_topic_batch(spark, topic, "json", "k BIGINT").collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(rows) == n
+        jobs[n] = _group_jobs(spark, group)
+    assert jobs[40] == jobs[2], jobs
+
+    topic = str(tmp_path / "streamed")
+    _producer_batches(topic, 1, files=40)
+    query = (
+        read_topic_stream(spark, topic, "json", "k BIGINT")
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        query.processAllAvailable()
+        # 33 batch directories, then 34: every trigger from here on lists
+        # more than 32 of them, while each micro-batch reads at most 32 files
+        _producer_batches(topic, 32)
+        query.processAllAvailable()
+        _producer_batches(topic, 1)
+        query.processAllAvailable()
+        progress = query.recentProgress
+    finally:
+        query.stop()
+    read = [p["numInputRows"] for p in progress if p["numInputRows"]]
+    assert sum(read) == 40 + 32 + 1
+    assert _group_jobs(spark, str(query.runId)) == len(read)
